@@ -97,7 +97,7 @@ object Demo {
 
     // runner with failure callback
     var alerted = ""
-    try Runner.run(Seq(Seq(Runner.Step("ok", () => ()))),
+    try Runner.run(Seq(Runner.Step("ok", () => ())),
       onFailure = (n, _) => alerted = n)
     catch { case _: Throwable => () }
     println(s"[demo] runner: ok (alerts='$alerted')")

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare and verify_manifest.json
+  * (gates attempted, gates that threw). Exits 1 if any gate threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir); an optional third arg filters
@@ -12,27 +12,19 @@ object Verify {
       case Array(s, o, f) => (s, o, f)
     }
     val nameFilters = nameFilter.split(',').filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Session.registerLateRules(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val attempted = SparkEntry.queries.toSeq
       .filter { case (name, _) =>
         nameFilters.isEmpty || nameFilters.exists(name.contains) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val threw = attempted.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -47,9 +39,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    // every gate attempted and every gate that threw, so a check can
+    // fail a gate with no output dir instead of silently skipping it
+    val manifest = s"""{"attempted": ${attempted.map(a => q(a._1)).mkString("[", ",", "]")}, """ +
+      s""""threw": ${obj(threw)}}"""
+    Files.writeString(Paths.get(s"$outDir/verify_manifest.json"), manifest)
     spark.stop()
+    if (threw.nonEmpty) {
+      System.err.println(s"[verify] ${threw.size} gate(s) threw: ${threw.map(_._1).mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -48,9 +48,9 @@ private[graft] object CoreGates {
 
     // Q4 [A1,D*,P6,W1] distinct + CASE-decode dim build (export_svg.py:275-293)
     "q04_dim_decode" -> ((s, d) =>
-      Dims.buildDim(t(s, d, "nation"), "n_regionkey", "region_name",
+      Dims.buildDims(t(s, d, "nation"), Seq(("n_regionkey", "region_name",
         Seq(0 -> "AFRICA", 1 -> "AMERICA", 2 -> "ASIA", 3 -> "EUROPE",
-            4 -> "MIDDLE EAST"))),
+            4 -> "MIDDLE EAST")))).head),
 
     // Q5 [J1,J2] equi joins through the star; dims broadcast
     "q05_join_star" -> ((s, d) => {

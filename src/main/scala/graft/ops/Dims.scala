@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Dimension-decode operator (SURVEY.md §2.5 D1–D15).
   *
@@ -11,14 +14,16 @@ import org.apache.spark.sql.functions._
   * (`SELECT DISTINCT(col), CASE ... END AS name FROM t WHERE col IS
   * NOT NULL ORDER BY col`, e.g. `export_svg.py:275-293`).
   *
-  * Scale notes: `distinct()` on a single low-cardinality column is a
-  * partial-aggregate shuffle of just that column (map-side combine
-  * collapses each partition to ≤|codes| rows before the exchange), so
-  * this holds at 100 TB. The decode itself is a literal `CASE WHEN`
-  * chain — constant-folded, whole-stage-codegen'd, no join, no
-  * broadcast needed.
+  * Scale notes: all dims of a fact come from ONE aggregate — one scan,
+  * a map-side partial `collect_set` per code column, one exchange. The
+  * driver then holds the distinct codes present, summed over the dims
+  * (a few hundred for the FJC archive, at any fact size); each dim is a
+  * local relation labelled by a literal `CASE WHEN` chain.
   */
 object Dims {
+
+  /** One dim: (code column, label column, code→label map). */
+  type Spec = (String, String, Seq[(Any, String)])
 
   /** Chained `when` with NO `otherwise`: unmatched keys fall through
     * to NULL, preserving the reference's CASE-without-ELSE semantics
@@ -30,13 +35,22 @@ object Dims {
     }
   }
 
-  /** Build one dimension table from a fact column. */
-  def buildDim(fact: DataFrame, codeCol: String, labelCol: String,
-               mapping: Seq[(Any, String)]): DataFrame =
-    fact
-      .select(col(codeCol))
-      .where(col(codeCol).isNotNull)
-      .distinct()
-      .withColumn(labelCol, decode(col(codeCol), mapping))
-      .orderBy(asc_nulls_first(codeCol))
+  /** One row: per code column, its ascending distinct non-null codes
+    * (`collect_set` skips NULLs: the reference's `WHERE col IS NOT NULL`). */
+  def codes(fact: DataFrame, codeCols: Seq[String]): DataFrame = {
+    val aggs = codeCols.map(c => array_sort(collect_set(col(c))).as(c))
+    fact.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Every dim of `fact` from one collected [[codes]] row, each a
+    * one-partition local relation in code order (one file per write). */
+  def buildDims(fact: DataFrame, specs: Seq[Spec]): Seq[DataFrame] = {
+    val row = codes(fact, specs.map(_._1)).head()
+    specs.zipWithIndex.map { case ((codeCol, labelCol, mapping), i) =>
+      fact.sparkSession.createDataFrame(row.getSeq[Any](i).map(Row(_)).asJava,
+          StructType(Seq(fact.schema(codeCol))))
+        .withColumn(labelCol, decode(col(codeCol), mapping))
+        .coalesce(1)
+    }
+  }
 }

@@ -16,9 +16,8 @@ import graft.ops.{Dims, Quality}
   * Where the reference submits sequential SQL strings to a warehouse,
   * here each zone is a DataFrame transform: Catalyst fuses the whole
   * quality projection into one whole-stage-codegen pass over the scan,
-  * and the 15 dim builds are independent jobs we run concurrently
-  * (the reference's single multi-statement script is needlessly
-  * sequential — noted in SURVEY.md §4).
+  * and the 15 dims come from ONE aggregate over the trusted zone
+  * ([[Dims.buildDims]]) where the reference runs 15 CTAS scans.
   */
 object FjcPipeline {
 
@@ -108,7 +107,7 @@ object FjcPipeline {
   /** The 15 dimension decode maps (SURVEY.md §2.5 D1–D15), keyed by
     * dim table name → (code column, label column, code→label map).
     * Unmatched codes decode to NULL (CASE-without-ELSE parity). */
-  val dims: Seq[(String, (String, String, Seq[(Any, String)]))] = Seq(
+  val dims: Seq[(String, Dims.Spec)] = Seq(
     // D1 `export_svg.py:275-293`
     "DimCircuit" -> (("CIRCUIT", "CIRCUIT_NAME", Seq[(Any, String)](
       0 -> "District of Columbia", 1 -> "First Circuit",
@@ -295,43 +294,36 @@ object FjcPipeline {
     "DimStatuscd" -> (("STATUSCD", "STATUSCD_NAME", Seq[(Any, String)](
       "S" -> "pending record", "L" -> "terminated record"))))
 
-  /** Build one dim table off the trusted zone. */
-  def buildDim(trustedDf: DataFrame, dimName: String): DataFrame = {
-    val (codeCol, labelCol, mapping) =
-      dims.find(_._1 == dimName)
-        .getOrElse(throw new NoSuchElementException(dimName))._2
-    Dims.buildDim(trustedDf, codeCol, labelCol, mapping)
-  }
-
   /** Run the full pipeline: raw TSV → quality → trusted → 15 dims,
     * each zone written as parquet under `warehouseDir` with overwrite
     * (≙ WRITE_TRUNCATE, `export_svg.py:200,248,263`).
     *
-    * Orchestrated through [[Runner]] — sequential zone stages, then
-    * the 15 dim builds as one concurrent stage with bounded
-    * parallelism (≙ the DAG chain `export_svg.py:703-716` with
-    * `concurrency=5` at `export_svg.py:74`; the reference runs its 15
-    * CTAS sequentially in one script — we parallelize). `onFailure`
-    * receives (step, error) like the Slack callback (`helper.py:7-37`,
-    * see [[graft.Alerts.format]]). */
+    * Orchestrated through [[Runner]] as one sequential step list
+    * (≙ the DAG chain `export_svg.py:703-716`): the three zones, then
+    * `dims_aggregate` (the one trusted-zone aggregate behind every
+    * dim), then one `dim_<Name>` write per dim, each a single file.
+    * `onFailure` receives (step, error) like the Slack callback
+    * (`helper.py:7-37`, see [[graft.Alerts.format]]). */
   def runAll(spark: SparkSession, rawPath: String, warehouseDir: String,
-             parallelism: Int = 5,
              onFailure: (String, Throwable) => Unit = (_, _) => ()): Unit = {
-    val zoneStages: Seq[Seq[Runner.Step]] = Seq(
-      Seq(Runner.Step("ingest_raw", () =>
+    var built: Seq[DataFrame] = Nil
+    val steps = Seq(
+      Runner.Step("ingest_raw", () =>
         sanitize(readRaw(spark, rawPath))
-          .write.mode("overwrite").parquet(s"$warehouseDir/raw"))),
-      Seq(Runner.Step("quality_zone", () =>
+          .write.mode("overwrite").parquet(s"$warehouseDir/raw")),
+      Runner.Step("quality_zone", () =>
         quality(spark.read.parquet(s"$warehouseDir/raw"))
-          .write.mode("overwrite").parquet(s"$warehouseDir/quality"))),
-      Seq(Runner.Step("trusted_zone", () =>
+          .write.mode("overwrite").parquet(s"$warehouseDir/quality")),
+      Runner.Step("trusted_zone", () =>
         trusted(spark.read.parquet(s"$warehouseDir/quality"))
-          .write.mode("overwrite").parquet(s"$warehouseDir/trusted"))),
-      dims.map { case (name, _) =>
-        Runner.Step(s"dim_$name", () =>
-          buildDim(spark.read.parquet(s"$warehouseDir/trusted"), name)
-            .write.mode("overwrite").parquet(s"$warehouseDir/dims/$name"))
-      })
-    Runner.run(zoneStages, parallelism, onFailure)
+          .write.mode("overwrite").parquet(s"$warehouseDir/trusted")),
+      Runner.Step("dims_aggregate", () =>
+        built = Dims.buildDims(spark.read.parquet(s"$warehouseDir/trusted"),
+          dims.map(_._2)))
+    ) ++ dims.map(_._1).zipWithIndex.map { case (name, i) =>
+      Runner.Step(s"dim_$name", () =>
+        built(i).write.mode("overwrite").parquet(s"$warehouseDir/dims/$name"))
+    }
+    Runner.run(steps, onFailure)
   }
 }

@@ -1,18 +1,14 @@
 package graft.pipeline
 
-import java.util.concurrent.ForkJoinPool
-import scala.collection.parallel.CollectionConverters._
-import scala.collection.parallel.ForkJoinTaskSupport
-import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
-/** Dependency-ordered step runner (SURVEY.md §3.1; ≙ the reference's
-  * Airflow DAG with `concurrency=5` and a Slack `on_failure_callback`,
+/** Sequential step runner (SURVEY.md §3.1; ≙ the reference's Airflow
+  * DAG chain with a Slack `on_failure_callback`,
   * `export_svg.py:71-77,703-716`, `helper.py:7-37`).
   *
-  * Steps are grouped into sequential stages; steps inside a stage run
-  * concurrently with bounded parallelism. A failure invokes the
+  * Steps run one after another in list order. A failure invokes the
   * callback with (step name, error) — the Slack-alert analogue — and
-  * aborts subsequent stages (matching Airflow's downstream-skip).
+  * aborts every later step (matching Airflow's downstream-skip).
   */
 object Runner {
 
@@ -21,21 +17,16 @@ object Runner {
   final class StepFailed(val step: String, cause: Throwable)
     extends RuntimeException(s"step '$step' failed: ${cause.getMessage}", cause)
 
-  /** @param stages   sequential groups; each group's steps run in parallel
-    * @param parallelism max concurrent steps within a stage (ref: 5)
-    * @param onFailure  failure callback (≙ helper.slack_alert) */
-  def run(stages: Seq[Seq[Step]], parallelism: Int = 5,
-          onFailure: (String, Throwable) => Unit = (_, _) => ()): Unit = {
-    stages.foreach { stage =>
-      val par = stage.par
-      par.tasksupport = new ForkJoinTaskSupport(new ForkJoinPool(parallelism))
-      val results = par.map(s => s.name -> Try(s.run())).toList
-      results.collectFirst { case (name, Failure(e)) => (name, e) } match {
-        case Some((name, e)) =>
-          onFailure(name, e)
-          throw new StepFailed(name, e)
-        case None => ()
+  /** @param steps     run in order
+    * @param onFailure failure callback (≙ helper.slack_alert) */
+  def run(steps: Seq[Step],
+          onFailure: (String, Throwable) => Unit = (_, _) => ()): Unit =
+    steps.foreach { s =>
+      try s.run()
+      catch {
+        case NonFatal(e) =>
+          onFailure(s.name, e)
+          throw new StepFailed(s.name, e)
       }
     }
-  }
 }

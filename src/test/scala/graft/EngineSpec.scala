@@ -148,7 +148,7 @@ class EngineSpec extends AnyFunSuite {
       val boom = graft.pipeline.Runner.Step("quality_zone",
         () => throw new RuntimeException("bad zone"))
       intercept[graft.pipeline.Runner.StepFailed] {
-        graft.pipeline.Runner.run(Seq(Seq(boom)), onFailure = cb)
+        graft.pipeline.Runner.run(Seq(boom), onFailure = cb)
       }
       val body = received.poll(5, java.util.concurrent.TimeUnit.SECONDS)
       assert(body != null, "webhook never received the alert")

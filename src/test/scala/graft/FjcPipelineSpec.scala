@@ -1,9 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.functions.{asc_nulls_first, col}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.FjcPipeline
+import graft.ops.Dims
+import graft.pipeline.{FjcPipeline, Runner}
 
 /** Golden end-to-end test of the medallion pipeline (SURVEY.md §5.2)
   * over the checked-in TSV fixture with planted sentinels, letter
@@ -59,9 +61,12 @@ class FjcPipelineSpec extends AnyFunSuite {
     assert(r.getAs[String]("PLT") == "BAD NAME")
   }
 
+  private lazy val builtDims =
+    FjcPipeline.dims.map(_._1).zip(
+      Dims.buildDims(FjcPipeline.trusted(qualityDf), FjcPipeline.dims.map(_._2))).toMap
+
   test("dims: decode + unmatched key → NULL; distinct sorted codes") {
-    val trusted = FjcPipeline.trusted(qualityDf)
-    val disp = FjcPipeline.buildDim(trusted, "DimDisp").collect()
+    val disp = builtDims("DimDisp").collect()
     // codes present: 0, 13, 99 (1 appears via base fill on junk rows)
     val byCode = disp.map(r => (r.get(0), r.get(1))).toMap
     assert(byCode(13L) == "settled")
@@ -72,11 +77,19 @@ class FjcPipelineSpec extends AnyFunSuite {
       disp.map(_.getAs[Long](0)).toSeq.sorted)
   }
 
-  test("dims: all 15 build and have the declared label column") {
+  test("dims: one-aggregate build equals the per-dim DISTINCT formulation for all 15") {
+    // reference: the per-dim CTAS of `export_svg.py:270-701`, one scan per dim
+    // (`SELECT DISTINCT col, CASE ... FROM t WHERE col IS NOT NULL ORDER BY col`)
     val trusted = FjcPipeline.trusted(qualityDf)
-    FjcPipeline.dims.foreach { case (name, (codeCol, labelCol, _)) =>
-      val d = FjcPipeline.buildDim(trusted, name)
-      assert(d.columns.toSeq == Seq(codeCol, labelCol), name)
+    FjcPipeline.dims.foreach { case (name, (codeCol, labelCol, mapping)) =>
+      val want = trusted.select(col(codeCol)).where(col(codeCol).isNotNull).distinct()
+        .withColumn(labelCol, Dims.decode(col(codeCol), mapping))
+        .orderBy(asc_nulls_first(codeCol))
+      val got = builtDims(name)
+      assert(got.schema == want.schema, name)
+      assert(got.columns.toSeq == Seq(codeCol, labelCol), name)
+      assert(got.collect().toSeq == want.collect().toSeq, name)
+      assert(got.rdd.getNumPartitions == 1, name)
     }
   }
 
@@ -104,10 +117,32 @@ class FjcPipelineSpec extends AnyFunSuite {
 
   test("runAll writes raw/quality/trusted/15 dims as parquet") {
     val out = Files.createTempDirectory("fjc_wh").toString
-    FjcPipeline.runAll(spark, fixturePath, out, parallelism = 5)
+    FjcPipeline.runAll(spark, fixturePath, out)
     assert(spark.read.parquet(s"$out/quality").count() == 4)
     assert(spark.read.parquet(s"$out/trusted").columns.length == 34)
     assert(new java.io.File(s"$out/dims").list().length == 15)
     assert(spark.read.parquet(s"$out/dims/DimCircuit").count() > 0)
+    FjcPipeline.dims.foreach { case (name, _) =>
+      val files = new java.io.File(s"$out/dims/$name").list().filter(_.endsWith(".parquet"))
+      assert(files.length == 1, name)
+    }
+  }
+
+  test("runAll: a failed dim write alerts with its step name and aborts the rest") {
+    FaultInjectingFileSystem.register(spark)
+    val out = "faulty://" + Files.createTempDirectory("fjc_wh_fail").toString
+    var alerted = Seq.empty[String]
+    FaultInjectingFileSystem.failRenameWhen = (_, dst) => dst.toString.contains("/dims/DimNos/")
+    try {
+      val e = intercept[Runner.StepFailed] {
+        FjcPipeline.runAll(spark, fixturePath, out, onFailure = (name, _) => alerted :+= name)
+      }
+      assert(e.step == "dim_DimNos")
+    } finally FaultInjectingFileSystem.reset()
+    assert(alerted == Seq("dim_DimNos"))
+    // dims before DimNos were written, none after it
+    val written = new java.io.File(out.stripPrefix("faulty://") + "/dims").list().toSet
+    assert(Set("DimCircuit", "DimJuris").subsetOf(written))
+    assert(!written.contains("DimResidenc") && !written.contains("DimStatuscd"))
   }
 }

@@ -52,22 +52,21 @@ class MiscSpec extends AnyFunSuite {
       .collect().toSet == reqs.collect().toSet)
   }
 
-  test("Runner: stages sequential, failure fires callback and aborts") {
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    var failed: Option[String] = None
+  test("Runner: steps run in order; a failure fires the callback once and aborts") {
+    val order = scala.collection.mutable.ArrayBuffer.empty[String]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val boom = new RuntimeException("boom")
-    intercept[Runner.StepFailed] {
+    val e = intercept[Runner.StepFailed] {
       Runner.run(
-        Seq(
-          Seq(Runner.Step("a1", () => order.add("a1")),
-              Runner.Step("a2", () => order.add("a2"))),
-          Seq(Runner.Step("b1", () => throw boom)),
-          Seq(Runner.Step("c1", () => order.add("c1")))),
-        parallelism = 2,
-        onFailure = (name, _) => failed = Some(name))
+        Seq(Runner.Step("a1", () => order += "a1"),
+            Runner.Step("a2", () => order += "a2"),
+            Runner.Step("b1", () => throw boom),
+            Runner.Step("c1", () => order += "c1")),
+        onFailure = (name, _) => failed += name)
     }
-    assert(order.toArray.toSet == Set("a1", "a2")) // c1 never ran
-    assert(failed.contains("b1"))
+    assert(order.toSeq == Seq("a1", "a2")) // c1 never ran
+    assert(failed.toSeq == Seq("b1"))
+    assert(e.step == "b1" && (e.getCause eq boom))
   }
 
   test("Multimodal: decodeFeatures reads stub headers; frame sampling fans out") {

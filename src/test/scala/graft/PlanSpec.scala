@@ -616,6 +616,20 @@ class PlanSpec extends AnyFunSuite {
       s"blocking must make this an equi join:\n$plan")
   }
 
+  test("dims: all 15 code sets from ONE trusted-zone scan, partial collect_set before one exchange") {
+    import graft.pipeline.FjcPipeline
+    val trustedDir = java.nio.file.Files.createTempDirectory("plan_trusted").toString
+    FjcPipeline.quality(FjcPipeline.readRaw(spark, getClass.getResource("/fjc_sample.tsv").getPath))
+      .write.mode("overwrite").parquet(trustedDir)
+    val plan = executedPlan(graft.ops.Dims.codes(spark.read.parquet(trustedDir),
+      FjcPipeline.dims.map(_._2._1)))
+    assert("FileScan parquet".r.findAllIn(plan).length == 1, s"one scan expected:\n$plan")
+    assert("Exchange".r.findAllIn(plan).length == 1, s"one exchange expected:\n$plan")
+    // map-side partials sit below (print after) the exchange
+    assert(plan.indexOf("partial_collect_set") > plan.indexOf("Exchange SinglePartition"),
+      s"collect_set must be partial before the exchange:\n$plan")
+  }
+
   test("expectations: all row rules in ONE aggregate over one scan; annotate map-only") {
     import graft.operators.Expectations._
     val li = Tables.load(spark, sfDir, "lineitem")

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Local self-check mirroring the driver's correctness gate:
-runs Verify output parquet against DuckDB oracle_sql.json.
+runs Verify output parquet against DuckDB oracle_sql.json, and fails
+every gate verify_manifest.json lists as thrown or without output.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -13,10 +14,18 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+manifest = json.load(open(f"{out}/verify_manifest.json"))
 fails, passes, skips = [], [], []
+# a gate Verify attempted but that threw, or left no output dir, fails
+# here: it must never drop out of the compare silently
+for name in manifest["attempted"]:
+    if name in manifest["threw"]:
+        fails.append((name, f"threw: {manifest['threw'][name]}"))
+    elif not os.path.isdir(os.path.join(out, name)):
+        fails.append((name, "no output dir"))
 for name in sorted(os.listdir(out)):
     pdir = os.path.join(out, name)
-    if not os.path.isdir(pdir):
+    if not os.path.isdir(pdir) or name in manifest["threw"]:
         continue
     got = con.execute(f"SELECT * FROM read_parquet('{pdir}/*.parquet')").fetchdf()
     if name not in oracle:
