@@ -159,8 +159,7 @@ object Dedup {
     val sig = if (cached) sig0
       else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cand = bandCandidates(sig, bands, rowsPerBand)
-      cand
+      bandCandidates(Seq(sig), bands, rowsPerBand)
         .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
         .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
@@ -181,26 +180,23 @@ object Dedup {
         xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
-  /** Bipartite LSH band join between two signature tables (the
-    * batch × corpus candidate stage of [[dedupIncremental]]): ids-only
-    * pairs from any shared (band, bucket) key — no id_a < id_b filter,
-    * the sides are distinct tables. Package-private so PlanSpec can
-    * pin its equi-join shape. */
-  private[graft] def crossBandCandidates(sigA: DataFrame, sigB: DataFrame,
-                                         bands: Int, rowsPerBand: Int): DataFrame =
-    bandedView(sigA, bands, rowsPerBand).as("l")
-      .join(bandedView(sigB, bands, rowsPerBand).as("r"), Seq("band", "bucket"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-  /** LSH band join over a (id, sig) signature table: ids-only candidate
-    * pairs from any shared (band, bucket) key. */
-  private def bandCandidates(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val banded = bandedView(sig, bands, rowsPerBand)
-    banded.as("l").join(banded.as("r"), Seq("band", "bucket"))
-      .where(col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
+  /** LSH band join of the first (id, sig) table against the union of
+    * all of `sigs`, each tagged with its position as `side`: ids-only
+    * (id_a, id_b, side) candidate pairs from any shared (band, bucket)
+    * key, all from ONE equi-join. id_a is always a side-0 id. Side-0
+    * pairs are a self-join and keep id_a < id_b; every other side is a
+    * distinct table, so all its shared keys count. Package-private so
+    * PlanSpec can pin its equi-join shape. */
+  private[graft] def bandCandidates(sigs: Seq[DataFrame], bands: Int,
+                                    rowsPerBand: Int): DataFrame = {
+    val views = sigs.map(bandedView(_, bands, rowsPerBand))
+    val tagged = views.zipWithIndex
+      .map { case (v, i) => v.withColumn("side", lit(i)) }
+      .reduce(_ union _)
+    views.head.as("l").join(tagged.as("r"), Seq("band", "bucket"))
+      .where(col("r.side") =!= 0 || col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"), col("r.side").as("side"))
+      .dropDuplicates("id_a", "id_b", "side")
   }
 
   /** Ids-only MinHash-LSH candidate pairs (the band join before any
@@ -212,7 +208,7 @@ object Dedup {
                     shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
                     cacheKey: Option[String] = None): DataFrame = {
     val sig = signatureTable(df, bands * rowsPerBand, shingleSize, idCol, textCol, cacheKey)
-    bandCandidates(sig, bands, rowsPerBand)
+    bandCandidates(Seq(sig), bands, rowsPerBand).drop("side")
   }
 
   /** Near-dup pairs with EXACT shingle-set Jaccard verification:
@@ -233,7 +229,7 @@ object Dedup {
     try {
       val sig = base.select(col("id"),
         minhashSignature(col("sh"), bands * rowsPerBand).as("sig"))
-      bandCandidates(sig, bands, rowsPerBand)
+      bandCandidates(Seq(sig), bands, rowsPerBand)
         .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
         .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"), Text.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
@@ -283,22 +279,11 @@ object Dedup {
     val sig0 = signatureTable(df, numHashes, shingleSize, idCol, textCol, cacheKey)
     val sig = if (cached) sig0
       else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hybridVerify(bandCandidates(sig, bands, rowsPerBand), sig, sig, df, df,
-      threshold, margin, numHashes, shingleSize, idCol, textCol)
+    try hybridVerify(bandCandidates(Seq(sig), bands, rowsPerBand), Seq(sig -> df),
+      threshold, margin, numHashes, shingleSize, idCol, textCol).drop("side")
     finally { if (!cached) sig.unpersist(); () }
   }
 
-  /** Hybrid verification of candidate (id_a, id_b) pairs — the verify
-    * core of [[lshHybridPairs]], generalized to a bipartite pair set:
-    * `sigA`/`srcA` back the id_a side, `sigB`/`srcB` the id_b side.
-    * The MinHash Jaccard estimator (read from the staged signatures)
-    * resolves clear-margin candidates; only the near-threshold sliver
-    * gets the exact shingle-set re-join against the source frame(s).
-    * When both sides are the SAME frame (self-join dedup) the
-    * near-threshold re-shingle scans the corpus once, not twice.
-    * Divergence bound vs all-exact: see [[lshHybridPairs]]. The
-    * result is eagerly materialized (localCheckpoint), so callers may
-    * unpersist the signature tables as soon as this returns. */
   /** Near-threshold re-shingle fetches at most this many doc ids via
     * an inlined IN-list (parquet row-group pruning on the id column —
     * the id-fetch shape of a production document store); above the cap
@@ -307,12 +292,24 @@ object Dedup {
     * picks the fetch mechanism, never the semantics. */
   private val NearFetchPushdownCap = 1000
 
-  private[graft] def hybridVerify(cand: DataFrame, sigA: DataFrame, sigB: DataFrame,
-                           srcA: DataFrame, srcB: DataFrame,
-                           threshold: Double, margin: Double,
-                           numHashes: Int, shingleSize: Int,
-                           idCol: String, textCol: String,
-                           eager: Boolean = true): DataFrame = {
+  /** Hybrid verification of side-tagged candidate (id_a, id_b, side)
+    * pairs — the verify core of [[lshHybridPairs]] and
+    * [[dedupIncremental]]. `sides(i)` is the (signature table, source
+    * frame) pair behind side i: id_a is always a side-0 id, id_b an id
+    * of side `side` (the [[bandCandidates]] layout), so the right side
+    * is keyed by (id, side) and equal ids on different sides never
+    * mix. The MinHash Jaccard estimator (read from the staged
+    * signatures) resolves clear-margin candidates; only the
+    * near-threshold sliver gets the exact shingle-set re-join, whose
+    * texts are fetched once per side from that side's source.
+    * Divergence bound vs all-exact: see [[lshHybridPairs]]. The
+    * result (id_a, id_b, side) is eagerly materialized
+    * (localCheckpoint), so callers may unpersist the signature tables
+    * and sources as soon as this returns. */
+  private[graft] def hybridVerify(cand: DataFrame, sides: Seq[(DataFrame, DataFrame)],
+                                  threshold: Double, margin: Double,
+                                  numHashes: Int, shingleSize: Int,
+                                  idCol: String, textCol: String): DataFrame = {
     // `same_fp` = identical raw text (64-bit fingerprint equality) —
     // Jaccard is exactly 1 for those pairs, so they fast-accept at
     // any threshold without touching the shingle re-join. Replica-
@@ -320,12 +317,15 @@ object Dedup {
     // by this pair class, and at high thresholds (threshold + margin
     // > 1, where no estimator fast-accept exists) it is the ONLY
     // fast path.
+    val sigB = sides.zipWithIndex.map { case ((sig, _), i) =>
+      sig.select(col("id").as("id_b"), lit(i).as("side"), col("sig").as("sig_b"),
+        col("fp").as("fp_b"))
+    }.reduce(_ union _)
     val scored = cand
-      .join(sigA.select(col("id").as("id_a"), col("sig").as("sig_a"),
+      .join(sides.head._1.select(col("id").as("id_a"), col("sig").as("sig_a"),
         col("fp").as("fp_a")), Seq("id_a"))
-      .join(sigB.select(col("id").as("id_b"), col("sig").as("sig_b"),
-        col("fp").as("fp_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
+      .join(sigB, Seq("id_b", "side"))
+      .select(col("id_a"), col("id_b"), col("side"),
         (graft.expressions.NativeSignatures.sigAgree(col("sig_a"), col("sig_b"))
           .cast("double") / numHashes)
           .as("est"),
@@ -335,51 +335,45 @@ object Dedup {
       .localCheckpoint()
     val clear = scored
       .where(col("same_fp") || col("est") >= threshold + margin)
-      .select(col("id_a"), col("id_b"))
+      .select(col("id_a"), col("id_b"), col("side"))
     val near = scored
       .where(!col("same_fp") &&
         col("est") >= threshold - margin && col("est") < threshold + margin)
-    // driver-side branch on checkpointed metadata: when no candidate
-    // lands near the threshold (the common case — near-dups are
-    // either clearly dup or clearly not), the corpus is never
-    // re-shingled at all
-    if (near.isEmpty) clear
+    // prune FIRST, shingle after: the near (id, side) keys (bounded by
+    // the candidate count) come back in ONE bounded collect. Empty —
+    // the common case, near-dups are either clearly dup or clearly
+    // not — means nothing is re-shingled at all. Under the cap they
+    // are inlined as one IN-list per side, so the parquet scan prunes
+    // row groups on the id column's min/max stats instead of reading
+    // the whole text column — the id-fetch a production doc store
+    // would serve. Above the cap, the broadcast semi-join does the
+    // same pruning post-scan.
+    val nearIds = near.select(col("id_a").as("id"), lit(0).as("side"))
+      .union(near.select(col("id_b").as("id"), col("side")))
+    val inline = nearIds.limit(NearFetchPushdownCap + 1).collect()
+    if (inline.isEmpty) clear
     else {
-      // prune FIRST, shingle after: the near ids (bounded by the
-      // candidate count) are inlined as an IN-list under the cap, so
-      // the parquet scan prunes row groups on the id column's min/max
-      // stats instead of reading the whole text column — the id-fetch
-      // a production doc store would serve. Above the cap, the
-      // broadcast semi-join does the same pruning post-scan.
-      def shingled(src: DataFrame, ids: DataFrame): DataFrame = {
-        val inline = ids.limit(NearFetchPushdownCap + 1).collect().map(_.get(0))
+      val shingled = sides.zipWithIndex.flatMap { case ((_, src), i) =>
         val pruned =
-          if (inline.length <= NearFetchPushdownCap)
-            src.where(col(idCol).isin(inline.toSeq: _*))
-          else src.join(broadcast(ids), src(idCol) === ids("id"), "left_semi")
-        pruned
-          .where(length(col(textCol)) >= shingleSize)
-          .select(col(idCol).as("id"), Text.charShingles(col(textCol), shingleSize).as("sh"))
-          .localCheckpoint()
-      }
-      val (shA, shB) =
-        if (srcA eq srcB) {
-          val both = shingled(srcA, near.select(col("id_a").as("id"))
-            .union(near.select(col("id_b").as("id"))).distinct())
-          (both, both)
-        } else
-          (shingled(srcA, near.select(col("id_a").as("id")).distinct()),
-            shingled(srcB, near.select(col("id_b").as("id")).distinct()))
+          if (inline.length > NearFetchPushdownCap) {
+            val ids = nearIds.where(col("side") === i).distinct()
+            Some(src.join(broadcast(ids), src(idCol) === ids("id"), "left_semi"))
+          } else {
+            val ids = inline.filter(_.getInt(1) == i).map(_.get(0)).distinct
+            Option.when(ids.nonEmpty)(src.where(col(idCol).isin(ids.toSeq: _*)))
+          }
+        pruned.map(_.where(length(col(textCol)) >= shingleSize)
+          .select(col(idCol).as("id"), lit(i).as("side"),
+            Text.charShingles(col(textCol), shingleSize).as("sh")))
+      }.reduce(_ union _).localCheckpoint()
       val verified = near
-        .join(shA.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(shB.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+        .join(shingled.where(col("side") === 0)
+          .select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+        .join(shingled.select(col("id").as("id_b"), col("side"), col("sh").as("sh_b")),
+          Seq("id_b", "side"))
         .where(Text.jaccard(col("sh_a"), col("sh_b")) >= threshold)
-        .select(col("id_a"), col("id_b"))
-      val out = clear.union(verified)
-      // every input the union references is already materialized
-      // (scored/shA/shB checkpoints), so a caller that immediately
-      // re-materializes (distinct + checkpoint) can skip this one
-      if (eager) out.localCheckpoint() else out
+        .select(col("id_a"), col("id_b"), col("side"))
+      clear.union(verified).localCheckpoint()
     }
   }
 
@@ -721,16 +715,24 @@ object Dedup {
     * cluster whose representative was itself a corpus-dup does not
     * silently lose its remaining members.
     *
-    * Scale shape: the corpus is touched ONLY through its signature
-    * table (id + k longs, ~100× smaller than the corpus text) — with
-    * `corpusCacheKey` that artifact is staged once per session, and
-    * at warehouse scale it is the signature table you'd maintain as a
-    * persistent side output of admission (append each batch's
-    * admitted signatures). Candidate generation on both paths is an
-    * equi-join on (band, bucket); per-batch work scales with
-    * |batch| · collision rate, never with |corpus|. Corpus text is
-    * re-read only for the near-threshold sliver of cross candidates
-    * (broadcast-semi-pruned id fetch). */
+    * Scale shape: ONE candidate pipeline. The batch-rep band view is
+    * equi-joined on (band, bucket) against the union of the batch and
+    * corpus band views, each row tagged with its side, so the same
+    * join yields cross (batch × corpus) and intra (batch × batch, id_a
+    * < id_b) candidates; one [[hybridVerify]] keyed by (id, side)
+    * checks both; cross pairs name the corpus dups, and intra pairs
+    * that touch none of them go to one components pass. Verifying
+    * intra pairs of corpus dups and dropping them afterwards gives the
+    * same pair set as verifying survivors only, since each pair's
+    * verdict is independent of the others. The corpus is touched
+    * ONLY through its signature table (id + k longs, ~100× smaller
+    * than the corpus text) — with `corpusCacheKey` that artifact is
+    * staged once per session, and at warehouse scale it is the
+    * signature table you'd maintain as a persistent side output of
+    * admission (append each batch's admitted signatures). Per-batch
+    * work scales with |batch| · collision rate, never with |corpus|.
+    * Corpus text is re-read only for the near-threshold sliver of
+    * cross candidates (pruned id fetch). */
   def dedupIncremental(batch: DataFrame, corpus: DataFrame, threshold: Double,
                        idCol: String = "doc_id", textCol: String = "text",
                        shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
@@ -756,8 +758,13 @@ object Dedup {
     // lazy for the same reason as dedupNearDups' groups: two ids-only
     // re-aggregations beat one eager checkpoint job
     val fpGroups = idFp.groupBy(col("_fp")).agg(min(col("_id")).as("_rep"))
+    // staged: the batch signatures and the near-threshold text fetch
+    // both read the reps, and each read would otherwise re-run the
+    // batch scan, the fingerprint aggregate and the semi-join
     val batchReps = batch
       .join(fpGroups.select(col("_rep").as(idCol)), Seq(idCol), "left_semi")
+      .select(col(idCol), col(textCol))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val exactLosers = idFp.join(fpGroups, Seq("_fp"))
       .where(col("_id") =!= col("_rep"))
       .select(col("_id").as(idCol))
@@ -765,52 +772,22 @@ object Dedup {
     val corpusCached = corpusCacheKey.isDefined
     val cSig0 = signatureTable(corpus, numHashes, shingleSize, idCol, textCol, corpusCacheKey)
     val cSig = if (corpusCached) cSig0 else cSig0.persist(StorageLevel.MEMORY_AND_DISK)
-    // the batch signature table feeds the cross band join, both sides
-    // of the intra-batch band join, and both verify stages
-    val bSig = signatureTable(batchReps, numHashes, shingleSize, idCol, textCol, None)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      bSig.count() // materialize once before concurrent readers
-      // The cross (batch×corpus) and intra (batch×batch) verify
-      // pipelines are INDEPENDENT: intra pairs are verified over the
-      // whole batch, and pairs touching a corpus-dup are dropped
-      // relationally afterwards — the surviving pair set is identical
-      // to verifying only corpus-survivors (per-pair verification
-      // doesn't depend on other pairs), and the handful of extra
-      // verified pairs is bounded by the batch's own candidate count.
-      // Removing that sequential dependency lets both pipelines'
-      // jobs overlap in the scheduler (same bounded-pool pattern as
-      // Catalog.compactPartitioned).
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val corpusDupsF = Future {
-          hybridVerify(crossBandCandidates(bSig, cSig, bands, rowsPerBand),
-            bSig, cSig, batchReps, corpus,
-            threshold, margin, numHashes, shingleSize, idCol, textCol,
-            eager = false)
-            .select(col("id_a").as("id")).distinct()
-            .localCheckpoint() // read 3×: intra filter, final anti-join
-        }
-        val intraAllF = Future {
-          hybridVerify(bandCandidates(bSig, bands, rowsPerBand),
-            bSig, bSig, batchReps, batchReps,
-            threshold, margin, numHashes, shingleSize, idCol, textCol)
-        }
-        val corpusDups = Await.result(corpusDupsF,
-          scala.concurrent.duration.Duration.Inf)
-        val intraPairs = Await.result(intraAllF,
-          scala.concurrent.duration.Duration.Inf)
-          .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
-          .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-        val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
-          .where(col("component") < col("id")).select(col("id"))
-        val dropIds = corpusDups.union(nonCanonical).select(col("id").as(idCol))
-          .union(exactLosers)
-        batch.join(dropIds, Seq(idCol), "left_anti")
-      } finally { pool.shutdown(); () }
-    } finally { bSig.unpersist(); if (!corpusCached) cSig.unpersist(); () }
+      val bSig = signatureTable(batchReps, numHashes, shingleSize, idCol, textCol, None)
+      // side 0 = batch reps, side 1 = corpus
+      val pairs = hybridVerify(bandCandidates(Seq(bSig, cSig), bands, rowsPerBand),
+        Seq(bSig -> batchReps, cSig -> corpus),
+        threshold, margin, numHashes, shingleSize, idCol, textCol)
+      val corpusDups = pairs.where(col("side") === 1).select(col("id_a").as("id"))
+      val intraPairs = pairs.where(col("side") === 0)
+        .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
+        .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
+      val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
+        .where(col("component") < col("id")).select(col("id"))
+      val dropIds = corpusDups.union(nonCanonical).select(col("id").as(idCol))
+        .union(exactLosers)
+      batch.join(dropIds, Seq(idCol), "left_anti")
+    } finally { batchReps.unpersist(); if (!corpusCached) cSig.unpersist(); () }
   }
 
   /** Exact n-gram Jaccard over a bounded pair set (for oracle-sized

@@ -7,10 +7,11 @@ import graft.expressions.NativeSignatures
 import graft.operators.Dedup
 
 /** STREAMING near-duplicate detection against a static corpus — the
-  * ingest-time version of [[Dedup.dedupIncremental]]'s batch×corpus
-  * stage: documents arriving on a stream are checked for near-dups
-  * in an existing corpus (contamination/boilerplate admission
-  * control) without any stream-side state store.
+  * ingest-time version of the corpus side of
+  * [[Dedup.dedupIncremental]]'s tagged band join: documents arriving
+  * on a stream are checked for near-dups in an existing corpus
+  * (contamination/boilerplate admission control) without any
+  * stream-side state store.
   *
   * Shape: the stream side computes its fused MinHash signature in a
   * map-only native pass, explodes to LSH band keys, and equi-joins

@@ -161,6 +161,43 @@ class DedupSimSpec extends AnyFunSuite {
     assert(kept == Seq(201L, 203L))
   }
 
+  test("dedupIncremental: a batch id equal to a corpus id stays on its own side") {
+    val loremC = "columnar storage formats compress repeated values well and let " +
+      "query engines skip row groups whose statistics rule out the predicate"
+    val loremC2 = loremC.replace("compress", "encode")
+    val loremD = "observability dashboards aggregate latency percentiles " +
+      "error rates and saturation metrics across distributed services for the oncall engineer"
+    val loremD2 = loremD.replace("oncall", "platform")
+    val corpus = Seq((5L, loremA), (8L, loremC)).toDF("doc_id", "text")
+    val batch = Seq(
+      (3L, loremD2), // intra-batch near-dup of batch 5 → canonical, admitted
+      (5L, loremD),  // novel vs the corpus (corpus 5 is A) → clusters under 3
+      (6L, loremA2), // near-dup of corpus 5 (not of batch 5) → dropped
+      (8L, loremC2)  // near-dup of corpus 8, same id → dropped
+    ).toDF("doc_id", "text")
+    // keyed on id alone, (6, corpus 5) or (3, batch 5) would be checked
+    // against the other side's text, and (8, corpus 8) would never pair
+    val kept = Dedup.dedupIncremental(batch, corpus, threshold = 0.5)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == Seq(3L))
+  }
+
+  test("dedupIncremental: a cluster whose min id is a corpus dup admits its next member") {
+    // 25-word sliding windows: one step apart is above 0.85, two steps
+    // apart below it, so corpus 100 ~ batch 1 ~ batch 2 ~ batch 3 is a
+    // chain and only batch 1 is a corpus dup
+    val words = (0 until 30).map(i => s"w$i")
+    def window(i: Int) = words.slice(i, i + 25).mkString(" ")
+    val corpus = Seq((100L, window(0))).toDF("doc_id", "text")
+    val batch = Seq((1L, window(1)), (2L, window(2)), (3L, window(3)))
+      .toDF("doc_id", "text")
+    // survivors-then-cluster: {2, 3} cluster under 2; clustering the
+    // whole batch first would put 2 under the dropped 1 and admit none
+    val kept = Dedup.dedupIncremental(batch, corpus, threshold = 0.85)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == Seq(2L))
+  }
+
   test("dedupIncremental with an empty corpus equals dedupNearDups") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val inc = Dedup.dedupIncremental(docs, empty, threshold = 0.5)

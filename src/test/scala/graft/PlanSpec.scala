@@ -183,17 +183,24 @@ class PlanSpec extends AnyFunSuite {
     // sf0.001 has 50 docs — corpus 30 / batch 20; shape, not volume.
     // Assert the candidate stage itself: dedupIncremental materializes
     // it eagerly inside hybridVerify, so the final frame's plan would
-    // not show the band join.
+    // not show the band join. Cross (side 1) and intra (side 0)
+    // candidates must both come out of ONE (band, bucket) equi-join.
     val docs = Tables.load(spark, sfDir, "documents")
     val bSig = graft.operators.Dedup.signatureTable(
       docs.where($"doc_id" >= 30), numHashes = 128, shingleSize = 5)
     val cSig = graft.operators.Dedup.signatureTable(
       docs.where($"doc_id" < 30), numHashes = 128, shingleSize = 5)
-    val cand = graft.operators.Dedup.crossBandCandidates(bSig, cSig, 16, 8)
-    val plan = executedPlan(cand)
+    val cand = graft.operators.Dedup.bandCandidates(Seq(bSig, cSig), 16, 8)
+    val plan = executedPlan(cand).split("== Initial Plan ==").head
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"cross candidates must stay equi-join shaped:\n$plan")
-    assert(plan.contains("band") && plan.contains("bucket"))
+      s"candidates must stay equi-join shaped:\n$plan")
+    val joins = "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \\[".r
+      .findAllIn(plan).length
+    assert(joins == 1, s"expected one band join, found $joins:\n$plan")
+    assert("Join \\[band#\\d+L?, bucket#\\d+L?\\]".r.findFirstIn(plan).isDefined,
+      s"band join not keyed on (band, bucket):\n$plan")
+    val sides = cand.select("side").distinct().as[Int].collect().toSet
+    assert(sides == Set(0, 1), s"candidate sides $sides")
   }
 
   test("semantic dedup pairs: equi-join on the cell id, never a cartesian") {
