@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.functions.Text
 
@@ -340,28 +341,28 @@ object Dedup {
       .where(!col("same_fp") &&
         col("est") >= threshold - margin && col("est") < threshold + margin)
     // prune FIRST, shingle after: the near (id, side) keys (bounded by
-    // the candidate count) come back in ONE bounded collect. Empty —
-    // the common case, near-dups are either clearly dup or clearly
-    // not — means nothing is re-shingled at all. Under the cap they
-    // are inlined as one IN-list per side, so the parquet scan prunes
-    // row groups on the id column's min/max stats instead of reading
-    // the whole text column — the id-fetch a production doc store
-    // would serve. Above the cap, the broadcast semi-join does the
-    // same pruning post-scan.
+    // the candidate count) come back in ONE bounded one-job collect
+    // over the checkpointed scores. Empty — the common case, near-dups
+    // are either clearly dup or clearly not — means nothing is
+    // re-shingled at all. Under the cap they are inlined as one
+    // IN-list per side, so the parquet scan prunes row groups on the
+    // id column's min/max stats instead of reading the whole text
+    // column — the id-fetch a production doc store would serve. Above
+    // the cap, the broadcast semi-join does the same pruning post-scan.
     val nearIds = near.select(col("id_a").as("id"), lit(0).as("side"))
       .union(near.select(col("id_b").as("id"), col("side")))
-    val inline = nearIds.limit(NearFetchPushdownCap + 1).collect()
-    if (inline.isEmpty) clear
+    val inline = collectAtMost(nearIds, NearFetchPushdownCap, oneTask = true)
+    if (inline.exists(_.isEmpty)) clear
     else {
       val shingled = sides.zipWithIndex.flatMap { case ((_, src), i) =>
-        val pruned =
-          if (inline.length > NearFetchPushdownCap) {
+        val pruned = inline match {
+          case None =>
             val ids = nearIds.where(col("side") === i).distinct()
             Some(src.join(broadcast(ids), src(idCol) === ids("id"), "left_semi"))
-          } else {
-            val ids = inline.filter(_.getInt(1) == i).map(_.get(0)).distinct
+          case Some(rows) =>
+            val ids = rows.filter(_.getInt(1) == i).map(_.get(0)).distinct
             Option.when(ids.nonEmpty)(src.where(col(idCol).isin(ids.toSeq: _*)))
-          }
+        }
         pruned.map(_.where(length(col(textCol)) >= shingleSize)
           .select(col(idCol).as("id"), lit(i).as("side"),
             Text.charShingles(col(textCol), shingleSize).as("sh")))
@@ -490,59 +491,79 @@ object Dedup {
     * of shuffling. */
   def connectedComponentsAdaptive(pairs: DataFrame,
                                   driverCap: Int = 100000): DataFrame = {
-    val capped = pairs.select(col("id_a"), col("id_b")).limit(driverCap + 1).collect()
-    if (capped.length > driverCap) connectedComponentsStar(pairs)
-    else {
-      val spark = pairs.sparkSession
-      val idType = pairs.schema("id_a").dataType
-      // the interpreted ordering compares Catalyst-internal values
-      // (e.g. UTF8String), but collect() hands back external ones
-      // (java.lang.String) — convert at the comparison boundary.
-      // Memoized per distinct id: compare runs once per union, and
-      // re-converting the same root each time would allocate a fresh
-      // UTF8String per comparison. (External compareTo is NOT a
-      // substitute: String orders by UTF-16 code unit, UTF8String by
-      // UTF-8 byte — they disagree above the BMP, and the min-id
-      // labels must match the distributed path's `min()` exactly.)
-      val ordInternal = org.apache.spark.sql.catalyst.util.TypeUtils
-        .getInterpretedOrdering(idType)
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(idType)
-      val catalystOf = new java.util.HashMap[Any, Any]()
-      def conv(x: Any): Any = {
-        var c = catalystOf.get(x)
-        if (c == null) { c = toCatalyst(x); catalystOf.put(x, c) }
-        c
-      }
-      val ord = new Ordering[Any] {
-        def compare(a: Any, b: Any): Int =
-          ordInternal.compare(conv(a), conv(b))
-      }
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      capped.foreach { p =>
-        val (a, b) = (p.get(0), p.get(1))
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      val rows = parent.keySet().asScala.toSeq
-        .map(id => org.apache.spark.sql.Row(id, find(id)))
-      spark.createDataFrame(rows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", idType),
-          org.apache.spark.sql.types.StructField("component", idType))))
+    // no one-task read here: `pairs` is lazy for most callers, and
+    // coalescing would squeeze its upstream stage into one task
+    collectAtMost(pairs.select(col("id_a"), col("id_b")), driverCap, oneTask = false) match {
+      case None => connectedComponentsStar(pairs)
+      case Some(capped) =>
+        val idType = pairs.schema("id_a").dataType
+        val roots = unionFind(capped.iterator.map(p => (p.get(0), p.get(1))), idType)
+        import scala.jdk.CollectionConverters._
+        pairs.sparkSession.createDataFrame(
+          roots.toSeq.map { case (id, c) => Row(id, c) }.asJava,
+          StructType(Seq(StructField("id", idType), StructField("component", idType))))
     }
+  }
+
+  /** At most `cap` rows of `df` from one bounded collect, or None when
+    * it holds more. `oneTask` reads every partition in ONE task under
+    * the limit (coalesce(1)): a plain `limit(n).collect()` goes through
+    * `executeTake`'s scale-up, which runs a second job whenever the
+    * first partition holds fewer than n rows. Only for frames that are
+    * already materialized (checkpointed): over a lazy input the
+    * coalesce would squeeze the upstream stage into one task. */
+  private[graft] def collectAtMost(df: DataFrame, cap: Int,
+                                   oneTask: Boolean): Option[Array[Row]] = {
+    val rows = (if (oneTask) df.coalesce(1) else df).limit(cap + 1).collect()
+    Option.when(rows.length <= cap)(rows)
+  }
+
+  /** Driver union-find over collected (a, b) edges of `idType` ids:
+    * every id that appears maps to the min id of its component, in
+    * Spark's own ordering of `idType` (the distributed paths' `min()`). */
+  private def unionFind(edges: Iterator[(Any, Any)],
+                        idType: DataType): Map[Any, Any] = {
+    // the interpreted ordering compares Catalyst-internal values
+    // (e.g. UTF8String), but collect() hands back external ones
+    // (java.lang.String) — convert at the comparison boundary.
+    // Memoized per distinct id: compare runs once per union, and
+    // re-converting the same root each time would allocate a fresh
+    // UTF8String per comparison. (External compareTo is NOT a
+    // substitute: String orders by UTF-16 code unit, UTF8String by
+    // UTF-8 byte — they disagree above the BMP, and the min-id
+    // labels must match the distributed path's `min()` exactly.)
+    val ordInternal = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(idType)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(idType)
+    val catalystOf = new java.util.HashMap[Any, Any]()
+    def conv(x: Any): Any = {
+      var c = catalystOf.get(x)
+      if (c == null) { c = toCatalyst(x); catalystOf.put(x, c) }
+      c
+    }
+    val ord = new Ordering[Any] {
+      def compare(a: Any, b: Any): Int =
+        ordInternal.compare(conv(a), conv(b))
+    }
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    parent.keySet().asScala.toSeq.map(id => id -> find(id)).toMap
   }
 
   /** Connected components by alternating large-star / small-star
@@ -713,26 +734,37 @@ object Dedup {
     * pairs and keep the min-id representative per cluster.
     * Clustering runs over corpus-survivors, not the whole batch, so a
     * cluster whose representative was itself a corpus-dup does not
-    * silently lose its remaining members.
+    * silently lose its remaining members. Batch ids are keys: with a
+    * duplicate id the exact-copy representatives below (picked by a
+    * filter on the group min, not by a semi-join on the id) and the
+    * final anti-join by id need not agree on which rows drop.
     *
-    * Scale shape: ONE candidate pipeline. The batch-rep band view is
-    * equi-joined on (band, bucket) against the union of the batch and
-    * corpus band views, each row tagged with its side, so the same
-    * join yields cross (batch × corpus) and intra (batch × batch, id_a
-    * < id_b) candidates; one [[hybridVerify]] keyed by (id, side)
-    * checks both; cross pairs name the corpus dups, and intra pairs
-    * that touch none of them go to one components pass. Verifying
-    * intra pairs of corpus dups and dropping them afterwards gives the
-    * same pair set as verifying survivors only, since each pair's
-    * verdict is independent of the others. The corpus is touched
-    * ONLY through its signature table (id + k longs, ~100× smaller
-    * than the corpus text) — with `corpusCacheKey` that artifact is
-    * staged once per session, and at warehouse scale it is the
-    * signature table you'd maintain as a persistent side output of
-    * admission (append each batch's admitted signatures). Per-batch
-    * work scales with |batch| · collision rate, never with |corpus|.
-    * Corpus text is re-read only for the near-threshold sliver of
-    * cross candidates (pruned id fetch). */
+    * Scale shape: ONE window over the batch rows (one exchange keyed
+    * on the raw-text fingerprint, bounded by the increment) finds the
+    * exact-copy groups. ONE candidate pipeline follows: the batch-rep
+    * band view is equi-joined on (band, bucket) against the union of
+    * the batch and corpus band views, each row tagged with its side,
+    * so the same join yields cross (batch × corpus) and intra (batch
+    * × batch, id_a < id_b) candidates; one [[hybridVerify]] keyed by
+    * (id, side) checks both; cross pairs name the corpus dups, and
+    * intra pairs that touch none of them go to one components pass.
+    * Verifying intra pairs of corpus dups and dropping them afterwards
+    * gives the same pair set as verifying survivors only, since each
+    * pair's verdict is independent of the others. Up to `ccDriverCap`
+    * verified pairs (bounded by the candidate count) come back in one
+    * collect and the drop set is built on the driver, so the final
+    * anti-join broadcasts a local relation bounded by the same cap;
+    * above it the drop set stays distributed (shuffled anti-joins,
+    * [[connectedComponentsAdaptive]]). The cap picks the mechanism,
+    * never the result. The corpus is touched ONLY through its
+    * signature table (id + k longs, ~100× smaller than the corpus
+    * text) — with `corpusCacheKey` that artifact is staged once per
+    * session, and at warehouse scale it is the signature table you'd
+    * maintain as a persistent side output of admission (append each
+    * batch's admitted signatures). Per-batch work scales with |batch|
+    * · collision rate, never with |corpus|. Corpus text never rides
+    * an exchange, and is re-read only for the near-threshold sliver
+    * of cross candidates (pruned id fetch). */
   def dedupIncremental(batch: DataFrame, corpus: DataFrame, threshold: Double,
                        idCol: String = "doc_id", textCol: String = "text",
                        shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
@@ -752,22 +784,21 @@ object Dedup {
     // and dropping every non-representative is OUTPUT-IDENTICAL.
     // Sub-shingle-length texts bypass on both sides (no signature ⇒
     // never pair ⇒ always admitted, pre and post).
-    val idFp = batch
-      .where(length(col(textCol)) >= shingleSize)
-      .select(col(idCol).as("_id"), xxhash64(col(textCol)).as("_fp"))
-    // lazy for the same reason as dedupNearDups' groups: two ids-only
-    // re-aggregations beat one eager checkpoint job
-    val fpGroups = idFp.groupBy(col("_fp")).agg(min(col("_id")).as("_rep"))
-    // staged: the batch signatures and the near-threshold text fetch
+    // `_rep` is the group min id, null for a null or sub-shingle text.
+    // Staged: the batch signatures and the near-threshold text fetch
     // both read the reps, and each read would otherwise re-run the
-    // batch scan, the fingerprint aggregate and the semi-join
-    val batchReps = batch
-      .join(fpGroups.select(col("_rep").as(idCol)), Seq(idCol), "left_semi")
-      .select(col(idCol), col(textCol))
+    // window.
+    val tagged = batch
+      .select(col(idCol), col(textCol),
+        when(length(col(textCol)) >= shingleSize,
+          min(col(idCol)).over(Window.partitionBy(xxhash64(col(textCol)))))
+          .as("_rep"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val exactLosers = idFp.join(fpGroups, Seq("_fp"))
-      .where(col("_id") =!= col("_rep"))
-      .select(col("_id").as(idCol))
+    val batchReps = tagged.where(col(idCol) === col("_rep"))
+      .select(col(idCol), col(textCol))
+    // null-safe: a null id or a null `_rep` is no loser (admitted)
+    val exactLosers = tagged.where(coalesce(col(idCol) =!= col("_rep"), lit(false)))
+      .select(col(idCol))
     val numHashes = bands * rowsPerBand
     val corpusCached = corpusCacheKey.isDefined
     val cSig0 = signatureTable(corpus, numHashes, shingleSize, idCol, textCol, corpusCacheKey)
@@ -778,16 +809,36 @@ object Dedup {
       val pairs = hybridVerify(bandCandidates(Seq(bSig, cSig), bands, rowsPerBand),
         Seq(bSig -> batchReps, cSig -> corpus),
         threshold, margin, numHashes, shingleSize, idCol, textCol)
-      val corpusDups = pairs.where(col("side") === 1).select(col("id_a").as("id"))
-      val intraPairs = pairs.where(col("side") === 0)
-        .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
-        .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-      val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
-        .where(col("component") < col("id")).select(col("id"))
-      val dropIds = corpusDups.union(nonCanonical).select(col("id").as(idCol))
-        .union(exactLosers)
-      batch.join(dropIds, Seq(idCol), "left_anti")
-    } finally { batchReps.unpersist(); if (!corpusCached) cSig.unpersist(); () }
+      // the near-dup drop set: the corpus dups, plus every survivor
+      // that is not the min id of its intra-batch cluster. Built on the
+      // driver when the verified pairs fit under the cap
+      val idType = pairs.schema("id_a").dataType
+      // side-0 id_b are batch ids: cast back from the band union's
+      // widened type so the driver union-finds see one id type
+      val verified = pairs.select(col("id_a"),
+        when(col("side") === 0, col("id_b")).cast(idType).as("id_b"), col("side"))
+      val nearDrop = collectAtMost(verified, ccDriverCap, oneTask = true) match {
+        case Some(rows) =>
+          val corpusDups = rows.iterator.filter(_.getInt(2) == 1).map(_.get(0)).toSet
+          val intra = rows.iterator
+            .filter(r => r.getInt(2) == 0 && !corpusDups(r.get(0)) && !corpusDups(r.get(1)))
+            .map(r => (r.get(0), r.get(1)))
+          val nonCanonical = unionFind(intra, idType).collect { case (id, c) if id != c => id }
+          import scala.jdk.CollectionConverters._
+          pairs.sparkSession.createDataFrame(
+            (corpusDups ++ nonCanonical).toSeq.map(Row(_)).asJava,
+            StructType(Seq(StructField(idCol, idType))))
+        case None =>
+          val corpusDups = verified.where(col("side") === 1).select(col("id_a").as("id"))
+          val intraPairs = verified.where(col("side") === 0)
+            .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
+            .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
+          val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
+            .where(col("component") < col("id")).select(col("id"))
+          corpusDups.union(nonCanonical).select(col("id").as(idCol))
+      }
+      batch.join(nearDrop.union(exactLosers), Seq(idCol), "left_anti")
+    } finally { tagged.unpersist(); if (!corpusCached) cSig.unpersist(); () }
   }
 
   /** Exact n-gram Jaccard over a bounded pair set (for oracle-sized

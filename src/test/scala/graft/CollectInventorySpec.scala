@@ -57,7 +57,7 @@ class CollectInventorySpec extends AnyFunSuite {
       "catalog/Catalog.scala" -> 2,
       "operators/EntityResolution.scala" -> 1,
       "operators/Boilerplate.scala" -> 1,
-      "operators/Dedup.scala" -> 2,
+      "operators/Dedup.scala" -> 1,
       "operators/Sketches.scala" -> 2,
       "operators/Outliers.scala" -> 1,
       "operators/Intervals.scala" -> 1,

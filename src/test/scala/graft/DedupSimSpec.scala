@@ -15,6 +15,10 @@ class DedupSimSpec extends AnyFunSuite {
   private val loremA2 = loremA.replace("slowly", "quickly") // near-dup of A
   private val loremB = "functional programming with immutable data structures " +
     "enables safe parallel computation across many machines in a cluster"
+  private val loremC = "columnar storage formats compress repeated values well and let " +
+    "query engines skip row groups whose statistics rule out the predicate"
+  private val loremD = "observability dashboards aggregate latency percentiles " +
+    "error rates and saturation metrics across distributed services for the oncall engineer"
 
   private lazy val docs = Seq(
     (0L, loremA), (1L, loremA2), (2L, loremB), (3L, loremA))
@@ -146,8 +150,6 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("dedupIncremental: corpus dups dropped, survivors clustered, short docs admitted") {
-    val loremD = "observability dashboards aggregate latency percentiles " +
-      "error rates and saturation metrics across distributed services for the oncall engineer"
     val loremD2 = loremD.replace("oncall", "platform") // near-dup of D
     val corpus = Seq((100L, loremA), (101L, loremB)).toDF("doc_id", "text")
     val batch = Seq(
@@ -162,11 +164,7 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("dedupIncremental: a batch id equal to a corpus id stays on its own side") {
-    val loremC = "columnar storage formats compress repeated values well and let " +
-      "query engines skip row groups whose statistics rule out the predicate"
     val loremC2 = loremC.replace("compress", "encode")
-    val loremD = "observability dashboards aggregate latency percentiles " +
-      "error rates and saturation metrics across distributed services for the oncall engineer"
     val loremD2 = loremD.replace("oncall", "platform")
     val corpus = Seq((5L, loremA), (8L, loremC)).toDF("doc_id", "text")
     val batch = Seq(
@@ -196,6 +194,99 @@ class DedupSimSpec extends AnyFunSuite {
     val kept = Dedup.dedupIncremental(batch, corpus, threshold = 0.85)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(2L))
+  }
+
+  // exact copies in every role the batch-side pre-collapse must handle
+  private lazy val replicaCorpus = Seq((100L, loremA), (101L, loremB)).toDF("doc_id", "text")
+  private lazy val replicaBatch = Seq[(Option[Long], String)](
+    (Some(10L), loremD), (Some(12L), loremD), (Some(15L), loremD), // novel: 10 admitted
+    (Some(20L), loremA2), (Some(21L), loremA2), // rep 20 is a corpus near-dup: both drop
+    (Some(30L), loremC), // clusters over 31 at 0.5
+    (Some(31L), loremC.replace("compress", "encode")), // group {31, 35}: min id under 30
+    (Some(35L), loremC.replace("compress", "encode")),
+    (Some(40L), null), // no text: admitted
+    (Some(41L), "tiny"), (Some(42L), "tiny"), // sub-shingle copies: both admitted
+    (None, loremD) // no id: never a loser, admitted
+  ).toDF("doc_id", "text")
+
+  private def admittedIds(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+    df.select("doc_id").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq.sorted
+
+  test("dedupIncremental: exact copies in the batch, driver and distributed drop sets agree") {
+    val want = Seq(None, Some(10L), Some(30L), Some(40L), Some(41L), Some(42L))
+    val viaDriver = admittedIds(
+      Dedup.dedupIncremental(replicaBatch, replicaCorpus, threshold = 0.5))
+    assert(viaDriver == want)
+    // cap 0: the verified pairs exceed it, so the drop set is built by
+    // the distributed anti-joins and components instead
+    val distributed = admittedIds(
+      Dedup.dedupIncremental(replicaBatch, replicaCorpus, threshold = 0.5, ccDriverCap = 0))
+    assert(distributed == viaDriver)
+  }
+
+  test("dedupIncremental: int batch ids against long corpus ids") {
+    // the band union widens the batch ids of intra pairs to the corpus
+    // id type; the drop set must still use the batch's own id type
+    val batch = Seq((1, loremD), (2, loremD.replace("oncall", "platform")), (3, loremA2))
+      .toDF("doc_id", "text")
+    // caps: driver drop set; distributed anti-joins with driver
+    // components (2 verified pairs, 1 intra); distributed throughout
+    Seq(100000, 1, 0).foreach { cap =>
+      val kept = Dedup.dedupIncremental(batch, replicaCorpus, threshold = 0.5, ccDriverCap = cap)
+      assert(kept.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(kept.select("doc_id").as[Int].collect().toSeq == Seq(1), s"cap $cap")
+    }
+  }
+
+  /** Spark jobs started by `body` on this thread, from a listener. A
+    * sentinel job run afterwards marks the point where every earlier
+    * job-start event has been delivered (the bus keeps their order). */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-count-${System.nanoTime()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => seen.incrementAndGet(); ()
+          case g if g == group + "-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      body
+      sc.setJobGroup(group + "-end", "job count sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      seen.get
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("dedupIncremental admits a batch in a bounded number of Spark jobs") {
+    val jobs = jobsOf {
+      Dedup.dedupIncremental(replicaBatch, replicaCorpus, threshold = 0.5)
+        .select("doc_id").collect()
+      ()
+    }
+    // 15 on this fixture; 25 with the exact-copy groups aggregated
+    // twice and the drop set built by shuffled anti-joins
+    assert(jobs <= 16, s"$jobs Spark jobs for one admission")
+  }
+
+  test("collectAtMost over a checkpointed frame: one job, over-cap detected") {
+    val df = spark.range(0, 100, 1, 4).toDF("id").localCheckpoint()
+    assert(df.rdd.getNumPartitions == 4)
+    var under: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(jobsOf { under = Dedup.collectAtMost(df, 100, oneTask = true) } == 1)
+    assert(under.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 100L))
+    var over: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
+    assert(jobsOf { over = Dedup.collectAtMost(df, 99, oneTask = true) } == 1)
+    assert(over.isEmpty)
   }
 
   test("dedupIncremental with an empty corpus equals dedupNearDups") {

@@ -203,6 +203,39 @@ class PlanSpec extends AnyFunSuite {
     assert(sides == Set(0, 1), s"candidate sides $sides")
   }
 
+  test("incremental dedup: one fingerprint exchange for exact copies; under the cap the drop set is local") {
+    // a corpus near-dup, an intra-batch near-dup pair and an exact
+    // copy, so the corpus dups, the non-canonical ids and the exact
+    // losers are all non-empty
+    val a = "the quick brown fox jumps over the lazy dog while " +
+      "the sun sets slowly behind the distant mountains of the west"
+    val d = "observability dashboards aggregate latency percentiles " +
+      "error rates and saturation metrics across distributed services for the oncall engineer"
+    val dir = java.nio.file.Files.createTempDirectory("plan_admit").toString
+    Seq((100L, a)).toDF("doc_id", "text").write.parquet(s"$dir/corpus")
+    Seq((1L, a.replace("slowly", "quickly")), (2L, d), (3L, d.replace("oncall", "platform")),
+      (4L, d)).toDF("doc_id", "text").write.parquet(s"$dir/batch")
+    val admitted = graft.operators.Dedup.dedupIncremental(spark.read.parquet(s"$dir/batch"),
+      spark.read.parquet(s"$dir/corpus"), threshold = 0.5)
+    assert(admitted.select("doc_id").as[Long].collect().toSeq == Seq(2L))
+    val plan = executedPlan(admitted).split("== Initial Plan ==").head
+    // the exact-copy groups come from ONE window over the batch rows:
+    // one exchange keyed on the raw-text fingerprint, no aggregate
+    val keys = "(?<!Broadcast)Exchange hashpartitioning\\((\\w+#\\d+)".r
+      .findAllMatchIn(plan).map(_.group(1)).toList
+    assert(keys.size == 1, s"expected one shuffle exchange, found ${keys.size}:\n$plan")
+    assert(s"xxhash64\\(text#\\d+, 42\\) AS \\Q${keys.head}\\E".r.findFirstIn(plan).isDefined,
+      s"the exchange must be keyed on the text fingerprint:\n$plan")
+    assert("Aggregate\\(keys=\\[[^\\]]*(xxhash64|_fp)".r.findFirstIn(plan).isEmpty,
+      s"exact-copy groups must not be aggregated:\n$plan")
+    // the near-dup drop set was built on the driver: a local relation,
+    // and no shuffled join against the corpus dups
+    assert("LocalTableScan \\[doc_id#".r.findFirstIn(plan).isDefined,
+      s"drop set must be a local relation under the cap:\n$plan")
+    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+      s"no shuffled join expected under the cap:\n$plan")
+  }
+
   test("semantic dedup pairs: equi-join on the cell id, never a cartesian") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val idx = graft.functions.Ivf.indexFor(s"plan-semdedup:$sfDir", emb, k = 4, iters = 1)
