@@ -50,7 +50,7 @@ object Bench {
     // decompresses ~4-8×, so one partition carries ~16-32 MB in
     // flight), floored at 8, capped at 4× cores. Core-count-sized
     // shuffles of kilobyte partitions are pure scheduling overhead:
-    // interleaved in-JVM minima (ProfileFloor) showed 20-25% total
+    // interleaved in-JVM minima showed 20-25% total
     // savings at sf0.1 across floor, heavy, AND streaming families,
     // with no family regressing. At 100 TB the same rule (with a
     // cluster-scale cap) yields the thousands of partitions you'd

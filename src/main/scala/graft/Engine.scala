@@ -159,17 +159,14 @@ class Engine(val spark: SparkSession, kvRoot: String = "/tmp/graft_kv") {
       swapWrite(KeyValue.delete(KeyValue.load(spark, path), keys, keyCol), path)
   }
 
-  /** Write-to-temp + rename: a parquet dir can't be overwritten while
-    * it feeds the writing plan; the swap keeps it distributed (no
-    * driver collect) and near-atomic. */
-  private def swapWrite(df: DataFrame, dest: String): Unit = {
-    val tmp = s"${dest}_stage_${System.nanoTime()}"
-    df.write.mode("overwrite").parquet(tmp)
-    val f = fs(dest)
-    val destP = new Path(dest)
-    if (f.exists(destP)) f.delete(destP, true)
-    f.rename(new Path(tmp), destP)
-  }
+  /** Write-to-temp + [[Catalog.swapIn]]: a parquet dir can't be
+    * overwritten while it feeds the writing plan; the swap keeps the
+    * rewrite distributed (no driver collect), and a failed rename
+    * leaves the previous kind in place instead of losing it. */
+  private def swapWrite(df: DataFrame, dest: String): Unit =
+    Catalog.swapIn(fs(dest), new Path(dest), "kv") { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
+    }
 
   // ---- governance tags (≙ datacatalog.py)
 

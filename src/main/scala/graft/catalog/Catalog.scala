@@ -1,6 +1,13 @@
 package graft.catalog
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.StructType
 
 /** Catalog/DDL surface (SURVEY.md §2.1 S5–S8; ≙ the reference's
@@ -82,6 +89,9 @@ object Catalog {
       .where($"key" === key).select("value").as[String].collect().headOption
   }
 
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+
   /** Dot-prefixed sibling path for a swap's tmp/aside dir. The dot
     * matters twice: Spark/Hive readers IGNORE dot-prefixed paths, and
     * a swapped LEAF of a partitioned table ("day=d1") must never leave
@@ -89,11 +99,70 @@ object Catalog {
     * ("day=d1_premerge_123" would surface all the old rows under a
     * phantom partition value and get rewritten in place by a replay's
     * leaf walk — the hidden name keeps crash artifacts invisible to
-    * readers AND to the leaf walkers until vacuumed). */
-  private def hiddenSibling(dir: org.apache.hadoop.fs.Path,
-                            tag: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(dir.getParent,
-      s".${dir.getName}_${tag}_${System.nanoTime()}")
+    * readers AND to [[leafDirs]] until vacuumed). */
+  private def hiddenSibling(dir: Path, tag: String): Path =
+    new Path(dir.getParent, s".${dir.getName}_${tag}_${System.nanoTime()}")
+
+  /** The one crash-safe replace of a parquet directory: `write` fills
+    * the hidden tmp sibling `.<name>_<op>_…`, `live` moves aside to
+    * `.<name>_pre<op>_…`, the tmp dir is renamed in, and only then is
+    * the aside deleted — readers see the old directory or the new one,
+    * never a mix, and the only copy is never deleted. Hadoop rename
+    * signals failure by RETURNING FALSE, so both renames are checked:
+    * a failed move-aside deletes the tmp dir; a failed swap-in renames
+    * the original back first. A `live` that does not exist yet is
+    * simply renamed into place. */
+  private[graft] def swapIn(fs: FileSystem, live: Path, op: String)
+                           (write: Path => Unit): Unit = {
+    val tmp = hiddenSibling(live, op)
+    try write(tmp) catch {
+      case e: Throwable if NonFatal(e) => fs.delete(tmp, true); throw e
+    }
+    val existed = fs.exists(live)
+    val aside = hiddenSibling(live, "pre" + op)
+    if (existed && !fs.rename(live, aside)) {
+      fs.delete(tmp, true)
+      throw new java.io.IOException(s"$op: could not move $live aside")
+    }
+    if (!fs.rename(tmp, live)) {
+      if (existed) fs.rename(aside, live) // roll back to the original
+      fs.delete(tmp, true)
+      throw new java.io.IOException(s"$op: could not swap rewrite into $live")
+    }
+    if (existed) fs.delete(aside, true)
+  }
+
+  /** Leaf partition dirs of a hive layout: descends `k=v` subdirs and
+    * skips hidden (dot/underscore) dirs — swap crash artifacts or
+    * metadata, never partitions. A dir with no `k=v` subdirs is its
+    * own (only) leaf. */
+  private def leafDirs(fs: FileSystem, p: Path): Seq[Path] = {
+    val sub = fs.listStatus(p).filter { s =>
+      val n = s.getPath.getName
+      s.isDirectory && n.contains("=") && !n.startsWith(".") && !n.startsWith("_")
+    }
+    if (sub.isEmpty) Seq(p) else sub.toSeq.flatMap(d => leafDirs(fs, d.getPath))
+  }
+
+  /** Per-leaf maintenance runs at most this many leaf jobs at once;
+    * each leaf job is itself distributed. */
+  private val LeafPoolWidth = 8
+
+  /** Runs `work` once per leaf on a bounded pool and waits for EVERY
+    * leaf to settle before rethrowing the first failure (in leaf
+    * order): a fail-fast wait would return while sibling rewrites are
+    * still mutating partitions behind the caller's back (and racing
+    * any cleanup the caller does on the root). */
+  private def onEachLeaf[A, B](leaves: Seq[A])(work: A => B): Seq[B] =
+    if (leaves.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(LeafPoolWidth, leaves.size))
+      try pool.invokeAll(leaves.map(l => (() => work(l)): Callable[B]).asJava)
+        .asScala.toSeq.map { f =>
+          try f.get() catch { case e: ExecutionException => throw e.getCause }
+        }
+      finally { pool.shutdown(); () }
+    }
 
   /** Row counts around a [[merge]] run. */
   case class MergeStats(rowsBefore: Long, rowsAfter: Long)
@@ -108,11 +177,10 @@ object Catalog {
     *
     * Implemented as ONE full-outer shuffle join on the key (AQE
     * broadcasts a small delta side on its own), written to a temp dir
-    * and swapped in with the same crash-safe rename ordering as
-    * [[compact]] — readers see the old table or the new one, never a
-    * mix. Preconditions: `updates` has the target's exact column set,
-    * and at most one row per key (multi-row matches are ambiguous —
-    * BigQuery MERGE errors on them; dedup upstream).
+    * and replaced by [[swapIn]] — readers see the old table or the
+    * new one, never a mix. Preconditions: `updates` has the target's
+    * exact column set, and at most one row per key (multi-row matches
+    * are ambiguous — BigQuery MERGE errors on them; dedup upstream).
     *
     * Scale shape: cost is one join shuffle plus a full rewrite of the
     * table — correct for parquet, which has no row-level update. At
@@ -156,23 +224,10 @@ object Catalog {
         else when(col("u.__upd").isNotNull, col(s"u.`$c`"))
           .otherwise(col(s"t.`$c`")).as(c)
       }: _*)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val tmp = hiddenSibling(dirP, "merge")
-    merged.observe(after, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val aside = hiddenSibling(dirP, "premerge")
-    if (!fs.rename(dirP, aside)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"merge: could not move $dir aside")
+    swapIn(fsOf(spark, dir), new Path(dir), "merge") { tmp =>
+      merged.observe(after, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(tmp.toString)
     }
-    if (!fs.rename(tmp, dirP)) {
-      fs.rename(aside, dirP) // roll back to the original
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"merge: could not swap rewrite into $dir")
-    }
-    fs.delete(aside, true)
     MergeStats(before.get("n").asInstanceOf[Long], after.get("n").asInstanceOf[Long])
   }
 
@@ -195,14 +250,13 @@ object Catalog {
     *
     * Scale shape: one bounded `collect` of the touched partition-value
     * tuples (one row per touched leaf — the control-plane set), then
-    * per-leaf [[merge]] jobs from a bounded pool ([[compactPartitioned]]'s
-    * concurrency pattern). Each leaf swap is atomic, so a crash leaves
+    * one [[merge]] job per leaf on the bounded leaf runner
+    * ([[onEachLeaf]]). Each leaf swap is atomic, so a crash leaves
     * every leaf either fully merged or fully original and the run is
     * repeatable (the merge is idempotent: replaying the same delta
     * reproduces the same rows). */
   def mergePartitioned(spark: SparkSession, root: String, updates: DataFrame,
                        keyCols: Seq[String], partitionCols: Seq[String],
-                       maxConcurrent: Int = 8,
                        schemaOpt: Option[StructType] = None): MergeStats = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "mergePartitioned needs at least one key column")
@@ -224,43 +278,34 @@ object Catalog {
     touched.foreach { r =>
       require(!r.anyNull, "mergePartitioned: null partition values are not supported")
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, root)
     def leafPath(r: org.apache.spark.sql.Row): String =
       root + "/" + partitionCols.zipWithIndex.map { case (c, i) =>
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(r.getString(i))
-        s"$c=$v"
+        s"$c=${ExternalCatalogUtils.escapePathName(r.getString(i))}"
       }.mkString("/")
     def leafDelta(r: org.apache.spark.sql.Row): DataFrame =
       updates.where(partitionCols.zipWithIndex.map { case (c, i) =>
         col(c).cast("string") === lit(r.getString(i))
       }.reduce(_ && _)).drop(partitionCols: _*)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxConcurrent, math.max(1, touched.length))))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val outcomes = Await.result(
-        Future.sequence(touched.toSeq.map { r => Future {
-          val dir = leafPath(r)
-          val delta = leafDelta(r)
-          if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-            // identity already checked once over the whole delta
-            merge(spark, dir, delta, keyCols, checkDuplicateKeys = false,
-              schemaOpt = schemaOpt)
-          else {
-            // brand-new partition: the delta IS the leaf
-            val n = org.apache.spark.sql.Observation()
-            delta.observe(n, count(lit(1)).as("n")).write.parquet(dir)
-            MergeStats(0L, n.get("n").asInstanceOf[Long])
-          }
-        }.transform(t => scala.util.Success(t)) }),
-        scala.concurrent.duration.Duration.Inf)
-      outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach(e => throw e)
-      val stats = outcomes.collect { case scala.util.Success(s) => s }
-      MergeStats(stats.map(_.rowsBefore).sum, stats.map(_.rowsAfter).sum)
-    } finally { pool.shutdown(); () }
+    val stats = onEachLeaf(touched.toSeq) { r =>
+      val dir = leafPath(r)
+      val delta = leafDelta(r)
+      if (fs.exists(new Path(dir)))
+        // identity already checked once over the whole delta
+        merge(spark, dir, delta, keyCols, checkDuplicateKeys = false,
+          schemaOpt = schemaOpt)
+      else {
+        // brand-new partition: the delta IS the leaf. Renamed in by
+        // swapIn too: a failed direct write would leave an empty
+        // visible leaf that every replay then fails to read
+        val n = org.apache.spark.sql.Observation()
+        swapIn(fs, new Path(dir), "merge") { tmp =>
+          delta.observe(n, count(lit(1)).as("n")).write.parquet(tmp.toString)
+        }
+        MergeStats(0L, n.get("n").asInstanceOf[Long])
+      }
+    }
+    MergeStats(stats.map(_.rowsBefore).sum, stats.map(_.rowsAfter).sum)
   }
 
   case class DeleteStats(rowsBefore: Long, rowsDeleted: Long,
@@ -271,9 +316,9 @@ object Catalog {
     * key appears in `keys` is removed, everything else is rewritten
     * byte-equal. One LEFT ANTI join on the key (the erasure list is
     * small by nature — AQE broadcasts it), written to a temp dir and
-    * swapped with [[merge]]'s crash-safe rename ordering: readers see
-    * the old table or the new one, never a mix. Row counts come from
-    * `observe` nodes inside the one rewrite job, not extra scans. */
+    * replaced by [[swapIn]]: readers see the old table or the new
+    * one, never a mix. Row counts come from `observe` nodes inside the
+    * one rewrite job, not extra scans. */
   def deleteKeys(spark: SparkSession, dir: String, keys: DataFrame,
                  keyCols: Seq[String],
                  schemaOpt: Option[StructType] = None): DeleteStats = {
@@ -289,23 +334,10 @@ object Catalog {
     val kept = target.observe(before, count(lit(1)).as("n"))
       .join(keys.select(keyCols.map(col): _*).distinct(),
         keyCols, "left_anti")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val tmp = hiddenSibling(dirP, "delete")
-    kept.observe(after, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val aside = hiddenSibling(dirP, "predelete")
-    if (!fs.rename(dirP, aside)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"deleteKeys: could not move $dir aside")
+    swapIn(fsOf(spark, dir), new Path(dir), "delete") { tmp =>
+      kept.observe(after, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(tmp.toString)
     }
-    if (!fs.rename(tmp, dirP)) {
-      fs.rename(aside, dirP) // roll back to the original
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"deleteKeys: could not swap rewrite into $dir")
-    }
-    fs.delete(aside, true)
     val b = before.get("n").asInstanceOf[Long]
     DeleteStats(b, b - after.get("n").asInstanceOf[Long], 1L)
   }
@@ -322,30 +354,17 @@ object Catalog {
     * erasure list converges.
     *
     * Scale shape: the probe is one existence query per leaf with the
-    * erasure keys broadcast (`LIMIT 1` short-circuits); leaves
-    * process from a bounded pool ([[compactPartitioned]]'s
-    * concurrency pattern). The control-plane state is one path per
-    * leaf. */
+    * erasure keys broadcast (`LIMIT 1` short-circuits); leaves run on
+    * the bounded leaf runner ([[onEachLeaf]]). The control-plane
+    * state is one path per leaf. */
   def deleteKeysPartitioned(spark: SparkSession, root: String,
                             keys: DataFrame, keyCols: Seq[String],
-                            maxConcurrent: Int = 8,
                             schemaOpt: Option[StructType] = None): DeleteStats = {
     import org.apache.spark.sql.functions._
     require(keyCols.nonEmpty, "deleteKeysPartitioned needs key columns")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val (dirs, _) = fs.listStatus(p).partition(_.isDirectory)
-      // hidden (dot/underscore) dirs are crash artifacts or metadata,
-      // never partitions — a swap's aside dir must not be walked
-      val (partDirs, _) = dirs.partition(d =>
-        d.getPath.getName.contains("=") &&
-          !d.getPath.getName.startsWith(".") &&
-          !d.getPath.getName.startsWith("_"))
-      if (partDirs.isEmpty) Seq(p) else partDirs.toSeq.flatMap(d => leaves(d.getPath))
-    }
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val leafPaths = leaves(rootP)
+    val fs = fsOf(spark, root)
+    val rootP = new Path(root)
+    val leafPaths = leafDirs(fs, rootP)
     // a FLAT directory (no k=v subdirs) degenerates to the flat
     // erasure — a right-to-be-forgotten request must never silently
     // no-op because the table happened to be unpartitioned
@@ -358,96 +377,84 @@ object Catalog {
     // partition columns are absent from the leaf FILES, so an erasure
     // key that is a partition column (tenant=..., a plausible GDPR
     // key) must be matched against the PATH, not the probed frame
-    def leafPartValues(leaf: org.apache.hadoop.fs.Path): Map[String, String] = {
+    def leafPartValues(leaf: Path): Map[String, String] = {
       val rel = fs.makeQualified(leaf).toUri.getPath
         .stripPrefix(rootUri).stripPrefix("/")
       rel.split('/').toSeq.filter(_.contains('=')).map { seg =>
         val i = seg.indexOf('=')
         // the inverse of the escapePathName this file writes with —
         // NOT URLDecoder, which corrupts literal '+' into a space
-        (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-           .unescapePathName(seg.take(i)),
-         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-           .unescapePathName(seg.drop(i + 1)))
+        (ExternalCatalogUtils.unescapePathName(seg.take(i)),
+         ExternalCatalogUtils.unescapePathName(seg.drop(i + 1)))
       }.toMap
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxConcurrent, math.max(1, leafPaths.length))))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val outcomes = Await.result(
-        Future.sequence(leafPaths.map { leaf => Future {
-          val pv = leafPartValues(leaf)
-          val partKeyCols = keyCols.filter(pv.contains)
-          val dataKeyCols = keyCols.filterNot(pv.contains)
-          // restrict the erasure list to rows whose partition-column
-          // values match THIS leaf's path; a mismatched leaf is a
-          // guaranteed non-hit with zero data scanned
-          // match on BOTH representations: the key column rendered as
-          // a string (exact path text) OR the path value coerced into
-          // the key column's type (try_cast — never throws under ANSI).
-          // A caller whose erasure frame carries tenant as DOUBLE
-          // against a path 'tenant=1' must still match ('1.0' ≠ '1'
-          // as text, but 1.0 <=> cast('1')), or the leaf is silently
-          // skipped — a silent GDPR non-erasure. The typed branch only
-          // applies when the path value actually CASTS: a failed
-          // try_cast yields NULL, and NULL <=> NULL is TRUE, so
-          // without the isNotNull guard a NULL erasure key would match
-          // every leaf whose path value fails the cast — deleting
-          // unrelated partitions. NULL keys match only the
-          // __HIVE_DEFAULT_PARTITION__ branch above.
-          val leafKeys = partKeyCols.foldLeft(keySet) { (df, c) =>
-            val v = pv(c)
-            if (v == "__HIVE_DEFAULT_PARTITION__") df.filter(col(c).isNull)
-            else {
-              val typed = lit(v).try_cast(keySet.schema(c).dataType)
-              df.filter(col(c).cast("string") === lit(v) ||
-                (typed.isNotNull && (col(c) <=> typed)))
-            }
+    val stats = onEachLeaf(leafPaths) { leaf =>
+      val pv = leafPartValues(leaf)
+      val partKeyCols = keyCols.filter(pv.contains)
+      val dataKeyCols = keyCols.filterNot(pv.contains)
+      // restrict the erasure list to rows whose partition-column
+      // values match THIS leaf's path; a mismatched leaf is a
+      // guaranteed non-hit with zero data scanned
+      // match on BOTH representations: the key column rendered as
+      // a string (exact path text) OR the path value coerced into
+      // the key column's type (try_cast — never throws under ANSI).
+      // A caller whose erasure frame carries tenant as DOUBLE
+      // against a path 'tenant=1' must still match ('1.0' ≠ '1'
+      // as text, but 1.0 <=> cast('1')), or the leaf is silently
+      // skipped — a silent GDPR non-erasure. The typed branch only
+      // applies when the path value actually CASTS: a failed
+      // try_cast yields NULL, and NULL <=> NULL is TRUE, so
+      // without the isNotNull guard a NULL erasure key would match
+      // every leaf whose path value fails the cast — deleting
+      // unrelated partitions. NULL keys match only the
+      // __HIVE_DEFAULT_PARTITION__ branch above.
+      val leafKeys = partKeyCols.foldLeft(keySet) { (df, c) =>
+        val v = pv(c)
+        if (v == "__HIVE_DEFAULT_PARTITION__") df.filter(col(c).isNull)
+        else {
+          val typed = lit(v).try_cast(keySet.schema(c).dataType)
+          df.filter(col(c).cast("string") === lit(v) ||
+            (typed.isNotNull && (col(c) <=> typed)))
+        }
+      }
+      val anyKey = partKeyCols.isEmpty || leafKeys.limit(1).count() > 0
+      if (!anyKey) DeleteStats(0L, 0L, 0L)
+      else if (dataKeyCols.isEmpty) {
+        // every key column is a partition column: the whole leaf
+        // matches — drop the directory instead of rewriting it,
+        // then prune now-empty ancestors (an empty partition dir
+        // would crash the NEXT run's leaf walk as a bogus
+        // parquet-less leaf)
+        val n = readDir(spark, leaf.toString, schemaOpt).count()
+        fs.delete(leaf, true)
+        var parent = leaf.getParent
+        try {
+          while (parent != null &&
+              fs.makeQualified(parent) != fs.makeQualified(rootP) &&
+              fs.exists(parent) && fs.listStatus(parent).isEmpty) {
+            // a concurrent sibling leaf may race this non-recursive
+            // delete; a false return just stops the upward prune
+            parent = if (fs.delete(parent, false)) parent.getParent else null
           }
-          val anyKey = partKeyCols.isEmpty || leafKeys.limit(1).count() > 0
-          if (!anyKey) DeleteStats(0L, 0L, 0L)
-          else if (dataKeyCols.isEmpty) {
-            // every key column is a partition column: the whole leaf
-            // matches — drop the directory instead of rewriting it,
-            // then prune now-empty ancestors (an empty partition dir
-            // would crash the NEXT run's leaves() walk as a bogus
-            // parquet-less leaf)
-            val n = readDir(spark, leaf.toString, schemaOpt).count()
-            fs.delete(leaf, true)
-            var parent = leaf.getParent
-            try {
-              while (parent != null &&
-                  fs.makeQualified(parent) != fs.makeQualified(rootP) &&
-                  fs.exists(parent) && fs.listStatus(parent).isEmpty) {
-                // a concurrent sibling future may race this non-recursive
-                // delete; a false return just stops the upward prune
-                parent = if (fs.delete(parent, false)) parent.getParent else null
-              }
-            } catch {
-              // exists→listStatus is not atomic either: a sibling
-              // future can delete the shared ancestor between the two
-              // calls — that just means it finished the prune first
-              case _: java.io.FileNotFoundException => ()
-            }
-            DeleteStats(n, n, 1L)
-          } else {
-            val hit = readDir(spark, leaf.toString, schemaOpt)
-              .join(broadcast(leafKeys.select(dataKeyCols.map(col): _*).distinct()),
-                dataKeyCols, "left_semi")
-              .limit(1).count() > 0
-            if (hit) deleteKeys(spark, leaf.toString, leafKeys, dataKeyCols,
-              schemaOpt)
-            else DeleteStats(0L, 0L, 0L)
-          }
-        }.transform(t => scala.util.Success(t)) }),
-        scala.concurrent.duration.Duration.Inf)
-      outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach(e => throw e)
-      val stats = outcomes.collect { case scala.util.Success(s) => s }
-      DeleteStats(stats.map(_.rowsBefore).sum, stats.map(_.rowsDeleted).sum,
-        stats.map(_.leavesRewritten).sum)
-    } finally { pool.shutdown(); () }
+        } catch {
+          // exists→listStatus is not atomic either: a sibling leaf
+          // can delete the shared ancestor between the two calls —
+          // that just means it finished the prune first
+          case _: java.io.FileNotFoundException => ()
+        }
+        DeleteStats(n, n, 1L)
+      } else {
+        val hit = readDir(spark, leaf.toString, schemaOpt)
+          .join(broadcast(leafKeys.select(dataKeyCols.map(col): _*).distinct()),
+            dataKeyCols, "left_semi")
+          .limit(1).count() > 0
+        if (hit) deleteKeys(spark, leaf.toString, leafKeys, dataKeyCols,
+          schemaOpt)
+        else DeleteStats(0L, 0L, 0L)
+      }
+    }
+    DeleteStats(stats.map(_.rowsBefore).sum, stats.map(_.rowsDeleted).sum,
+      stats.map(_.leavesRewritten).sum)
   }
 
   /** Before/after file counts and byte size of a [[compact]] run. */
@@ -469,22 +476,19 @@ object Catalog {
     schemaOpt.fold(spark.read)(spark.read.schema).parquet(dir)
 
   /** Small-file compaction of a parquet directory: rewrite to
-    * ceil(bytes / targetFileBytes) files and swap atomically
-    * (write-to-temp, move old aside, rename in, delete old — the same
-    * crash-safe ordering as Engine.replaceSchema, resolvable at every
-    * step). Streaming sinks and per-batch appends accumulate files far
-    * below scan-task size; at warehouse scale that degrades both
-    * listing and task packing, and compaction is routine maintenance.
-    * The rewrite is a distributed repartition — nothing flows through
-    * the driver. */
+    * ceil(bytes / targetFileBytes) files and replace the directory by
+    * [[swapIn]]. Streaming sinks and per-batch appends accumulate
+    * files far below scan-task size; at warehouse scale that degrades
+    * both listing and task packing, and compaction is routine
+    * maintenance. The rewrite is a distributed repartition — nothing
+    * flows through the driver. */
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L << 20,
               clusterBy: Seq[String] = Nil,
               schemaOpt: Option[StructType] = None): CompactStats = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val dirP = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(spark, dir)
+    val dirP = new Path(dir)
     val listing = fs.listStatus(dirP)
     // flat dirs only: a hive-partitioned layout would list 0 bytes
     // here and the plain read would flatten the partition columns —
@@ -497,7 +501,6 @@ object Catalog {
     }
     val bytes = parts.map(_.getLen).sum
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    val tmp = hiddenSibling(dirP, "compact")
     val src = readDir(spark, dir, schemaOpt)
     // clusterBy: range-partition + sort within files so each output
     // file owns a disjoint key range — parquet min/max stats then
@@ -524,21 +527,9 @@ object Catalog {
         src.repartitionByRange(nOut.toInt, keys: _*)
           .sortWithinPartitions(keys: _*)
       }
-    laid.write.mode("overwrite").parquet(tmp.toString)
-    // Hadoop rename signals failure by RETURNING FALSE; every step
-    // must be checked, and a failed swap-in must roll the original
-    // back before failing — never delete the only copy
-    val aside = hiddenSibling(dirP, "precompact")
-    if (!fs.rename(dirP, aside)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compact: could not move $dir aside")
+    swapIn(fs, dirP, "compact") { tmp =>
+      laid.write.mode("overwrite").parquet(tmp.toString)
     }
-    if (!fs.rename(tmp, dirP)) {
-      fs.rename(aside, dirP) // roll back to the original
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"compact: could not swap rewrite into $dir")
-    }
-    fs.delete(aside, true)
     // observed, not requested: empty range partitions write no file
     val filesAfter = fs.listStatus(dirP).count { s =>
       s.isFile && !s.getPath.getName.startsWith("_")
@@ -554,53 +545,26 @@ object Catalog {
     * values — which live in the directory names, not the files — are
     * untouched and reads through the root keep discovering them.
     *
-    * Scale shape: the driver submits per-partition rewrite jobs
-    * concurrently (bounded pool); each rewrite is itself distributed.
-    * A crash mid-run leaves every partition either fully compacted or
-    * fully original (the per-partition swap is atomic), so the
-    * operation is resumable by re-running — routine maintenance
+    * Scale shape: the driver submits per-partition rewrite jobs on
+    * the bounded leaf runner ([[onEachLeaf]]); each rewrite is itself
+    * distributed. A crash mid-run leaves every partition either fully
+    * compacted or fully original (the per-partition swap is atomic),
+    * so the operation is resumable by re-running — routine maintenance
     * semantics. A flat directory (no `k=v` subdirs) degenerates to a
     * single [[compact]]. */
   def compactPartitioned(spark: SparkSession, root: String,
                          targetFileBytes: Long = 128L << 20,
                          clusterBy: Seq[String] = Nil,
-                         maxConcurrent: Int = 8,
                          schemaOpt: Option[StructType] = None): CompactStats = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val sub = fs.listStatus(p).filter(s =>
-        s.isDirectory && s.getPath.getName.contains("=") &&
-          !s.getPath.getName.startsWith(".") &&
-          !s.getPath.getName.startsWith("_"))
-      if (sub.isEmpty) Seq(p)
-      else sub.toSeq.flatMap(d => leaves(d.getPath))
-    }
-    val parts = leaves(new org.apache.hadoop.fs.Path(root))
-    if (parts == Seq(new org.apache.hadoop.fs.Path(root)))
+    val rootP = new Path(root)
+    val parts = leafDirs(fsOf(spark, root), rootP)
+    if (parts == Seq(rootP))
       compact(spark, root, targetFileBytes, clusterBy, schemaOpt)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(maxConcurrent, parts.size)))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        // lift each job to Try and await ALL of them: a fail-fast
-        // Future.sequence would rethrow while sibling rewrites are
-        // still mutating partitions behind the caller's back (and
-        // racing any cleanup the caller does on the root)
-        val outcomes = Await.result(
-          Future.sequence(parts.map(p =>
-            Future(compact(spark, p.toString, targetFileBytes, clusterBy,
-                schemaOpt))
-              .transform(t => scala.util.Success(t)))),
-          scala.concurrent.duration.Duration.Inf)
-        outcomes.collectFirst { case scala.util.Failure(e) => e }
-          .foreach(e => throw e)
-        val stats = outcomes.collect { case scala.util.Success(s) => s }
-        CompactStats(stats.map(_.filesBefore).sum, stats.map(_.filesAfter).sum,
-          stats.map(_.bytes).sum)
-      } finally { pool.shutdown(); () }
+      val stats = onEachLeaf(parts)(p =>
+        compact(spark, p.toString, targetFileBytes, clusterBy, schemaOpt))
+      CompactStats(stats.map(_.filesBefore).sum, stats.map(_.filesAfter).sum,
+        stats.map(_.bytes).sum)
     }
   }
 }

@@ -741,7 +741,7 @@ private[graft] object CatalogGates {
         }
         // the gate just WROTE the table, so the uniform leaf schema is
         // known — passing it skips one footer-inference job per leaf
-        // (20 leaves at sf0.1; ProfileJobs r16 decomposition)
+        // (20 leaves at sf0.1; round-16 job decomposition)
         val leafSchema = StructType(Seq(StructField("doc_id", LongType)))
         val stats = graft.catalog.Catalog.compactPartitioned(s, frag,
           targetFileBytes = math.max(1L << 20, fragBytes / 10 + 1),

@@ -273,7 +273,7 @@ private[graft] object CoreGates {
     // SHUFFLE_HASH on the decorrelated semi join: unhinted, AQE
     // broadcasts LINEITEM — the fact side, a plan that dies at scale —
     // and measures 1.0 s; the hash-shuffled semi is 0.56 s at sf0.1
-    // (ProfileQ25, best-of-3) and shuffles only 8-byte keys at any
+    // (best-of-3) and shuffles only 8-byte keys at any
     // scale.
     "q25_sql_subquery" -> ((s, d) => {
       Tables.registerViews(s, d)

@@ -230,7 +230,7 @@ private[graft] object DedupAnnGates {
     // hive-partitioned inverted lists — the search reads only the
     // probed lists' partitions (DPP pruning asserted in PlanSpec),
     // the shape that survives 100 TB.
-    // Recall bound context (measured, tools/ProfileX14): the fixture
+    // Recall bound context (measured): the fixture
     // embeddings are RANDOM vectors — no cluster structure, IVF's
     // worst case — so recall@5 at nprobe=8/16 measures 0.78-0.86
     // across sf; the gate bound is missed ≤ 20 (recall ≥ 0.6) to hold

@@ -46,7 +46,7 @@ private[graft] object GateSupport {
     * batch-cadence-invariant by contract (the oracle replays one batch
     * SQL statement), and every additional micro-batch costs the full
     * per-trigger constant (~0.35 s measured: addBatch + state commit +
-    * offset/commit-log writes — ProfileStream on x119) while
+    * offset/commit-log writes, profiled on x119) while
     * demonstrating nothing the previous batches didn't. 4 data files
     * = 3 in-stream watermark advances + the trailing no-data batch:
     * still a multi-batch replay that fires eviction/finalization on
@@ -282,7 +282,7 @@ private[graft] object GateSupport {
 
   /** Data-sized state-store parallelism: one state-store instance per
     * ~1.5 MB of staged parquet input, clamped to [4, 16]. Measured on
-    * the sf1 session-window stream (TimeX18): 4 partitions 6.6-9.8 s,
+    * the sf1 session-window stream: 4 partitions 6.6-9.8 s,
     * 8 partitions 3.7-5.9 s, 16 noisy, 32 collapses to 20-40 s under
     * per-store per-batch commit overhead — so the clamp ceiling is as
     * load-bearing as the floor. At fixture scale (sf0.1 events

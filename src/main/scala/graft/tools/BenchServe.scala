@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * each Spark observation with the SAME query's DuckDB observation,
   * so a minute-scale host-load window inflates both engines of a pair
   * together and per-(query,engine) minima stay comparable — the
-  * ProfileFloor protocol promoted to how close artifacts are made
-  * (round-12 verdict task: two consecutive close rounds were polluted
-  * by ±35% host weather).
+  * interleaved in-JVM minima protocol promoted to how close artifacts
+  * are made (round-12 verdict task: two consecutive close rounds
+  * were polluted by ±35% host weather).
   *
   * Protocol: `LIST` → one `QUERY <name>` line per gate + `DONE`;
   * `GC` → System.gc() + `OK`; `<gate name>` → runs through the noop

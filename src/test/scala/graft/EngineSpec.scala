@@ -78,6 +78,31 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.kvQuery("users").count() == 1)
   }
 
+  test("kv upsert: a failed swap-in rename throws and keeps the previous rows") {
+    FaultInjectingFileSystem.register(spark)
+    val real = Files.createTempDirectory("eng_kv_fault").toString
+    val kv = new Engine(spark, kvRoot = s"faulty://$real/kv")
+    kv.kvUpsert("users", Seq((1L, "ann"), (2L, "bob")).toDF("key", "name"), "key")
+    def users(): Seq[(Long, String)] =
+      kv.kvQuery("users").as[(Long, String)].collect().toSeq.sorted
+    try {
+      // fail only the rename that moves the rewrite INTO the live kind,
+      // never the rollback of the original (which moves an aside back)
+      FaultInjectingFileSystem.failRenameWhen =
+        (src, dst) => dst.getName == "users" && !src.getName.contains("_pre")
+      intercept[java.io.IOException] {
+        kv.kvUpsert("users", Seq((3L, "cy")).toDF("key", "name"), "key")
+      }
+    } finally FaultInjectingFileSystem.reset()
+    assert(users() == Seq((1L, "ann"), (2L, "bob")))
+    assert(graft.catalog.KeyValue.load(spark, s"faulty://$real/kv/users").count() == 2L)
+    val siblings = new java.io.File(s"$real/kv").list().toSeq
+    assert(siblings == Seq("users"), s"stray swap dirs: $siblings")
+    // the next upsert merges onto every earlier row, not the delta alone
+    kv.kvUpsert("users", Seq((3L, "cy")).toDF("key", "name"), "key")
+    assert(users() == Seq((1L, "ann"), (2L, "bob"), (3L, "cy")))
+  }
+
   test("tag from enum template takes first allowed value (DataCatalog parity)") {
     Seq(1).toDF("v").write.mode("overwrite").saveAsTable("eng_tagged")
     engine.tagFromTemplate("eng_tagged", Seq(
