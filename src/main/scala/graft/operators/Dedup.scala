@@ -246,7 +246,9 @@ object Dedup {
     * band join are first scored with the MinHash Jaccard estimator
     * (computed from the already-staged signatures — no re-shingling);
     * only candidates whose estimate falls within `margin` of the
-    * threshold get the exact shingle-set Jaccard re-join.
+    * threshold get exact shingle-set Jaccard — on the driver over
+    * their fetched texts while the sliver is small, by a shuffled
+    * re-join otherwise (see [[hybridVerify]]).
     *
     * Divergence bound: a clear-margin candidate disagrees with exact
     * Jaccard only when the estimator errs by ≥ margin, which by
@@ -260,8 +262,8 @@ object Dedup {
     * a 0.2 margin would already expect divergences at ~10^4. The
     * near-threshold band (where the estimator could err) is always
     * resolved exactly, so survivors match [[lshExactPairs]] up to the
-    * stated per-pair bound while the expensive shingle-set re-join
-    * touches only the near-threshold sliver of candidates. (For high
+    * stated per-pair bound while the expensive exact re-check touches
+    * only the near-threshold sliver of candidates. (For high
     * thresholds, `threshold + margin > 1` means no estimator
     * fast-accepts at all — every surviving pair is exact-verified,
     * the safe direction.) */
@@ -269,48 +271,66 @@ object Dedup {
                      idCol: String = "doc_id", textCol: String = "text",
                      shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
                      margin: Double = 0.3,
-                     cacheKey: Option[String] = None): DataFrame = {
+                     cacheKey: Option[String] = None): DataFrame =
+    hybridPairs(df, df, threshold, idCol, textCol, shingleSize, bands, rowsPerBand,
+      margin, cacheKey).drop("side")
+
+  /** [[lshHybridPairs]] with the side column kept, reading the near
+    * sliver's texts from `src`, which must hold for every id of `df`
+    * exactly the rows `df` holds (the dedup build passes the corpus
+    * its exact-copy reps were picked from). */
+  private def hybridPairs(df: DataFrame, src: DataFrame, threshold: Double,
+                          idCol: String, textCol: String, shingleSize: Int,
+                          bands: Int, rowsPerBand: Int, margin: Double,
+                          cacheKey: Option[String]): DataFrame = {
     val numHashes = bands * rowsPerBand
     // Stage SIGNATURES only (id + k longs, ~100× smaller than the
     // corpus and ~1000× smaller than staged shingle sets — persisting
     // the shingle arrays was the dominant cost of the all-exact
-    // variant). Shingles are recomputed lazily below, and only for
-    // the near-threshold sliver of candidates.
+    // variant). Shingles are recomputed only for the near-threshold
+    // sliver of candidates.
     val cached = cacheKey.isDefined
     val sig0 = signatureTable(df, numHashes, shingleSize, idCol, textCol, cacheKey)
     val sig = if (cached) sig0
       else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hybridVerify(bandCandidates(Seq(sig), bands, rowsPerBand), Seq(sig -> df),
-      threshold, margin, numHashes, shingleSize, idCol, textCol).drop("side")
+    try hybridVerify(bandCandidates(Seq(sig), bands, rowsPerBand), Seq(sig -> src),
+      threshold, margin, numHashes, shingleSize, idCol, textCol)
     finally { if (!cached) sig.unpersist(); () }
   }
 
-  /** Near-threshold re-shingle fetches at most this many doc ids via
-    * an inlined IN-list (parquet row-group pruning on the id column —
-    * the id-fetch shape of a production document store); above the cap
-    * the fetch falls back to the broadcast semi-join. The near set is
-    * bounded by the candidate count by construction, so the cap only
-    * picks the fetch mechanism, never the semantics. */
+  /** The near-threshold re-check runs on the driver for at most this
+    * many (id, side) keys — at most half as many near pairs, whose
+    * texts come back through an inlined IN-list (parquet row-group
+    * pruning on the id column — the id-fetch shape of a production
+    * document store) in one bounded collect. Above the cap the
+    * re-check stays distributed: a broadcast semi-join fetch and
+    * shuffled shingle-set joins. The near set is bounded by the
+    * candidate count by construction, so the cap only picks the
+    * mechanism, never the semantics. */
   private val NearFetchPushdownCap = 1000
 
   /** Hybrid verification of side-tagged candidate (id_a, id_b, side)
-    * pairs — the verify core of [[lshHybridPairs]] and
-    * [[dedupIncremental]]. `sides(i)` is the (signature table, source
-    * frame) pair behind side i: id_a is always a side-0 id, id_b an id
-    * of side `side` (the [[bandCandidates]] layout), so the right side
-    * is keyed by (id, side) and equal ids on different sides never
+    * pairs — the verify core of [[lshHybridPairs]], [[dedupNearDups]]
+    * and [[dedupIncremental]]. `sides(i)` is the (signature table,
+    * source frame) pair behind side i: id_a is always a side-0 id, id_b
+    * an id of side `side` (the [[bandCandidates]] layout), so the right
+    * side is keyed by (id, side) and equal ids on different sides never
     * mix. The MinHash Jaccard estimator (read from the staged
     * signatures) resolves clear-margin candidates; only the
-    * near-threshold sliver gets the exact shingle-set re-join, whose
-    * texts are fetched once per side from that side's source.
+    * near-threshold sliver gets exact shingle-set Jaccard, over texts
+    * fetched from each side's source. Up to `nearCap` near (id, side)
+    * keys that happens on the driver (see [[NearFetchPushdownCap]]).
     * Divergence bound vs all-exact: see [[lshHybridPairs]]. The
-    * result (id_a, id_b, side) is eagerly materialized
-    * (localCheckpoint), so callers may unpersist the signature tables
-    * and sources as soon as this returns. */
+    * result (id_a, id_b, side) is a filter over the checkpointed
+    * scores, unioned with a local relation of the exactly verified
+    * near pairs (above the cap: one checkpoint of both), so it never
+    * reads the signature tables or sources again and callers may
+    * unpersist them as soon as this returns. */
   private[graft] def hybridVerify(cand: DataFrame, sides: Seq[(DataFrame, DataFrame)],
                                   threshold: Double, margin: Double,
                                   numHashes: Int, shingleSize: Int,
-                                  idCol: String, textCol: String): DataFrame = {
+                                  idCol: String, textCol: String,
+                                  nearCap: Int = NearFetchPushdownCap): DataFrame = {
     // `same_fp` = identical raw text (64-bit fingerprint equality) —
     // Jaccard is exactly 1 for those pairs, so they fast-accept at
     // any threshold without touching the shingle re-join. Replica-
@@ -340,42 +360,90 @@ object Dedup {
     val near = scored
       .where(!col("same_fp") &&
         col("est") >= threshold - margin && col("est") < threshold + margin)
-    // prune FIRST, shingle after: the near (id, side) keys (bounded by
-    // the candidate count) come back in ONE bounded one-job collect
-    // over the checkpointed scores. Empty — the common case, near-dups
-    // are either clearly dup or clearly not — means nothing is
-    // re-shingled at all. Under the cap they are inlined as one
-    // IN-list per side, so the parquet scan prunes row groups on the
-    // id column's min/max stats instead of reading the whole text
-    // column — the id-fetch a production doc store would serve. Above
-    // the cap, the broadcast semi-join does the same pruning post-scan.
+      .select(col("id_a"), col("id_b"), col("side"))
+    // the near pairs (bounded by the candidate count) come back in ONE
+    // bounded one-job collect over the checkpointed scores. Empty — the
+    // common case, near-dups are either clearly dup or clearly not —
+    // means nothing is re-shingled at all. Up to nearCap / 2 pairs
+    // (at most nearCap ids) are re-checked on the driver; more pairs,
+    // or more source rows than ids, take the distributed re-check
+    val srcs = sides.map(_._2)
+    val onDriver = collectAtMost(
+      near.withColumn("key_a", col("id_a").cast(near.schema("id_b").dataType)), nearCap / 2)
+    if (onDriver.exists(_.isEmpty)) clear
+    else onDriver
+      .flatMap(nearOnDriver(_, near.schema, srcs, nearCap, threshold, shingleSize, idCol, textCol))
+      .map(clear.union)
+      .getOrElse(clear.union(nearDistributed(near, srcs, threshold, shingleSize, idCol, textCol))
+        .localCheckpoint())
+  }
+
+  /** The exactly verified subset of collected near (id_a, id_b, side)
+    * pairs as a local relation, or None when the sources hold more than
+    * `cap` rows for their ids (only possible with duplicate ids). The
+    * texts come back in one bounded collect, each side pruned by an
+    * inlined IN-list on its id column, so the parquet scan skips row
+    * groups on the id column's min/max stats instead of reading the
+    * whole text column. Jaccard is the same expression the distributed
+    * path evaluates, over a local relation: the optimizer folds it on
+    * the driver, so no job runs, and the scores are bit-identical. */
+  private def nearOnDriver(pairs: Array[Row], nearSchema: StructType, srcs: Seq[DataFrame],
+                           cap: Int, threshold: Double, shingleSize: Int,
+                           idCol: String, textCol: String): Option[DataFrame] = {
+    // pairs are (id_a, id_b, side, key_a): key_a is id_a in id_b's
+    // type (the band union's widened id type), so every key of every
+    // side compares in one type
+    val keyType = nearSchema("id_b").dataType
+    val keys = pairs.flatMap(r => Seq((r.get(3), 0), (r.get(1), r.getInt(2)))).distinct
+    val fetch = srcs.zipWithIndex.flatMap { case (src, i) =>
+      val ids = keys.collect { case (id, `i`) => id }
+      Option.when(ids.nonEmpty)(src.where(col(idCol).isin(ids.toSeq: _*))
+        .select(lit(i).as("side"), col(idCol).cast(keyType).as("id"), col(textCol).as("text")))
+    }.reduce(_ union _)
+    collectAtMost(fetch, cap).map { rows =>
+      val texts = rows.toSeq.groupMap(r => (r.get(1), r.getInt(0)))(_.get(2))
+      val joined = pairs.toSeq.flatMap { r =>
+        for (a <- texts.getOrElse((r.get(3), 0), Nil);
+             b <- texts.getOrElse((r.get(1), r.getInt(2)), Nil))
+          yield Row(r.get(0), r.get(1), r.getInt(2), a, b)
+      }
+      val textType = fetch.schema("text").dataType
+      import scala.jdk.CollectionConverters._
+      val spark = fetch.sparkSession
+      val verified = spark.createDataFrame(joined.asJava, nearSchema
+          .add("text_a", textType).add("text_b", textType))
+        .where(length(col("text_a")) >= shingleSize && length(col("text_b")) >= shingleSize &&
+          Text.jaccard(Text.charShingles(col("text_a"), shingleSize),
+            Text.charShingles(col("text_b"), shingleSize)) >= threshold)
+        .select(col("id_a"), col("id_b"), col("side"))
+      // read back once (no job: the folded plan is a local relation),
+      // so no later plan carries the texts or folds the Jaccard again
+      spark.createDataFrame(collectAtMost(verified, joined.length).get.toSeq.asJava, nearSchema)
+    }
+  }
+
+  /** The exactly verified subset of the near (id_a, id_b, side) pairs,
+    * distributed: each side's near ids are fetched by a broadcast
+    * semi-join, shingled once and checkpointed, then joined back to
+    * the pairs. */
+  private def nearDistributed(near: DataFrame, srcs: Seq[DataFrame], threshold: Double,
+                              shingleSize: Int, idCol: String, textCol: String): DataFrame = {
     val nearIds = near.select(col("id_a").as("id"), lit(0).as("side"))
       .union(near.select(col("id_b").as("id"), col("side")))
-    val inline = collectAtMost(nearIds, NearFetchPushdownCap, oneTask = true)
-    if (inline.exists(_.isEmpty)) clear
-    else {
-      val shingled = sides.zipWithIndex.flatMap { case ((_, src), i) =>
-        val pruned = inline match {
-          case None =>
-            val ids = nearIds.where(col("side") === i).distinct()
-            Some(src.join(broadcast(ids), src(idCol) === ids("id"), "left_semi"))
-          case Some(rows) =>
-            val ids = rows.filter(_.getInt(1) == i).map(_.get(0)).distinct
-            Option.when(ids.nonEmpty)(src.where(col(idCol).isin(ids.toSeq: _*)))
-        }
-        pruned.map(_.where(length(col(textCol)) >= shingleSize)
-          .select(col(idCol).as("id"), lit(i).as("side"),
-            Text.charShingles(col(textCol), shingleSize).as("sh")))
-      }.reduce(_ union _).localCheckpoint()
-      val verified = near
-        .join(shingled.where(col("side") === 0)
-          .select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(shingled.select(col("id").as("id_b"), col("side"), col("sh").as("sh_b")),
-          Seq("id_b", "side"))
-        .where(Text.jaccard(col("sh_a"), col("sh_b")) >= threshold)
-        .select(col("id_a"), col("id_b"), col("side"))
-      clear.union(verified).localCheckpoint()
-    }
+    val shingled = srcs.zipWithIndex.map { case (src, i) =>
+      val ids = nearIds.where(col("side") === i).distinct()
+      src.join(broadcast(ids), src(idCol) === ids("id"), "left_semi")
+        .where(length(col(textCol)) >= shingleSize)
+        .select(col(idCol).as("id"), lit(i).as("side"),
+          Text.charShingles(col(textCol), shingleSize).as("sh"))
+    }.reduce(_ union _).localCheckpoint()
+    near
+      .join(shingled.where(col("side") === 0)
+        .select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(shingled.select(col("id").as("id_b"), col("side"), col("sh").as("sh_b")),
+        Seq("id_b", "side"))
+      .where(Text.jaccard(col("sh_a"), col("sh_b")) >= threshold)
+      .select(col("id_a"), col("id_b"), col("side"))
   }
 
   /** SimHash near-dup pairs: bucket by the signature split into
@@ -491,9 +559,7 @@ object Dedup {
     * of shuffling. */
   def connectedComponentsAdaptive(pairs: DataFrame,
                                   driverCap: Int = 100000): DataFrame = {
-    // no one-task read here: `pairs` is lazy for most callers, and
-    // coalescing would squeeze its upstream stage into one task
-    collectAtMost(pairs.select(col("id_a"), col("id_b")), driverCap, oneTask = false) match {
+    collectAtMost(pairs.select(col("id_a"), col("id_b")), driverCap) match {
       case None => connectedComponentsStar(pairs)
       case Some(capped) =>
         val idType = pairs.schema("id_a").dataType
@@ -505,16 +571,72 @@ object Dedup {
     }
   }
 
+  /** The near-dup drop set of hybrid-verified (id_a, id_b, side) pairs
+    * — the one tail of [[dedupNearDups]] and [[dedupIncremental]]:
+    * every side-0 id verified against another side (a corpus dup, in
+    * admission), plus every id that is not the min id of its cluster
+    * under the side-0 pairs that touch no corpus dup. Up to
+    * `ccDriverCap` pairs come back in one single-task collect (the
+    * [[hybridVerify]] result reads only checkpointed or local rows)
+    * and the set is built on the driver by union-find: a local
+    * relation, bounded by the same cap, that the final anti-join
+    * broadcasts. Above the cap it stays distributed (shuffled
+    * anti-joins, then [[connectedComponentsAdaptive]]). The cap picks
+    * the mechanism, never the result. One column, `idCol`, of id_a's
+    * type. */
+  private def connectedComponentsDropSet(pairs: DataFrame, idCol: String,
+                                         ccDriverCap: Int): DataFrame = {
+    val idType = pairs.schema("id_a").dataType
+    // side-0 id_b are side-0 ids: cast back from the band union's
+    // widened type so the union-find sees one id type
+    val verified = pairs.select(col("id_a"),
+      when(col("side") === 0, col("id_b")).cast(idType).as("id_b"), col("side"))
+    collectAtMost(verified, ccDriverCap) match {
+      case Some(rows) =>
+        val corpusDups = rows.iterator.filter(_.getInt(2) != 0).map(_.get(0)).toSet
+        val intra = rows.iterator
+          .filter(r => r.getInt(2) == 0 && !corpusDups(r.get(0)) && !corpusDups(r.get(1)))
+          .map(r => (r.get(0), r.get(1)))
+        val nonCanonical = unionFind(intra, idType).collect { case (id, c) if id != c => id }
+        import scala.jdk.CollectionConverters._
+        pairs.sparkSession.createDataFrame(
+          (corpusDups ++ nonCanonical).toSeq.map(Row(_)).asJava,
+          StructType(Seq(StructField(idCol, idType))))
+      case None =>
+        val corpusDups = verified.where(col("side") =!= 0).select(col("id_a").as("id"))
+        val intraPairs = verified.where(col("side") === 0)
+          .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
+          .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
+        val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
+          .where(col("component") < col("id")).select(col("id"))
+        corpusDups.union(nonCanonical).select(col("id").as(idCol))
+    }
+  }
+
   /** At most `cap` rows of `df` from one bounded collect, or None when
-    * it holds more. `oneTask` reads every partition in ONE task under
-    * the limit (coalesce(1)): a plain `limit(n).collect()` goes through
-    * `executeTake`'s scale-up, which runs a second job whenever the
-    * first partition holds fewer than n rows. Only for frames that are
-    * already materialized (checkpointed): over a lazy input the
-    * coalesce would squeeze the upstream stage into one task. */
-  private[graft] def collectAtMost(df: DataFrame, cap: Int,
-                                   oneTask: Boolean): Option[Array[Row]] = {
-    val rows = (if (oneTask) df.coalesce(1) else df).limit(cap + 1).collect()
+    * it holds more. A frame of already-materialized rows (filters,
+    * projections and unions over checkpointed or local relations) is
+    * read in ONE task under the limit (coalesce(1)): a plain
+    * `limit(n).collect()` goes through `executeTake`'s scale-up, which
+    * runs a second job whenever the first partition holds fewer than n
+    * rows. Any other frame takes the plain limit, so no upstream stage
+    * (a scan, a join, an aggregate) is ever squeezed into one task. A
+    * frame that optimizes to a local relation is read from that plan
+    * as it is, with no job and no second optimizer pass. */
+  private[graft] def collectAtMost(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project, Union}
+    val plan = df.queryExecution.optimizedPlan
+    val materialized = plan.find {
+      case r: org.apache.spark.sql.execution.LogicalRDD => !r.rdd.isCheckpointed
+      case _: LocalRelation | _: Project | _: Filter | _: Union => false
+      case _ => true
+    }.isEmpty
+    val bounded = plan match {
+      case _: LocalRelation => df
+      case _ if materialized => df.coalesce(1).limit(cap + 1)
+      case _ => df.limit(cap + 1)
+    }
+    val rows = bounded.collect()
     Option.when(rows.length <= cap)(rows)
   }
 
@@ -657,7 +779,17 @@ object Dedup {
     * document). The survivor set matches the all-exact formulation
     * ([[lshExactPairs]]) up to the hybrid's ≈2e−10-per-pair
     * divergence bound (see [[lshHybridPairs]]), and is a
-    * deterministic function of the data either way. */
+    * deterministic function of the data either way.
+    *
+    * The tail is admission's ([[dedupIncremental]] against an empty
+    * corpus): the [[hybridVerify]] result (a filter over checkpointed
+    * scores ∪ a local relation of the near sliver) comes back in one
+    * single-task collect under `ccDriverCap`, the non-canonical ids
+    * are found by driver union-find, and the returned frame is `df`
+    * anti-joined with that local drop set and the exact-copy losers
+    * (which scale with the corpus and stay distributed). Above the cap
+    * the components run distributed. The returned frame is lazy; it
+    * does not read the staged signatures. */
   def dedupNearDups(df: DataFrame, threshold: Double,
                     idCol: String = "doc_id", textCol: String = "text",
                     cacheKey: Option[String] = None,
@@ -674,7 +806,7 @@ object Dedup {
     // reps equals its min over all members (each rep IS its group's
     // min), and texts shorter than `shingleSize` never pair in
     // either formulation (they bypass the collapse and survive;
-    // the SAME size is passed to lshHybridPairs below, so the two
+    // the SAME size is passed to the verify below, so the two
     // eligibility cutoffs cannot drift). Same 2^-64 fp-collision
     // assumption hybridVerify documents.
     //
@@ -711,13 +843,14 @@ object Dedup {
       .select(col("_id").as(idCol))
     // distinct-text reps get their own staged-signature key — the
     // unsuffixed key may already hold the full-corpus artifact for
-    // other operators sharing it (dedupIncremental, StreamNearDup)
-    val pairs = lshHybridPairs(reps, threshold, idCol, textCol,
-      shingleSize = shingleSize, cacheKey = cacheKey.map(_ + "#reps"))
-    val comps = connectedComponentsAdaptive(pairs, ccDriverCap)
-    val repLosers = comps.where(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(repLosers.union(exactLosers), Seq(idCol), "left_anti")
+    // other operators sharing it (dedupIncremental, StreamNearDup).
+    // Banding and margin are lshHybridPairs' defaults. Near texts are
+    // fetched from `df`: near ids are rep ids, and a rep id's rows in
+    // `df` are its rows in `reps`, without re-running the groups
+    val pairs = hybridPairs(reps, df, threshold, idCol, textCol, shingleSize,
+      bands = 16, rowsPerBand = 8, margin = 0.3, cacheKey.map(_ + "#reps"))
+    df.join(connectedComponentsDropSet(pairs, idCol, ccDriverCap).union(exactLosers),
+      Seq(idCol), "left_anti")
   }
 
   /** INCREMENTAL near-dup dedup: admit the rows of `batch` that are
@@ -740,8 +873,9 @@ object Dedup {
     * final anti-join by id need not agree on which rows drop.
     *
     * Scale shape: ONE window over the batch rows (one exchange keyed
-    * on the raw-text fingerprint, bounded by the increment) finds the
-    * exact-copy groups. ONE candidate pipeline follows: the batch-rep
+    * on the raw-text fingerprint, bounded by the increment, run once
+    * and checkpointed) finds the exact-copy groups. ONE candidate
+    * pipeline follows: the batch-rep
     * band view is equi-joined on (band, bucket) against the union of
     * the batch and corpus band views, each row tagged with its side,
     * so the same join yields cross (batch × corpus) and intra (batch
@@ -750,15 +884,20 @@ object Dedup {
     * intra pairs that touch none of them go to one components pass.
     * Verifying intra pairs of corpus dups and dropping them afterwards
     * gives the same pair set as verifying survivors only, since each
-    * pair's verdict is independent of the others. Up to `ccDriverCap`
-    * verified pairs (bounded by the candidate count) come back in one
-    * collect and the drop set is built on the driver, so the final
-    * anti-join broadcasts a local relation bounded by the same cap;
-    * above it the drop set stays distributed (shuffled anti-joins,
-    * [[connectedComponentsAdaptive]]). The cap picks the mechanism,
-    * never the result. The corpus is touched ONLY through its
-    * signature table (id + k longs, ~100× smaller than the corpus
-    * text) — with `corpusCacheKey` that artifact is staged once per
+    * pair's verdict is independent of the others. The tail is shared
+    * with [[dedupNearDups]]: the [[hybridVerify]] result (a filter
+    * over checkpointed scores ∪ a local relation of the near sliver,
+    * re-checked on the driver) comes back in one single-task collect
+    * when it holds up to `ccDriverCap` pairs, and the drop set is
+    * built on the driver, so the final anti-join broadcasts a local
+    * relation bounded by the same cap; above it the drop set stays
+    * distributed (shuffled anti-joins, [[connectedComponentsAdaptive]]).
+    * The cap picks the mechanism, never the result. The returned
+    * frame is lazy, but it never re-runs the window: it reads the
+    * batch, the checkpointed window output and the drop set. The
+    * corpus is touched ONLY through its signature table (id + k
+    * longs, ~100× smaller than the corpus text) — with
+    * `corpusCacheKey` that artifact is staged once per
     * session, and at warehouse scale it is the signature table you'd
     * maintain as a persistent side output of admission (append each
     * batch's admitted signatures). Per-batch work scales with |batch|
@@ -785,15 +924,21 @@ object Dedup {
     // Sub-shingle-length texts bypass on both sides (no signature ⇒
     // never pair ⇒ always admitted, pre and post).
     // `_rep` is the group min id, null for a null or sub-shingle text.
-    // Staged: the batch signatures and the near-threshold text fetch
-    // both read the reps, and each read would otherwise re-run the
-    // window.
+    // Checkpointed: the batch signatures, the near-threshold text fetch
+    // and the exact losers of the returned frame all read it, and each
+    // read would otherwise re-run the window (a cache could not be
+    // released before the caller consumes the returned frame). The
+    // window's one exchange is sized to the parallelism the signature
+    // work wants (fanOut's target), so the reps come out fanned out
+    // and fanOut adds no second exchange.
     val tagged = batch
+      .select(col(idCol), col(textCol), xxhash64(col(textCol)).as("_fp"))
+      .repartition(batch.sparkSession.sparkContext.defaultParallelism, col("_fp"))
       .select(col(idCol), col(textCol),
         when(length(col(textCol)) >= shingleSize,
-          min(col(idCol)).over(Window.partitionBy(xxhash64(col(textCol)))))
+          min(col(idCol)).over(Window.partitionBy(col("_fp"))))
           .as("_rep"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     val batchReps = tagged.where(col(idCol) === col("_rep"))
       .select(col(idCol), col(textCol))
     // null-safe: a null id or a null `_rep` is no loser (admitted)
@@ -809,36 +954,9 @@ object Dedup {
       val pairs = hybridVerify(bandCandidates(Seq(bSig, cSig), bands, rowsPerBand),
         Seq(bSig -> batchReps, cSig -> corpus),
         threshold, margin, numHashes, shingleSize, idCol, textCol)
-      // the near-dup drop set: the corpus dups, plus every survivor
-      // that is not the min id of its intra-batch cluster. Built on the
-      // driver when the verified pairs fit under the cap
-      val idType = pairs.schema("id_a").dataType
-      // side-0 id_b are batch ids: cast back from the band union's
-      // widened type so the driver union-finds see one id type
-      val verified = pairs.select(col("id_a"),
-        when(col("side") === 0, col("id_b")).cast(idType).as("id_b"), col("side"))
-      val nearDrop = collectAtMost(verified, ccDriverCap, oneTask = true) match {
-        case Some(rows) =>
-          val corpusDups = rows.iterator.filter(_.getInt(2) == 1).map(_.get(0)).toSet
-          val intra = rows.iterator
-            .filter(r => r.getInt(2) == 0 && !corpusDups(r.get(0)) && !corpusDups(r.get(1)))
-            .map(r => (r.get(0), r.get(1)))
-          val nonCanonical = unionFind(intra, idType).collect { case (id, c) if id != c => id }
-          import scala.jdk.CollectionConverters._
-          pairs.sparkSession.createDataFrame(
-            (corpusDups ++ nonCanonical).toSeq.map(Row(_)).asJava,
-            StructType(Seq(StructField(idCol, idType))))
-        case None =>
-          val corpusDups = verified.where(col("side") === 1).select(col("id_a").as("id"))
-          val intraPairs = verified.where(col("side") === 0)
-            .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
-            .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-          val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
-            .where(col("component") < col("id")).select(col("id"))
-          corpusDups.union(nonCanonical).select(col("id").as(idCol))
-      }
+      val nearDrop = connectedComponentsDropSet(pairs, idCol, ccDriverCap)
       batch.join(nearDrop.union(exactLosers), Seq(idCol), "left_anti")
-    } finally { tagged.unpersist(); if (!corpusCached) cSig.unpersist(); () }
+    } finally { if (!corpusCached) cSig.unpersist(); () }
   }
 
   /** Exact n-gram Jaccard over a bounded pair set (for oracle-sized

@@ -227,15 +227,21 @@ class DedupSimSpec extends AnyFunSuite {
 
   test("dedupIncremental: int batch ids against long corpus ids") {
     // the band union widens the batch ids of intra pairs to the corpus
-    // id type; the drop set must still use the batch's own id type
+    // id type; the drop set must still use the batch's own id type.
+    // At 0.86 every non-identical candidate is in the near band
+    // (0.86 + margin > 1), so the driver-side re-check looks up batch
+    // ids of both sides by their widened keys: D~D' (Jaccard 0.852)
+    // fails it, A2~corpus A (0.864) passes
     val batch = Seq((1, loremD), (2, loremD.replace("oncall", "platform")), (3, loremA2))
       .toDF("doc_id", "text")
     // caps: driver drop set; distributed anti-joins with driver
-    // components (2 verified pairs, 1 intra); distributed throughout
-    Seq(100000, 1, 0).foreach { cap =>
-      val kept = Dedup.dedupIncremental(batch, replicaCorpus, threshold = 0.5, ccDriverCap = cap)
+    // components (at 0.5: 2 verified pairs, 1 intra); distributed
+    // throughout
+    for ((threshold, want) <- Seq(0.5 -> Seq(1), 0.86 -> Seq(1, 2)); cap <- Seq(100000, 1, 0)) {
+      val kept = Dedup.dedupIncremental(batch, replicaCorpus, threshold, ccDriverCap = cap)
       assert(kept.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
-      assert(kept.select("doc_id").as[Int].collect().toSeq == Seq(1), s"cap $cap")
+      assert(kept.select("doc_id").as[Int].collect().sorted.toSeq == want,
+        s"threshold $threshold cap $cap")
     }
   }
 
@@ -273,20 +279,46 @@ class DedupSimSpec extends AnyFunSuite {
         .select("doc_id").collect()
       ()
     }
-    // 15 on this fixture; 25 with the exact-copy groups aggregated
+    // 14 on this fixture; 15 with the exact-copy window run again by
+    // the final anti-join, 25 with the exact-copy groups aggregated
     // twice and the drop set built by shuffled anti-joins
-    assert(jobs <= 16, s"$jobs Spark jobs for one admission")
+    assert(jobs <= 14, s"$jobs Spark jobs for one admission")
+  }
+
+  test("dedupNearDups builds and anti-joins in a bounded number of Spark jobs") {
+    val jobs = jobsOf {
+      Dedup.dedupNearDups(nearCorpus, threshold = 0.86).select("doc_id").collect()
+      ()
+    }
+    // 20 on this fixture, whose near-threshold band holds every
+    // non-identical candidate (0.86 + margin > 1); 26 with the near
+    // sliver re-checked by a shuffled text fetch and shingle-set joins
+    assert(jobs <= 20, s"$jobs Spark jobs for one build")
   }
 
   test("collectAtMost over a checkpointed frame: one job, over-cap detected") {
     val df = spark.range(0, 100, 1, 4).toDF("id").localCheckpoint()
     assert(df.rdd.getNumPartitions == 4)
     var under: Option[Array[org.apache.spark.sql.Row]] = None
-    assert(jobsOf { under = Dedup.collectAtMost(df, 100, oneTask = true) } == 1)
+    assert(jobsOf { under = Dedup.collectAtMost(df, 100) } == 1)
     assert(under.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 100L))
     var over: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
-    assert(jobsOf { over = Dedup.collectAtMost(df, 99, oneTask = true) } == 1)
+    assert(jobsOf { over = Dedup.collectAtMost(df, 99) } == 1)
     assert(over.isEmpty)
+    // a local relation is read from its plan, with no job at all
+    assert(jobsOf { under = Dedup.collectAtMost(Seq(1L, 2L).toDF("id"), 100) } == 0)
+    assert(under.map(_.map(_.getLong(0)).toSeq).contains(Seq(1L, 2L)))
+    // a lazy input, also an RDD that is not checkpointed, is never
+    // squeezed into one task: the limit reads it partition by
+    // partition, in more than one job (the explode hides the row
+    // count, which would otherwise let the optimizer drop the limit)
+    val lazyRdd = spark.createDataFrame(spark.sparkContext.parallelize(0L until 100L, 4)
+      .map(org.apache.spark.sql.Row(_)), df.schema)
+    Seq(spark.range(0, 100, 1, 4).select(explode(array($"id")).as("id")), lazyRdd)
+      .foreach { lazyDf =>
+        assert(jobsOf { under = Dedup.collectAtMost(lazyDf, 100) } > 1)
+        assert(under.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 100L))
+      }
   }
 
   test("dedupIncremental with an empty corpus equals dedupNearDups") {
@@ -369,30 +401,54 @@ class DedupSimSpec extends AnyFunSuite {
     assert(got.forall(truth.contains), "no false positives at 0.98")
   }
 
-  test("lshHybridPairs matches lshExactPairs including near-threshold pairs") {
+  // clear dups (0, 1, 3), unrelated docs, and a partly overlapping
+  // pair (4 vs 5, Jaccard 0.69)
+  private lazy val nearCorpus = {
     val common = "shared middle segment with plenty of overlapping text content " +
       "that keeps the five gram sets partially aligned between the documents"
-    val corpus = Seq(
-      (0L, loremA), (1L, loremA2), (2L, loremB), (3L, loremA), // clear dups + unrelated
-      (4L, "unique prefix alpha beta gamma " + common),        // borderline pair vs 5
+    Seq(
+      (0L, loremA), (1L, loremA2), (2L, loremB), (3L, loremA),
+      (4L, "unique prefix alpha beta gamma " + common),
       (5L, common + " unique suffix delta epsilon zeta"),
       (6L, "completely different content about distributed query engines and columnar storage")
     ).toDF("doc_id", "text")
+  }
+
+  test("lshHybridPairs matches lshExactPairs including near-threshold pairs") {
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = ids(Dedup.lshExactPairs(corpus, threshold = 0.5))
-    // default margin: estimator for clear pairs, exact re-join near 0.5
-    assert(ids(Dedup.lshHybridPairs(corpus, threshold = 0.5)) == exact)
+    val exact = ids(Dedup.lshExactPairs(nearCorpus, threshold = 0.5))
+    // default margin: estimator for clear pairs, exact re-check near 0.5
+    assert(ids(Dedup.lshHybridPairs(nearCorpus, threshold = 0.5)) == exact)
+    // the near sliver re-checked on the driver (the default cap) and by
+    // the distributed joins (cap 0). At 0.86 every non-identical
+    // candidate is near (0.86 + margin > 1) and A~A2 (Jaccard 0.864)
+    // passes, so the driver branch leaves a local relation in the plan,
+    // the distributed one only checkpointed rows
+    val exact86 = ids(Dedup.lshExactPairs(nearCorpus, threshold = 0.86))
+    assert(exact86.contains((0L, 1L)))
+    val sig = Dedup.signatureTable(nearCorpus, numHashes = 128, shingleSize = 5)
+      .localCheckpoint()
+    def verify(nearCap: Int) = Dedup.hybridVerify(Dedup.bandCandidates(Seq(sig), 16, 8),
+      Seq(sig -> nearCorpus), 0.86, 0.3, 128, 5, "doc_id", "text", nearCap)
+    def hasLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val onDriver = verify(1000)
+    assert(hasLocal(onDriver), "no near-threshold pair re-checked on the driver")
+    assert(ids(onDriver) == exact86)
+    val distributed = verify(0)
+    assert(!hasLocal(distributed))
+    assert(ids(distributed) == exact86)
     // degenerate margins: all-exact (margin 1) and all-estimator (margin 0)
     // must also agree on this corpus (clear pairs are clear by construction)
-    assert(ids(Dedup.lshHybridPairs(corpus, threshold = 0.5, margin = 1.0)) == exact)
+    assert(ids(Dedup.lshHybridPairs(nearCorpus, threshold = 0.5, margin = 1.0)) == exact)
     // high threshold: threshold + margin > 1 leaves no estimator
     // fast-accept, so identical texts ride the fingerprint
     // short-circuit — (0,3) must pair, near-dups must not, and the
     // result still matches the all-exact formulation
-    val exactHi = ids(Dedup.lshExactPairs(corpus, threshold = 0.9))
+    val exactHi = ids(Dedup.lshExactPairs(nearCorpus, threshold = 0.9))
     assert(exactHi.contains((0L, 3L)) && !exactHi.contains((0L, 1L)))
-    assert(ids(Dedup.lshHybridPairs(corpus, threshold = 0.9)) == exactHi)
+    assert(ids(Dedup.lshHybridPairs(nearCorpus, threshold = 0.9)) == exactHi)
   }
 
   test("signatureTable: same cache key returns the same staged artifact") {

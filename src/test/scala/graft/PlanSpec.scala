@@ -203,6 +203,39 @@ class PlanSpec extends AnyFunSuite {
     assert(sides == Set(0, 1), s"candidate sides $sides")
   }
 
+  /** Final executed plans of the Dataset actions `body` runs, in order
+    * (eager checkpoints included). A sentinel action run afterwards
+    * marks the point where every earlier one has been delivered (the
+    * listener bus keeps their order). */
+  private def plansOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sentinel = s"plans-of-end-${System.nanoTime()}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains(sentinel)) drained.countDown()
+        else { plans.add(plan.split("== Initial Plan ==").head); () }
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(sentinel)).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toList
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Keys of the shuffle (non-broadcast) exchanges in `plan`. */
+  private def shuffleKeys(plan: String): List[String] =
+    "(?<!Broadcast)Exchange hashpartitioning\\((\\w+#\\d+)".r
+      .findAllMatchIn(plan).map(_.group(1)).toList
+
   test("incremental dedup: one fingerprint exchange for exact copies; under the cap the drop set is local") {
     // a corpus near-dup, an intra-batch near-dup pair and an exact
     // copy, so the corpus dups, the non-canonical ids and the exact
@@ -215,19 +248,28 @@ class PlanSpec extends AnyFunSuite {
     Seq((100L, a)).toDF("doc_id", "text").write.parquet(s"$dir/corpus")
     Seq((1L, a.replace("slowly", "quickly")), (2L, d), (3L, d.replace("oncall", "platform")),
       (4L, d)).toDF("doc_id", "text").write.parquet(s"$dir/batch")
-    val admitted = graft.operators.Dedup.dedupIncremental(spark.read.parquet(s"$dir/batch"),
-      spark.read.parquet(s"$dir/corpus"), threshold = 0.5)
-    assert(admitted.select("doc_id").as[Long].collect().toSeq == Seq(2L))
-    val plan = executedPlan(admitted).split("== Initial Plan ==").head
+    var admitted: DataFrame = null
+    val plans = plansOf {
+      admitted = graft.operators.Dedup.dedupIncremental(spark.read.parquet(s"$dir/batch"),
+        spark.read.parquet(s"$dir/corpus"), threshold = 0.5)
+      assert(admitted.select("doc_id").as[Long].collect().toSeq == Seq(2L))
+    }
     // the exact-copy groups come from ONE window over the batch rows:
-    // one exchange keyed on the raw-text fingerprint, no aggregate
-    val keys = "(?<!Broadcast)Exchange hashpartitioning\\((\\w+#\\d+)".r
-      .findAllMatchIn(plan).map(_.group(1)).toList
-    assert(keys.size == 1, s"expected one shuffle exchange, found ${keys.size}:\n$plan")
-    assert(s"xxhash64\\(text#\\d+, 42\\) AS \\Q${keys.head}\\E".r.findFirstIn(plan).isDefined,
-      s"the exchange must be keyed on the text fingerprint:\n$plan")
-    assert("Aggregate\\(keys=\\[[^\\]]*(xxhash64|_fp)".r.findFirstIn(plan).isEmpty,
-      s"exact-copy groups must not be aggregated:\n$plan")
+    // over the whole admission, one exchange keyed on the raw-text
+    // fingerprint, and no aggregate over it
+    def fpKeys(p: String) = shuffleKeys(p).filter(k =>
+      s"xxhash64\\(text#\\d+, 42\\) AS \\Q$k\\E".r.findFirstIn(p).isDefined)
+    assert(plans.map(fpKeys(_).size).sum == 1,
+      s"expected one fingerprint exchange:\n${plans.mkString("\n")}")
+    // the plan that runs it (the window's checkpoint) shuffles nothing else
+    val window = plans.find(fpKeys(_).nonEmpty).get
+    assert(shuffleKeys(window).size == 1, s"expected one shuffle exchange:\n$window")
+    plans.foreach(p => assert("Aggregate\\(keys=\\[[^\\]]*(xxhash64|_fp)".r.findFirstIn(p).isEmpty,
+      s"exact-copy groups must not be aggregated:\n$p"))
+    // ... and it runs before the result is returned: the final plan
+    // reads the checkpointed groups and shuffles nothing
+    val plan = executedPlan(admitted).split("== Initial Plan ==").head
+    assert(shuffleKeys(plan).isEmpty, s"the final plan must not shuffle:\n$plan")
     // the near-dup drop set was built on the driver: a local relation,
     // and no shuffled join against the corpus dups
     assert("LocalTableScan \\[doc_id#".r.findFirstIn(plan).isDefined,
