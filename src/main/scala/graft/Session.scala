@@ -16,8 +16,7 @@ object Session {
 
   def local(appName: String = "graft", cores: Int = cpus,
             warehouseDir: Option[String] = None): SparkSession = {
-    val builder0 = SparkSession
-      .builder()
+    val builder0 = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
     val spark = warehouseDir.foldLeft(builder0)(
@@ -49,7 +48,7 @@ object Session {
     * batch (experimental.extraOptimizations) runs after it and does.
     * Idempotent across both registrations (the rule skips existing
     * aggregates), and across repeat calls on a reused session. */
-  def registerLateRules(spark: SparkSession): Unit =
+  private def registerLateRules(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.SemiAntiRightDedup))
       spark.experimental.extraOptimizations ++= Seq(graft.plans.SemiAntiRightDedup)

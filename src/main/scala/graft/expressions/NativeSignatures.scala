@@ -194,16 +194,13 @@ object NativeSignatures {
     if (union > 0) inter / union else 0.0
   }
 
+  /** Distinct n-char shingles of the lowercased string, in
+    * first-occurrence order. Each kept shingle is copied out of the
+    * [[eachShingle]] view: the view's backing array can be the input
+    * row's buffer, which the next row overwrites. */
   def charShinglesEval(str: UTF8String, n: Int): ArrayData = {
-    val s = str.toLowerCase
-    val len = s.numChars()
-    if (len < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    var i = 0
-    while (i <= len - n) {
-      seen.add(s.substring(i, i + n))
-      i += 1
-    }
+    eachShingle(str, n)(sh => if (!seen.contains(sh)) seen.add(sh.copy()))
     new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
 

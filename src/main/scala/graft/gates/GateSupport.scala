@@ -246,31 +246,18 @@ private[graft] object GateSupport {
     * this to keys×state, same reasoning). Conf is restored afterwards
     * — the stream captures it at start.
     *
-    * Checkpoint retention is LIFECYCLE-sized the same way (round 16):
-    * these are one-shot AvailableNow replays whose checkpoint dir is
-    * deleted the moment the query finishes, so retaining the default
-    * 100 batches of state/WAL files for a recovery that can never
-    * happen buys nothing — the setting states the gates' lifecycle,
-    * and a long-lived production stream keeps its SLA-driven retention
-    * via SPARK_GRAFT_STREAM_RETAIN. Measured HONESTLY (round 16,
-    * plans/r16/ab_stream.txt + the retain-env bench A/B): the
-    * fixed-variant-order in-JVM A/B suggested 0.08-0.45 s/gate, but a
-    * same-protocol bench subset with SPARK_GRAFT_STREAM_RETAIN=100 vs
-    * 1 came out a WASH (±2% family-wide) — the A/B's constant variant
-    * order (retain1 always directly after default) likely manufactured
-    * the gap, so retention is recorded NEUTRAL at gate state size, not
-    * a win. The same experiments did settle the rest of the lever
-    * space: RocksDBStateStoreProvider (±changelog checkpointing) is
-    * neutral-to-WORSE here (x47b 2.85→3.44 — 16 tiny stores pay
-    * RocksDB's per-instance open/commit constants), and
-    * maintenanceInterval/minDeltasForSnapshot move nothing. */
+    * Checkpoint retention is sized to the same lifecycle: these are
+    * one-shot AvailableNow replays whose checkpoint dir is deleted the
+    * moment the query finishes, so one retained batch is all a gate
+    * can use (a long-lived production stream sets its own retention).
+    * Retaining Spark's default 100 measured the same at gate state
+    * size; RocksDB and the maintenance settings were no better. */
   def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val RETAIN = "spark.sql.streaming.minBatchesToRetain"
-    val retain = sys.env.getOrElse("SPARK_GRAFT_STREAM_RETAIN", "1")
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevRetain = s.conf.getOption(RETAIN)
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s.conf.set(RETAIN, retain)
+    s.conf.set(RETAIN, "1")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       prevRetain match {
@@ -287,8 +274,7 @@ private[graft] object GateSupport {
     * per-store per-batch commit overhead — so the clamp ceiling is as
     * load-bearing as the floor. At fixture scale (sf0.1 events
     * ≈ 1.2 MB) this stays at the minimum; at sf1 (≈ 12 MB) it lands
-    * on the measured sweet spot of 8. Same bytes-per-partition rule
-    * Bench applies to batch shuffles: the constant is the
+    * on the measured sweet spot of 8. The constant is the
     * per-partition payload, not the partition count. */
   def streamPartitionsFor(stagedDir: String): Int = {
     def walk(f: java.io.File): Long =

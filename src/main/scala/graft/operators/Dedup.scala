@@ -486,62 +486,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Connected components over a near-dup pair set by iterative
-    * min-label propagation: label(v) ← min(label(v), min label of
-    * neighbors) until fixpoint. Near-dup clusters have tiny diameter,
-    * so this converges in a handful of join+aggregate rounds; min-label
-    * propagation needs O(diameter) rounds, so if `maxIter` rounds pass
-    * without reaching the fixpoint (a chain-shaped graph — common in
-    * shingled text, where A~B~C without A~C), the call ESCALATES to
-    * [[connectedComponentsStar]] (O(log²n) rounds on any shape) rather
-    * than ever returning non-converged labels.
-    * Returns (id, component) where component = min id in the cluster.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // each round references the previous one TWICE (labels ⋈ f(edges,
-    // labels)), so a lazy/persisted chain doubles the logical plan per
-    // iteration — localCheckpoint (eager) truncates lineage so round
-    // N's plan is O(1), not O(2^N).
-    // Init folds the first propagation in: label(v) = min(v, Γ(v))
-    // directly from the symmetric edge set — for the clique-heavy
-    // near-dup graphs this IS the fixpoint, so the loop usually runs
-    // exactly one confirming round instead of two.
-    var labels = edges.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("component"))
-      .select(col("src").as("id"), col("component"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("component")).as("ncomp"))
-      // the eager checkpoint is the one real job per round; the
-      // convergence flag is carried as a column so reading it back is
-      // a short scan of checkpointed partitions, not a recompute
-      val updated = labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("ncomp"), col("component")))
-            .as("component"),
-          (coalesce(col("ncomp"), col("component")) < col("component")).as("_chg"))
-        .localCheckpoint()
-      val changed = updated
-        .agg(coalesce(sum(when(col("_chg"), 1L).otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      labels = updated.drop("_chg")
-      converged = changed == 0
-      i += 1
-    }
-    edges.unpersist()
-    // Never hand back partial labels: past maxIter the graph has a
-    // component with diameter > maxIter, exactly the shape the star
-    // algorithm solves in O(log²n) rounds regardless of diameter.
-    if (converged) labels else connectedComponentsStar(pairs)
-  }
-
   /** Adaptive connected components: a pair set under `driverCap` rows
     * (the common case — near-dup pairs are bounded by the band join's
     * collision count, orders of magnitude below the corpus, and a
@@ -688,11 +632,15 @@ object Dedup {
     parent.keySet().asScala.toSeq.map(id => id -> find(id)).toMap
   }
 
+  /** O(log² n) rounds means 25 covers any physically realizable graph. */
+  private val StarMaxRounds = 25
+
   /** Connected components by alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14): converges in O(log² n) rounds on ANY graph shape,
     * where plain min-label propagation needs O(diameter) rounds — the
-    * upgrade path when dup chains get long at corpus scale.
+    * distributed path of [[connectedComponentsAdaptive]] above its
+    * driver cap, where dup chains get long at corpus scale.
     *
     *  - large-star: every node's neighbors larger than the node's
     *    current minimum attach directly to that minimum;
@@ -702,8 +650,10 @@ object Dedup {
     * set E as (u,v) with u > v invariant; each round computes per-node
     * min neighbor m(u) and rewrites (u,v) → (v, m(u)); fixpoint when
     * no edge changes. Same interface/result contract as
-    * [[connectedComponents]]: (id, component = min id in cluster). */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    * [[connectedComponentsAdaptive]]: (id, component = min id in
+    * cluster). Fails loudly if `StarMaxRounds` rounds do not reach
+    * the fixpoint. */
+  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
     // Edge invariant: u > v (the component representative is the
     // smallest id). localCheckpoint (eager) per round: each star op
     // references the previous edge set twice, so an unbroken lineage
@@ -747,7 +697,7 @@ object Dedup {
     var edgeCount = edges.count()
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < StarMaxRounds) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       // converged when a full L+S round leaves the edge set unchanged:
       // no new edges AND same cardinality (a shrinking set also has an
@@ -760,11 +710,10 @@ object Dedup {
       edgeCount = nextCount
       i += 1
     }
-    // O(log²n) rounds means 25 covers any physically realizable graph;
-    // fail loudly rather than ever emit under-merged components.
+    // fail loudly rather than ever emit under-merged components
     if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds " +
-        s"($edgeCount edges remaining) — raise maxIter")
+      s"connectedComponentsStar did not converge in $StarMaxRounds rounds " +
+        s"($edgeCount edges remaining)")
     val labels = edges.select(col("u").as("id"), col("v").as("component"))
       .groupBy("id").agg(min("component").as("component"))
     val roots = labels.select(col("component")).distinct()
@@ -811,14 +760,13 @@ object Dedup {
     // assumption hybridVerify documents.
     //
     // Shuffle shape: text NEVER rides an exchange here. (_id, _fp) is
-    // one projected text scan (ids-only thereafter, 16 bytes/doc,
-    // checkpointed because two branches read it); the group-min agg
-    // and losers join are ids-only; rep ROWS come from a second
-    // corpus scan semi-joined to the rep ids (scanning again is
-    // strictly cheaper than shipping one document per distinct
-    // fingerprint through the aggregation exchange, and when the rep
-    // set is small — the replica-heavy case — AQE broadcasts it and
-    // the fetch is map-only).
+    // one projected text scan, ids-only thereafter (16 bytes/doc); the
+    // group-min aggregate and the losers join are ids-only; rep ROWS
+    // come from a second corpus scan semi-joined to the rep ids
+    // (scanning again is strictly cheaper than shipping one document
+    // per distinct fingerprint through the aggregation exchange, and
+    // when the rep set is small — the replica-heavy case — AQE
+    // broadcasts it and the fetch is map-only).
     // no fanOut here: one xxhash64 per row is scan-cheap, and the
     // fan-out repartition would shuffle the full text rows it exists
     // to avoid (the heavy signature math fans out inside
@@ -826,14 +774,9 @@ object Dedup {
     val idFp = df
       .where(length(col(textCol)) >= shingleSize)
       .select(col(idCol).as("_id"), xxhash64(col(textCol)).as("_fp"))
-    // idFp is deliberately NOT checkpointed: its two readers cost one
-    // extra projected scan each, cheaper than an eager ids
-    // materialization at fixture scale and scan-bandwidth-bound at
-    // 100 TB. groups IS checkpointed — two longs per distinct text,
-    // read by both the rep fetch and the losers join.
-    // groups is deliberately lazy: its two readers re-run an ids-only
-    // aggregation, cheaper than an eager checkpoint job at any scale
-    // where the input is bounded (and it is — see the scan note)
+    // Neither idFp nor groups is checkpointed: both are lazy, so each
+    // of groups' two readers (the rep fetch and the losers join)
+    // re-runs the projected scan and the ids-only aggregate.
     val groups = idFp.groupBy(col("_fp")).agg(min(col("_id")).as("_rep"))
     val reps = df
       .join(groups.select(col("_rep").as(idCol)), Seq(idCol), "left_semi")

@@ -39,7 +39,7 @@ object Ranks {
     * the same contract).
     *
     * Lifecycle: the cached frame backs the RETURNED plan, so it cannot
-    * be unpersisted here; long-lived sessions (BenchServe) release
+    * be unpersisted here; long-lived sessions release
     * accumulated caches via `spark.sqlContext.clearCache()` between
     * measurements. */
   def globalRowNumber(df: DataFrame, order: Seq[Column],

@@ -51,7 +51,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    `left_semi`/`left_anti` joins, whose Join node exists from the
   *    start (and after column pruning has narrowed the right side);
   *  - `spark.experimental.extraOptimizations` (applied by
-  *    Session/Verify/Bench at session build) lands it in the "User
+  *    `Session.local` at session build) lands it in the "User
   *    Provided Optimizers" batch, which runs AFTER the late
   *    "RewriteSubquery" batch where SQL `EXISTS`/`NOT EXISTS`/`IN`
   *    predicates become semi/anti joins (and whose trailing

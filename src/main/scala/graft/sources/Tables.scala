@@ -26,7 +26,7 @@ object Tables {
     *
     *  - Parquet TIMESTAMP(NANOS): Spark rejects it unless
     *    `spark.sql.legacy.parquet.nanosAsLong` is on (sessions created
-    *    by Session/Verify/Bench set it), with which it arrives as a
+    *    by `Session.local` set it), with which it arrives as a
     *    LONG of nanoseconds → integer-`div` to µs (not `/`, which is
     *    double division and loses precision above 2^53 ns — the same
     *    floor truncation DuckDB applies when reading ns Parquet);

@@ -7,15 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * Expectations fused frames) pin frames that back the RETURNED lazy
   * plan, so the operator cannot unpersist them itself — the
   * documented lifecycle contract is that long-lived sessions release
-  * them via `spark.sqlContext.clearCache()` between measurements
-  * (BenchServe's GC command). This spec pins BOTH halves of that
+  * them via `spark.sqlContext.clearCache()` between measurements.
+  * This spec pins BOTH halves of that
   * contract (round-14 verdict task 6):
   *  1. the operators' pins are registered with the SQL CacheManager
   *     (clearCache can see them — a raw rdd.persist would leak past
   *     it), and
   *  2. clearCache actually returns the session to zero persistent
-  *     RDDs — no net cached-RDD growth across a bench-style
-  *     run-then-GC cycle.
+  *     RDDs — no net cached-RDD growth across a run-then-clear
+  *     cycle.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -28,7 +28,8 @@ class CacheLifecycleSpec extends AnyFunSuite {
       s"dirty session before the cycle: ${sc.getPersistentRDDs.keys}")
 
     // every operator family that pins an internal frame, consumed the
-    // way Bench consumes it (full action through a sink/collect)
+    // way a long-lived session consumes it (full action through a
+    // sink/collect)
     val df = (1 to 5000).map(i => (i.toLong % 97, i.toLong, i * 0.5))
       .toDF("k", "seq", "v")
     graft.operators.Ranks.globalRowNumber(df, Seq(col("v"), col("seq")))

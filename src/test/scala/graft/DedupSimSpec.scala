@@ -58,13 +58,13 @@ class DedupSimSpec extends AnyFunSuite {
 
   test("connectedComponents: chain a-b, b-c merges into one cluster") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(comps(1L) == 1L && comps(2L) == 1L && comps(3L) == 1L)
-    assert(comps(10L) == 10L && comps(11L) == 10L)
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+    // driver union-find under the cap, and the distributed star
+    assert(Dedup.connectedComponentsAdaptive(pairs).as[(Long, Long)].collect().toMap == want)
+    assert(Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect().toMap == want)
   }
 
-  test("connectedComponentsStar equals label propagation on adversarial graph shapes") {
+  test("connectedComponentsStar equals driver union-find on adversarial graph shapes") {
     val rnd = new scala.util.Random(13)
     // a 60-node chain (worst case for O(diameter) propagation), a
     // 40-leaf star rooted at the max id, and a random sparse graph
@@ -73,11 +73,11 @@ class DedupSimSpec extends AnyFunSuite {
     val random = Seq.fill(80)((200L + rnd.nextInt(60), 200L + rnd.nextInt(60)))
       .filter(p => p._1 != p._2)
     val pairs = (chain ++ star ++ random).toDF("id_a", "id_b")
-    val viaProp = Dedup.connectedComponents(pairs, maxIter = 100)
+    val viaDriver = Dedup.connectedComponentsAdaptive(pairs)
       .as[(Long, Long)].collect().toMap
     val viaStar = Dedup.connectedComponentsStar(pairs)
       .as[(Long, Long)].collect().toMap
-    assert(viaStar == viaProp)
+    assert(viaStar == viaDriver)
     assert(viaStar(59L) == 0L) // chain fully collapsed to its min
     assert(viaStar(999L) == 100L)
   }
@@ -88,17 +88,15 @@ class DedupSimSpec extends AnyFunSuite {
     val random = Seq.fill(60)((100L + rnd.nextInt(50), 100L + rnd.nextInt(50)))
       .filter(p => p._1 != p._2)
     val pairs = (chain ++ random).toDF("id_a", "id_b")
-    val viaProp = Dedup.connectedComponents(pairs, maxIter = 100)
-      .as[(Long, Long)].collect().toMap
     // under the cap: driver union-find
     val viaDriver = Dedup.connectedComponentsAdaptive(pairs)
       .as[(Long, Long)].collect().toMap
-    assert(viaDriver == viaProp)
+    assert((0L to 40L).forall(viaDriver(_) == 0L)) // chain fully merged
     // cap forced to 0: must fall through to the distributed path and
     // still agree
     val viaFallthrough = Dedup.connectedComponentsAdaptive(pairs, driverCap = 0)
       .as[(Long, Long)].collect().toMap
-    assert(viaFallthrough == viaProp)
+    assert(viaFallthrough == viaDriver)
     // non-numeric ids: min is Spark's own ordering (lexicographic)
     val strPairs = Seq(("b", "a"), ("b", "c"), ("z", "y")).toDF("id_a", "id_b")
     val strComps = Dedup.connectedComponentsAdaptive(strPairs)
@@ -108,16 +106,6 @@ class DedupSimSpec extends AnyFunSuite {
     val empty = Dedup.connectedComponentsAdaptive(
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
     assert(empty.columns.toSeq == Seq("id", "component") && empty.count() == 0)
-  }
-
-  test("connectedComponents escalates past maxIter: 40-hop chain fully merges") {
-    // diameter 40 > maxIter 20 — propagation alone would return
-    // under-merged labels; the escalation to the star algorithm must
-    // deliver the exact fixpoint anyway.
-    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(chain, maxIter = 5)
-      .as[(Long, Long)].collect().toMap
-    assert(comps.size == 41 && comps.values.forall(_ == 0L))
   }
 
   test("production dedup entry points: 100+-hop chain, distributed CC branch") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Text
@@ -79,6 +81,37 @@ class NativeEquivalenceSpec extends AnyFunSuite {
                           substr(md5(concat('$salt', a, ' ', b)), 1, $w))),
              x -> x is not null)""")).as("oracle"))
     assert(composed.where(not($"native" <=> $"oracle")).count() == 0)
+  }
+
+  test("charShinglesEval equals the distinct code-point windows of the lowercased text") {
+    // independent reference: code-point windows of the lowercased
+    // string, distinct, in first-occurrence order
+    def reference(t: String, n: Int): Seq[String] = {
+      val cps = UTF8String.fromString(t).toLowerCase.toString.codePoints.toArray
+      if (cps.length < n) Nil
+      else cps.sliding(n).map(w => new String(w, 0, n)).toSeq.distinct
+    }
+    val texts = Seq(
+      "the quick brown fox", // ASCII
+      "naïve café über", // 2-byte
+      "日本語のテキスト断片", // 3-byte
+      "a😀b😀c🎉d", // 4-byte (surrogate pairs)
+      "ÀÉÎÕÜ ΑΒΓΔ ЖЗИ", // uppercase non-ASCII
+      "ab", "abc", "", // len < n, len == n, empty
+      "abcabcabcabc", "😀😀😀😀😀") // repeated windows
+    for (n <- Seq(1, 3, 5); t <- texts) {
+      val got = graft.expressions.NativeSignatures
+        .charShinglesEval(UTF8String.fromString(t), n)
+        .toArray[UTF8String](StringType).map(_.toString).toSeq
+      assert(got == reference(t, n), s"n=$n text=$t")
+    }
+    // through a query: each returned shingle owns its bytes, whatever
+    // buffer backed the input row
+    val rows = texts ++ (0 until 200).map(_ =>
+      (0 until rnd.nextInt(12)).map(_ => randToken).mkString(" "))
+    val got = rows.toDF("t").select(Text.charShingles($"t", 3)).as[Seq[String]]
+      .collect().toSeq
+    assert(got == rows.map(reference(_, 3)))
   }
 
   test("fused jaccardText equals jaccard over char-shingle arrays") {
