@@ -1,10 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DateType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native `m/d/yyyy` date parse/format (SURVEY.md §2.7 F3 — the
@@ -57,7 +55,7 @@ object NativeDates {
     * enforced afterwards (java.time's single-letter numeric fields
     * parse greedily, so `001/2/1992` is month 1); the year is exactly
     * 4 digits (the documented narrowing vs DateTimeFormatter's 4-19). */
-  def parseMdyEval(str: UTF8String): Any = {
+  def parseMdyEval(str: UTF8String): java.lang.Integer = {
     val n = str.numBytes
     if (n < 8) return null // shortest valid form is 1/1/0001
     var i = 0
@@ -117,45 +115,11 @@ object NativeDates {
     UTF8String.fromBytes(out)
   }
 
-  case class ParseMdyExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DateType
-    override def nullable: Boolean = true
-    override def prettyName: String = "parse_mdy_native"
-
-    override def nullSafeEval(v: Any): Any =
-      parseMdyEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""java.lang.Integer ${ev.value}_r =
-           |  (java.lang.Integer) graft.expressions.NativeDates.parseMdyEval($c);
-           |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ${ev.value}_r.intValue(); }""".stripMargin)
-
-    override protected def withNewChildInternal(c: Expression): ParseMdyExpr =
-      copy(child = c)
-  }
-
-  case class FormatMdyExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "format_mdy_native"
-
-    override def nullSafeEval(v: Any): Any =
-      formatMdyEval(v.asInstanceOf[Int])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeDates.formatMdyEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): FormatMdyExpr =
-      copy(child = c)
-  }
-
   def parseMdy(str: Column): Column =
-    ColumnBridge.column(ParseMdyExpr(ColumnBridge.expression(str)))
+    ColumnBridge.staticCall(this, "parseMdyEval", DateType, returnNullable = true)(str)
 
   /** Timestamp inputs are first truncated to DATE in the session time
     * zone — the same zone `date_format` would render them in. */
   def formatMdy(date: Column): Column =
-    ColumnBridge.column(FormatMdyExpr(ColumnBridge.expression(date.cast("date"))))
+    ColumnBridge.staticCall(this, "formatMdyEval", StringType)(date.cast("date"))
 }

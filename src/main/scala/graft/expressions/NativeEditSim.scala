@@ -2,12 +2,10 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Jaro-Winkler string similarity as a native codegen'd expression —
+/** Jaro-Winkler string similarity as a native codegen'd static call —
   * the record-linkage workhorse (Winkler 1990, public; the same
   * classic definition DuckDB's `jaro_winkler_similarity` implements,
   * which is what the oracle replays):
@@ -20,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Winkler boost: `jaro + l·0.1·(1 - jaro)` with `l` = common
   *    prefix length capped at 4, applied only when `jaro > 0.7`.
   *
-  * Spark has no built-in Jaro-Winkler (only levenshtein); a native
-  * `Expression` keeps blocked entity-resolution joins inside
-  * whole-stage codegen. Comparison is per UTF-16 char — exact for the
+  * Spark has no built-in Jaro-Winkler (only levenshtein); one static
+  * call keeps blocked entity-resolution joins inside whole-stage
+  * codegen. Comparison is per UTF-16 char — exact for the
   * ASCII/BMP names entity resolution runs on.
   */
 object NativeEditSim {
@@ -81,24 +79,6 @@ object NativeEditSim {
     jaro + l * 0.1 * (1.0 - jaro)
   }
 
-  case class JaroWinklerExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "jaro_winkler_native"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Double.valueOf(jaroWinklerEval(
-        a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (c1, c2) =>
-        s"${ev.value} = graft.expressions.NativeEditSim.jaroWinklerEval($c1, $c2);")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): JaroWinklerExpr = copy(left = l, right = r)
-  }
-
   def jaroWinkler(a: Column, b: Column): Column =
-    ColumnBridge.column(JaroWinklerExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    ColumnBridge.staticCall(this, "jaroWinklerEval", DoubleType)(a, b)
 }

@@ -1,10 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** robots.txt rule matching (RFC 9309) — the crawl-politeness
@@ -55,25 +53,6 @@ object NativeRobots {
     j == m // path exhausted: exact for anchored, still a prefix otherwise
   }
 
-  case class RobotsMatchExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "robots_match_native"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Boolean.valueOf(robotsMatchEval(
-        a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.expressions.NativeRobots.robotsMatchEval($a, $b);")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): RobotsMatchExpr =
-      copy(left = l, right = r)
-  }
-
   def robotsMatch(path: Column, pattern: Column): Column =
-    ColumnBridge.column(RobotsMatchExpr(
-      ColumnBridge.expression(path), ColumnBridge.expression(pattern)))
+    ColumnBridge.staticCall(this, "robotsMatchEval", BooleanType)(path, pattern)
 }

@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -19,11 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * integer ops. Same operator shape around them (tokenize → signature
   * → band → equi-join), ~50× less per-row cost.
   *
-  * Each expression generates code as a single static call into the
-  * JVM loop (`doGenCode` → `NativeSignatures.xxxEval`), so the
-  * enclosing projection stays inside whole-stage codegen — a
-  * CodegenFallback here would kick the whole stage back to the
-  * interpreted path.
+  * Each function generates code as a single static call into the
+  * JVM loop (`NativeSignatures.xxxEval`, through
+  * `ColumnBridge.staticCall` or an expression class that holds the
+  * hash constants), so the enclosing projection stays inside
+  * whole-stage codegen — a CodegenFallback here would kick the whole
+  * stage back to the interpreted path.
   */
 object NativeSignatures {
 
@@ -213,22 +215,6 @@ object NativeSignatures {
     z ^ (z >>> 31)
   }
 
-  /** SimHash-64 over an array<string> of tokens. */
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "simhash64_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(simhashEval(v.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeSignatures.simhashEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): SimHash64Expr =
-      copy(child = c)
-  }
-
   /** MinHash signature over an array<string> of shingles: one XXH64
     * base hash per shingle, `numHashes` affine rehashes (a·h+b with
     * SplitMix64-derived odd constants) — the standard trick that
@@ -313,46 +299,6 @@ object NativeSignatures {
       copy(child = c)
   }
 
-  /** Distinct character n-gram shingles of a (lowercased) string —
-    * one pass with a LinkedHashSet. The HOF formulation
-    * (transform(sequence…, substr) + array_distinct) measured ~11 s
-    * over 5000 docs at sf0.1; this runs in milliseconds. */
-  case class CharShinglesExpr(child: Expression, n: Int)
-      extends UnaryExpression {
-    require(n > 0, "shingle size must be positive")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "char_shingles_native"
-
-    override def nullSafeEval(v: Any): Any =
-      charShinglesEval(v.asInstanceOf[UTF8String], n)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeSignatures.charShinglesEval($c, $n);")
-
-    override protected def withNewChildInternal(c: Expression): CharShinglesExpr =
-      copy(child = c)
-  }
-
-  case class JaccardTextExpr(left: Expression, right: Expression, n: Int)
-      extends BinaryExpression {
-    require(n > 0, "shingle size must be positive")
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "jaccard_text_native"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Double.valueOf(jaccardTextEval(
-        a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], n))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.expressions.NativeSignatures.jaccardTextEval($a, $b, $n);")
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): JaccardTextExpr =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** Count of positionally-equal components of two long-array
     * signatures (the MinHash Jaccard estimator's numerator). One
     * primitive pass; the zip_with+aggregate HOF chain it replaces is
@@ -371,9 +317,10 @@ object NativeSignatures {
   case class SigAgreeExpr(left: Expression, right: Expression)
       extends BinaryExpression
       with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-    // declared input types make analysis insert widening casts (or
-    // reject) — sigAgreeEval reads 8-byte strides, so an undeclared
-    // array<int> input would silently return garbage
+    // declared input types make analysis reject any other input
+    // (DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE; ExpectsInputTypes
+    // inserts no cast) — sigAgreeEval reads 8-byte strides, so an
+    // undeclared array<int> input would silently return garbage
     override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "sig_agree_native"
@@ -391,15 +338,25 @@ object NativeSignatures {
   }
 
   // Column-level entry points
+
+  /** SimHash-64 over an array<string> of tokens. */
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens)))
+    ColumnBridge.staticCall(this, "simhashEval", LongType)(tokens)
 
-  def charShingles(str: Column, n: Int): Column =
-    ColumnBridge.column(CharShinglesExpr(ColumnBridge.expression(str), n))
+  /** Distinct character n-gram shingles of a (lowercased) string —
+    * one pass with a LinkedHashSet. The HOF formulation
+    * (transform(sequence…, substr) + array_distinct) measured ~11 s
+    * over 5000 docs at sf0.1; this runs in milliseconds. */
+  def charShingles(str: Column, n: Int): Column = {
+    require(n > 0, "shingle size must be positive")
+    ColumnBridge.staticCall(this, "charShinglesEval",
+      ArrayType(StringType, containsNull = false))(str, lit(n))
+  }
 
-  def jaccardText(a: Column, b: Column, n: Int): Column =
-    ColumnBridge.column(JaccardTextExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), n))
+  def jaccardText(a: Column, b: Column, n: Int): Column = {
+    require(n > 0, "shingle size must be positive")
+    ColumnBridge.staticCall(this, "jaccardTextEval", DoubleType)(a, b, lit(n))
+  }
 
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     ColumnBridge.column(

@@ -1,6 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -694,14 +695,11 @@ object NativeText {
     * order (element i = hash of tokens[i, i+n)); NOT distinct —
     * span-level dedup needs every occurrence with its position,
     * unlike [[wordNgramsEval]]'s distinct stream. Each token is
-    * xxhash64'd once (seed 42), then each window chains its k
-    * token-hashes through `XXH64.hashLong` — O(tokens) string
-    * hashing plus O(tokens·k) long mixes, no per-window string
-    * materialization. Positions, not gram text, ride the shuffle:
-    * 8-byte keys regardless of gram length. */
-  def wordNgramHashesEval(tokens: ArrayData, n: Int): ArrayData =
-    wordNgramHashesEval(tokens, n, 42L)
-
+    * xxhash64'd once (`seed`; the builder's default is 42), then each
+    * window chains its k token-hashes through `XXH64.hashLong` —
+    * O(tokens) string hashing plus O(tokens·k) long mixes, no
+    * per-window string materialization. Positions, not gram text,
+    * ride the shuffle: 8-byte keys regardless of gram length. */
   def wordNgramHashesEval(tokens: ArrayData, n: Int, seed: Long): ArrayData = {
     val cnt = tokens.numElements()
     if (cnt < n) return new GenericArrayData(Array.empty[Long])
@@ -854,63 +852,11 @@ object NativeText {
     new GenericArrayData(out.toArray)
   }
 
-  // --- expressions ---
-
-  case class ChunksExpr(child: Expression, size: Int, step: Int)
-      extends UnaryExpression {
-    require(size > 0 && step > 0 && step <= size,
-      "need 0 < step <= size (step = size - overlap)")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "chunks_native"
-
-    override def nullSafeEval(v: Any): Any =
-      chunksEval(v.asInstanceOf[UTF8String], size, step)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.chunksEval($c, $size, $step);")
-
-    override protected def withNewChildInternal(c: Expression): ChunksExpr =
-      copy(child = c)
-  }
-
-  case class DupLineFracExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "dup_line_frac_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Double.valueOf(dupLineFracEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.dupLineFracEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): DupLineFracExpr =
-      copy(child = c)
-  }
-
-  case class DedupLinesExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("kept_text", StringType, nullable = false),
-      StructField("n_removed", LongType, nullable = false)))
-    override def prettyName: String = "dedup_lines_native"
-
-    override def nullSafeEval(v: Any): Any =
-      dedupLinesEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.dedupLinesEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): DedupLinesExpr =
-      copy(child = c)
-  }
+  // --- expressions that hold prepared state ---
 
   case class RemoveLinesExpr(child: Expression, lines: Seq[String])
       extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("kept_text", StringType, nullable = false),
-      StructField("n_removed", LongType, nullable = false)))
+    override def dataType: DataType = KeptText
     override def prettyName: String = "remove_lines_native"
 
     @transient private lazy val dropSet: java.util.HashSet[String] = {
@@ -929,44 +875,6 @@ object NativeText {
     }
 
     override protected def withNewChildInternal(c: Expression): RemoveLinesExpr =
-      copy(child = c)
-  }
-
-  case class ChunksWithCountsExpr(child: Expression, size: Int, step: Int)
-      extends UnaryExpression {
-    require(size > 0 && step > 0 && step <= size,
-      "need 0 < step <= size (step = size - overlap)")
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("chunk", StringType, nullable = false),
-        StructField("n_tok", LongType, nullable = false))),
-      containsNull = false)
-    override def prettyName: String = "chunks_with_counts_native"
-
-    override def nullSafeEval(v: Any): Any =
-      chunksWithCountsEval(v.asInstanceOf[UTF8String], size, step)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.chunksWithCountsEval($c, $size, $step);")
-
-    override protected def withNewChildInternal(c: Expression): ChunksWithCountsExpr =
-      copy(child = c)
-  }
-
-  case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
-    require(n > 0, "n-gram size must be positive")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "word_ngrams_native"
-
-    override def nullSafeEval(v: Any): Any =
-      wordNgramsEval(v.asInstanceOf[ArrayData], n)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.wordNgramsEval($c, $n);")
-
-    override protected def withNewChildInternal(c: Expression): WordNgramsExpr =
       copy(child = c)
   }
 
@@ -1055,84 +963,6 @@ object NativeText {
       copy(child = c)
   }
 
-  case class WordNgramHashesExpr(child: Expression, n: Int, seed: Long = 42L)
-      extends UnaryExpression {
-    require(n > 0, "n-gram size must be positive")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "word_ngram_hashes_native"
-
-    override def nullSafeEval(v: Any): Any =
-      wordNgramHashesEval(v.asInstanceOf[ArrayData], n, seed)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.wordNgramHashesEval($c, $n, ${seed}L);")
-
-    override protected def withNewChildInternal(c: Expression): WordNgramHashesExpr =
-      copy(child = c)
-  }
-
-  case class WordBigramsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("a", StringType, nullable = false),
-        StructField("b", StringType, nullable = false))),
-      containsNull = false)
-    override def prettyName: String = "word_bigrams_native"
-
-    override def nullSafeEval(v: Any): Any =
-      wordBigramsEval(v.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.wordBigramsEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): WordBigramsExpr =
-      copy(child = c)
-  }
-
-  case class WordNgramHashPairsExpr(child: Expression, n: Int)
-      extends UnaryExpression {
-    require(n > 0, "n-gram size must be positive")
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("h1", LongType, nullable = false),
-        StructField("h2", LongType, nullable = false))),
-      containsNull = false)
-    override def prettyName: String = "word_ngram_hash_pairs_native"
-
-    override def nullSafeEval(v: Any): Any =
-      wordNgramHashPairsEval(v.asInstanceOf[ArrayData], n)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.wordNgramHashPairsEval($c, $n);")
-
-    override protected def withNewChildInternal(c: Expression): WordNgramHashPairsExpr =
-      copy(child = c)
-  }
-
-  case class RemoveTokenRangesExpr(first: Expression, second: Expression,
-                                   third: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("kept_text", StringType, nullable = false),
-      StructField("n_removed", LongType, nullable = false)))
-    override def prettyName: String = "remove_token_ranges_native"
-
-    override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-      removeTokenRangesEval(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, c) =>
-        s"${ev.value} = graft.expressions.NativeText.removeTokenRangesEval($a, $b, $c);")
-
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): RemoveTokenRangesExpr =
-      copy(first = f, second = s, third = t)
-  }
-
   case class WordHitsExpr(child: Expression, words: Seq[String])
       extends UnaryExpression {
     override def dataType: DataType = LongType
@@ -1154,100 +984,6 @@ object NativeText {
     }
 
     override protected def withNewChildInternal(c: Expression): WordHitsExpr =
-      copy(child = c)
-  }
-
-  case class JaccardArraysExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "jaccard_arrays_native"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Double.valueOf(
-        jaccardArraysEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.expressions.NativeText.jaccardArraysEval($a, $b);")
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardArraysExpr =
-      copy(left = l, right = r)
-  }
-
-  case class IntersectCountExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "intersect_count_native"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Long.valueOf(
-        intersectCountEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.expressions.NativeText.intersectCountEval($a, $b);")
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): IntersectCountExpr =
-      copy(left = l, right = r)
-  }
-
-  case class TokensExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def prettyName: String = "tokens_native"
-
-    override def nullSafeEval(v: Any): Any =
-      tokensEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.tokensEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): TokensExpr =
-      copy(child = c)
-  }
-
-  case class FingerprintExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "fingerprint_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(fingerprintEval(v.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.fingerprintEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): FingerprintExpr =
-      copy(child = c)
-  }
-
-  case class FingerprintTextExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "fingerprint_text_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(fingerprintTextEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.fingerprintTextEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): FingerprintTextExpr =
-      copy(child = c)
-  }
-
-  case class SimHashTextExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "simhash_text_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(simhashTextEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.simhashTextEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): SimHashTextExpr =
       copy(child = c)
   }
 
@@ -1365,64 +1101,6 @@ object NativeText {
     UTF8String.fromString(cleanTextCore(decodeEntities(s4)))
   }
 
-  case class HtmlExtractExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "html_extract_native"
-
-    override def nullSafeEval(v: Any): Any =
-      htmlExtractEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.htmlExtractEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): HtmlExtractExpr =
-      copy(child = c)
-  }
-
-  case class NfcExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "nfc_native"
-
-    override def nullSafeEval(v: Any): Any = nfcEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.nfcEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): NfcExpr =
-      copy(child = c)
-  }
-
-  case class CleanTextExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def prettyName: String = "clean_text_native"
-
-    override def nullSafeEval(v: Any): Any = cleanTextEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.cleanTextEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): CleanTextExpr =
-      copy(child = c)
-  }
-
-  case class PunctRatioExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "punct_ratio_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Double.valueOf(punctRatioEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.punctRatioEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): PunctRatioExpr =
-      copy(child = c)
-  }
-
   case class StopwordRatioExpr(child: Expression, words: Seq[String])
       extends UnaryExpression {
     override def dataType: DataType = DoubleType
@@ -1444,98 +1122,6 @@ object NativeText {
     }
 
     override protected def withNewChildInternal(c: Expression): StopwordRatioExpr =
-      copy(child = c)
-  }
-
-  case class TokenCountExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "token_count_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(tokenCountEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.tokenCountEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): TokenCountExpr =
-      copy(child = c)
-  }
-
-  case class SubwordCountTextExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "subword_count_text_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(subwordCountTextEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.subwordCountTextEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): SubwordCountTextExpr =
-      copy(child = c)
-  }
-
-  case class SubwordCountExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "subword_count_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Long.valueOf(subwordCountEval(v.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.subwordCountEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): SubwordCountExpr =
-      copy(child = c)
-  }
-
-  case class CharEntropyExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "char_entropy_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Double.valueOf(charEntropyEval(v.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.charEntropyEval($c);")
-
-    override protected def withNewChildInternal(c: Expression): CharEntropyExpr =
-      copy(child = c)
-  }
-
-  case class TopNgramFracExpr(child: Expression, n: Int) extends UnaryExpression {
-    require(n > 0, "n-gram size must be positive")
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "top_ngram_frac_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Double.valueOf(topNgramFracEval(v.asInstanceOf[ArrayData], n))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.topNgramFracEval($c, $n);")
-
-    override protected def withNewChildInternal(c: Expression): TopNgramFracExpr =
-      copy(child = c)
-  }
-
-  case class DupNgramFracExpr(child: Expression, n: Int) extends UnaryExpression {
-    require(n > 0, "n-gram size must be positive")
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "dup_ngram_frac_native"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Double.valueOf(dupNgramCharFracEval(v.asInstanceOf[ArrayData], n))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.expressions.NativeText.dupNgramCharFracEval($c, $n);")
-
-    override protected def withNewChildInternal(c: Expression): DupNgramFracExpr =
       copy(child = c)
   }
 
@@ -1597,12 +1183,31 @@ object NativeText {
       copy(child = c)
   }
 
-  // Column-level entry points
-  def tokens(str: Column): Column =
-    ColumnBridge.column(TokensExpr(ColumnBridge.expression(str)))
+  // --- Column-level entry points ---
+  // A function whose *Eval needs nothing but its arguments is one
+  // static call (ColumnBridge.staticCall); the classes above exist
+  // only where an instance holds prepared state.
 
-  def fingerprint(tokens: Column): Column =
-    ColumnBridge.column(FingerprintExpr(ColumnBridge.expression(tokens)))
+  private def call(fn: String, dataType: DataType)(args: Column*): Column =
+    ColumnBridge.staticCall(this, fn, dataType)(args: _*)
+
+  private def requireWindows(size: Int, step: Int): Unit =
+    require(size > 0 && step > 0 && step <= size,
+      "need 0 < step <= size (step = size - overlap)")
+
+  private def requireNgram(n: Int): Unit =
+    require(n > 0, "n-gram size must be positive")
+
+  private val Strings = ArrayType(StringType, containsNull = false)
+
+  private def structOf(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (name, t) => StructField(name, t, nullable = false) })
+
+  private val KeptText = structOf("kept_text" -> StringType, "n_removed" -> LongType)
+
+  def tokens(str: Column): Column = call("tokensEval", Strings)(str)
+
+  def fingerprint(tokens: Column): Column = call("fingerprintEval", LongType)(tokens)
 
   def langScore(tokens: Column, sets: Seq[(String, Seq[String])]): Column =
     ColumnBridge.column(LangScoreExpr(ColumnBridge.expression(tokens), sets))
@@ -1610,88 +1215,93 @@ object NativeText {
   def langScoreText(str: Column, sets: Seq[(String, Seq[String])]): Column =
     ColumnBridge.column(LangScoreTextExpr(ColumnBridge.expression(str), sets))
 
-  def charEntropy(str: Column): Column =
-    ColumnBridge.column(CharEntropyExpr(ColumnBridge.expression(str)))
+  def charEntropy(str: Column): Column = call("charEntropyEval", DoubleType)(str)
 
-  def topNgramFrac(tokens: Column, n: Int): Column =
-    ColumnBridge.column(TopNgramFracExpr(ColumnBridge.expression(tokens), n))
+  def topNgramFrac(tokens: Column, n: Int): Column = {
+    requireNgram(n)
+    call("topNgramFracEval", DoubleType)(tokens, lit(n))
+  }
 
-  def dupNgramFrac(tokens: Column, n: Int): Column =
-    ColumnBridge.column(DupNgramFracExpr(ColumnBridge.expression(tokens), n))
+  def dupNgramFrac(tokens: Column, n: Int): Column = {
+    requireNgram(n)
+    call("dupNgramCharFracEval", DoubleType)(tokens, lit(n))
+  }
 
   def intersectCount(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      IntersectCountExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    call("intersectCountEval", LongType)(a, b)
 
   def jaccardArrays(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      JaccardArraysExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    call("jaccardArraysEval", DoubleType)(a, b)
 
-  def chunks(str: Column, size: Int, step: Int): Column =
-    ColumnBridge.column(ChunksExpr(ColumnBridge.expression(str), size, step))
+  def chunks(str: Column, size: Int, step: Int): Column = {
+    requireWindows(size, step)
+    call("chunksEval", Strings)(str, lit(size), lit(step))
+  }
 
-  def dupLineFrac(str: Column): Column =
-    ColumnBridge.column(DupLineFracExpr(ColumnBridge.expression(str)))
+  def dupLineFrac(str: Column): Column = call("dupLineFracEval", DoubleType)(str)
 
-  def dedupLines(str: Column): Column =
-    ColumnBridge.column(DedupLinesExpr(ColumnBridge.expression(str)))
+  def dedupLines(str: Column): Column = call("dedupLinesEval", KeptText)(str)
 
-  def nfc(str: Column): Column =
-    ColumnBridge.column(NfcExpr(ColumnBridge.expression(str)))
+  def nfc(str: Column): Column = call("nfcEval", StringType)(str)
 
-  def htmlExtract(str: Column): Column =
-    ColumnBridge.column(HtmlExtractExpr(ColumnBridge.expression(str)))
+  def htmlExtract(str: Column): Column = call("htmlExtractEval", StringType)(str)
 
-  def cleanText(str: Column): Column =
-    ColumnBridge.column(CleanTextExpr(ColumnBridge.expression(str)))
+  def cleanText(str: Column): Column = call("cleanTextEval", StringType)(str)
 
   def removeLines(str: Column, lines: Seq[String]): Column =
     ColumnBridge.column(RemoveLinesExpr(ColumnBridge.expression(str), lines))
 
-  def chunksWithCounts(str: Column, size: Int, step: Int): Column =
-    ColumnBridge.column(ChunksWithCountsExpr(ColumnBridge.expression(str), size, step))
+  def chunksWithCounts(str: Column, size: Int, step: Int): Column = {
+    requireWindows(size, step)
+    call("chunksWithCountsEval", ArrayType(
+      structOf("chunk" -> StringType, "n_tok" -> LongType), containsNull = false))(
+      str, lit(size), lit(step))
+  }
 
   def wordHits(tokens: Column, words: Seq[String]): Column =
     ColumnBridge.column(WordHitsExpr(ColumnBridge.expression(tokens), words))
 
-  def wordNgrams(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordNgramsExpr(ColumnBridge.expression(tokens), n))
+  def wordNgrams(tokens: Column, n: Int): Column = {
+    requireNgram(n)
+    call("wordNgramsEval", Strings)(tokens, lit(n))
+  }
 
   def wordGramBuckets(tokens: Column, salt: String, width: Int): Column =
     ColumnBridge.column(
       WordGramBucketsExpr(ColumnBridge.expression(tokens), salt, width))
 
-  def wordNgramHashes(tokens: Column, n: Int, seed: Long = 42L): Column =
-    ColumnBridge.column(WordNgramHashesExpr(ColumnBridge.expression(tokens), n, seed))
+  def wordNgramHashes(tokens: Column, n: Int, seed: Long = 42L): Column = {
+    requireNgram(n)
+    call("wordNgramHashesEval", ArrayType(LongType, containsNull = false))(
+      tokens, lit(n), lit(seed))
+  }
 
-  def wordNgramHashPairs(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordNgramHashPairsExpr(ColumnBridge.expression(tokens), n))
+  def wordNgramHashPairs(tokens: Column, n: Int): Column = {
+    requireNgram(n)
+    call("wordNgramHashPairsEval", ArrayType(
+      structOf("h1" -> LongType, "h2" -> LongType), containsNull = false))(tokens, lit(n))
+  }
 
   def wordBigrams(tokens: Column): Column =
-    ColumnBridge.column(WordBigramsExpr(ColumnBridge.expression(tokens)))
+    call("wordBigramsEval", ArrayType(
+      structOf("a" -> StringType, "b" -> StringType), containsNull = false))(tokens)
 
   def removeTokenRanges(tokens: Column, starts: Column, ends: Column): Column =
-    ColumnBridge.column(RemoveTokenRangesExpr(ColumnBridge.expression(tokens),
-      ColumnBridge.expression(starts), ColumnBridge.expression(ends)))
+    call("removeTokenRangesEval", KeptText)(tokens, starts, ends)
 
-  def subwordCount(tokens: Column): Column =
-    ColumnBridge.column(SubwordCountExpr(ColumnBridge.expression(tokens)))
+  def subwordCount(tokens: Column): Column = call("subwordCountEval", LongType)(tokens)
 
-  def tokenCount(str: Column): Column =
-    ColumnBridge.column(TokenCountExpr(ColumnBridge.expression(str)))
+  def tokenCount(str: Column): Column = call("tokenCountEval", LongType)(str)
 
-  def punctRatio(str: Column): Column =
-    ColumnBridge.column(PunctRatioExpr(ColumnBridge.expression(str)))
+  def punctRatio(str: Column): Column = call("punctRatioEval", DoubleType)(str)
 
-  def fingerprintText(str: Column): Column =
-    ColumnBridge.column(FingerprintTextExpr(ColumnBridge.expression(str)))
+  def fingerprintText(str: Column): Column = call("fingerprintTextEval", LongType)(str)
 
-  def simhashText(str: Column): Column =
-    ColumnBridge.column(SimHashTextExpr(ColumnBridge.expression(str)))
+  def simhashText(str: Column): Column = call("simhashTextEval", LongType)(str)
 
   def stopwordRatio(str: Column, words: Seq[String]): Column =
     ColumnBridge.column(StopwordRatioExpr(ColumnBridge.expression(str), words))
 
   def subwordCountText(str: Column): Column =
-    ColumnBridge.column(SubwordCountTextExpr(ColumnBridge.expression(str)))
+    call("subwordCountTextEval", LongType)(str)
 }

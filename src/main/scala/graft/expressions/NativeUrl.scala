@@ -455,39 +455,6 @@ object NativeUrl {
   def registrableDomainEval(host: UTF8String): UTF8String =
     registrableDomainEval(host, defaultSuffixRules)
 
-  case class NormalizeUrlExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "normalize_url_native"
-
-    override def nullSafeEval(v: Any): Any =
-      normalizeUrlEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = graft.expressions.NativeUrl.normalizeUrlEval($c);
-           |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-
-    override protected def withNewChildInternal(c: Expression): NormalizeUrlExpr =
-      copy(child = c)
-  }
-
-  case class UrlHostExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "url_host_native"
-
-    override def nullSafeEval(v: Any): Any = urlHostEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = graft.expressions.NativeUrl.urlHostEval($c);
-           |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-
-    override protected def withNewChildInternal(c: Expression): UrlHostExpr =
-      copy(child = c)
-  }
-
   /** `rules` rides the expression tree (serialized with the plan) so
     * a full installed PSL reaches every executor — in codegen it
     * becomes a plan reference object, one hash-set probe per label. */
@@ -512,31 +479,15 @@ object NativeUrl {
       copy(child = c)
   }
 
-  case class UrlPathQueryExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "url_path_query_native"
-
-    override def nullSafeEval(v: Any): Any =
-      urlPathQueryEval(v.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = graft.expressions.NativeUrl.urlPathQueryEval($c);
-           |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-
-    override protected def withNewChildInternal(c: Expression): UrlPathQueryExpr =
-      copy(child = c)
-  }
-
+  // each is NULL on a malformed URL, hence returnNullable
   def normalizeUrl(url: Column): Column =
-    ColumnBridge.column(NormalizeUrlExpr(ColumnBridge.expression(url)))
+    ColumnBridge.staticCall(this, "normalizeUrlEval", StringType, returnNullable = true)(url)
 
   def urlPathQuery(url: Column): Column =
-    ColumnBridge.column(UrlPathQueryExpr(ColumnBridge.expression(url)))
+    ColumnBridge.staticCall(this, "urlPathQueryEval", StringType, returnNullable = true)(url)
 
   def urlHost(url: Column): Column =
-    ColumnBridge.column(UrlHostExpr(ColumnBridge.expression(url)))
+    ColumnBridge.staticCall(this, "urlHostEval", StringType, returnNullable = true)(url)
 
   def registrableDomain(host: Column): Column =
     ColumnBridge.column(RegistrableDomainExpr(ColumnBridge.expression(host)))

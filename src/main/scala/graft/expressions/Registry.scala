@@ -1,9 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Text
 
@@ -21,145 +22,109 @@ import graft.functions.Text
   */
 object Registry {
 
-  private def intArg(e: Expression, name: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$name expects an integer literal, got $other")
+  /** A SQL call's arguments, handed to the function's Column builder. */
+  private final class Args(name: String, es: Seq[Expression]) {
+    def apply(i: Int): Column = ColumnBridge.column(es(i))
+
+    def int(i: Int): Int = es(i) match {
+      case Literal(v: Int, _) => v
+      case Literal(v: Long, _) => v.toInt
+      case other => throw new IllegalArgumentException(
+        s"$name expects an integer literal, got $other")
+    }
+
+    def string(i: Int): String = es(i) match {
+      case Literal(v: UTF8String, _) => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$name expects a string literal, got $other")
+    }
+  }
+
+  /** One SQL function: its name is the head of `usage`, and its builder
+    * is the function's Column builder, so the method name, type and
+    * nullability of each function are written once. */
+  private def fn(usage: String)(build: Args => Column)
+      : (String, Seq[Expression] => Expression, String) = {
+    val name = usage.takeWhile(_ != '(')
+    (name, es => ColumnBridge.expression(build(new Args(name, es))), usage)
   }
 
   /** name → (builder, usage) */
   val functions: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
-    ("graft_tokens",
-      (es: Seq[Expression]) => NativeText.TokensExpr(es.head),
-      "graft_tokens(str) - lowercased whitespace tokens"),
-    ("graft_fingerprint",
-      (es: Seq[Expression]) => NativeText.FingerprintExpr(es.head),
-      "graft_fingerprint(tokens) - 64-bit rolling token fingerprint"),
-    ("graft_simhash64",
-      (es: Seq[Expression]) => NativeSignatures.SimHash64Expr(es.head),
-      "graft_simhash64(tokens) - 64-bit SimHash signature"),
-    ("graft_minhash",
-      (es: Seq[Expression]) =>
-        NativeSignatures.MinHashSigExpr(es.head, intArg(es(1), "graft_minhash")),
-      "graft_minhash(shingles, k) - k-component MinHash signature"),
-    ("graft_minhash_text",
-      (es: Seq[Expression]) =>
-        NativeSignatures.MinHashTextExpr(es.head,
-          intArg(es(1), "graft_minhash_text"), intArg(es(2), "graft_minhash_text")),
-      "graft_minhash_text(str, n, k) - fused char-n-gram MinHash signature"),
-    ("graft_char_shingles",
-      (es: Seq[Expression]) =>
-        NativeSignatures.CharShinglesExpr(es.head, intArg(es(1), "graft_char_shingles")),
-      "graft_char_shingles(str, n) - distinct lowercased char n-grams"),
-    ("graft_srp_sig",
-      (es: Seq[Expression]) =>
-        NativeSignatures.SrpSigExpr(es.head, intArg(es(1), "graft_srp_sig")),
-      "graft_srp_sig(vec, planes) - signed-random-projection signature"),
-    ("graft_char_entropy",
-      (es: Seq[Expression]) => NativeText.CharEntropyExpr(es.head),
-      "graft_char_entropy(str) - Shannon entropy (bits/char)"),
-    ("graft_token_count",
-      (es: Seq[Expression]) => NativeText.TokenCountExpr(es.head),
-      "graft_token_count(str) - fused whitespace token count"),
-    ("graft_fingerprint_text",
-      (es: Seq[Expression]) => NativeText.FingerprintTextExpr(es.head),
-      "graft_fingerprint_text(str) - fused 64-bit rolling token fingerprint"),
-    ("graft_simhash64_text",
-      (es: Seq[Expression]) => NativeText.SimHashTextExpr(es.head),
-      "graft_simhash64_text(str) - fused 64-bit SimHash signature"),
-    ("graft_punct_ratio",
-      (es: Seq[Expression]) => NativeText.PunctRatioExpr(es.head),
-      "graft_punct_ratio(str) - punctuation chars / total chars"),
-    ("graft_lang_id",
-      (es: Seq[Expression]) =>
-        NativeText.LangScoreTextExpr(es.head, Text.stopwordSets),
-      "graft_lang_id(str) - fused best stopword-scored language code"),
-    ("graft_parse_mdy",
-      (es: Seq[Expression]) => NativeDates.ParseMdyExpr(es.head),
-      "graft_parse_mdy(str) - strict m/d/yyyy text to DATE (NULL on junk)"),
-    ("graft_format_mdy",
-      (es: Seq[Expression]) => NativeDates.FormatMdyExpr(es.head),
-      "graft_format_mdy(date) - DATE to MM/dd/yyyy text"),
-    ("graft_lang_score",
-      (es: Seq[Expression]) =>
-        NativeText.LangScoreExpr(es.head, Text.stopwordSets),
-      "graft_lang_score(tokens) - best stopword-scored language code"),
-    ("graft_cosine",
-      (es: Seq[Expression]) => NativeVector.CosineSimExpr(es.head, es(1)),
-      "graft_cosine(a, b) - cosine similarity of two float/double vectors"),
-    ("graft_intersect_count",
-      (es: Seq[Expression]) => NativeText.IntersectCountExpr(es.head, es(1)),
-      "graft_intersect_count(a, b) - |a ∩ b| for distinct-element string arrays"),
-    ("graft_chunks",
-      (es: Seq[Expression]) => NativeText.ChunksExpr(es.head,
-        intArg(es(1), "graft_chunks"), intArg(es(2), "graft_chunks")),
-      "graft_chunks(str, size, step) - overlapping token-window chunks"),
-    ("graft_dup_line_frac",
-      (es: Seq[Expression]) => NativeText.DupLineFracExpr(es.head),
-      "graft_dup_line_frac(str) - duplicate-line fraction over non-blank lines"),
-    ("graft_sig_agree",
-      (es: Seq[Expression]) => NativeSignatures.SigAgreeExpr(es.head, es(1)),
-      "graft_sig_agree(a, b) - count of agreeing signature components"),
-    ("graft_chunks_with_counts",
-      (es: Seq[Expression]) => NativeText.ChunksWithCountsExpr(es.head,
-        intArg(es(1), "graft_chunks_with_counts"),
-        intArg(es(2), "graft_chunks_with_counts")),
-      "graft_chunks_with_counts(str, size, step) - chunks with per-window token counts"),
-    ("graft_subword_count",
-      (es: Seq[Expression]) => NativeText.SubwordCountExpr(es.head),
-      "graft_subword_count(tokens) - BPE-ish subword count"),
-    ("graft_top_ngram_frac",
-      (es: Seq[Expression]) => NativeText.TopNgramFracExpr(es.head,
-        intArg(es(1), "graft_top_ngram_frac")),
-      "graft_top_ngram_frac(tokens, n) - share of the most frequent n-gram"),
-    ("graft_dup_ngram_frac",
-      (es: Seq[Expression]) => NativeText.DupNgramFracExpr(es.head,
-        intArg(es(1), "graft_dup_ngram_frac")),
-      "graft_dup_ngram_frac(tokens, n) - char fraction covered by duplicated n-grams"),
-    ("graft_dedup_lines",
-      (es: Seq[Expression]) => NativeText.DedupLinesExpr(es.head),
-      "graft_dedup_lines(str) - drop repeated non-blank lines; struct<kept_text, n_removed>"),
-    ("graft_html_extract",
-      (es: Seq[Expression]) => NativeText.HtmlExtractExpr(es.head),
-      "graft_html_extract(str) - HTML to text: strip comments/script/style/tags, decode XML entities, normalize whitespace"),
-    ("graft_nfc",
-      (es: Seq[Expression]) => NativeText.NfcExpr(es.head),
-      "graft_nfc(str) - NFC Unicode normalization (canonical composition)"),
-    ("graft_clean_text",
-      (es: Seq[Expression]) => NativeText.CleanTextExpr(es.head),
-      "graft_clean_text(str) - NFC + strip C0/DEL controls (keep \\n \\t) + collapse space/tab runs + trim edge spaces"),
-    ("graft_word_ngram_hashes",
-      (es: Seq[Expression]) => NativeText.WordNgramHashesExpr(es.head,
-        intArg(es(1), "graft_word_ngram_hashes")),
-      "graft_word_ngram_hashes(tokens, k) - 64-bit hash of every k-token window, in position order"),
-    ("graft_remove_token_ranges",
-      (es: Seq[Expression]) =>
-        NativeText.RemoveTokenRangesExpr(es.head, es(1), es(2)),
-      "graft_remove_token_ranges(tokens, starts, ends) - cut sorted disjoint token ranges; struct<kept_text, n_removed>"),
-    ("graft_normalize_url",
-      (es: Seq[Expression]) => NativeUrl.NormalizeUrlExpr(es.head),
-      "graft_normalize_url(str) - canonical URL: lowercase scheme/host, strip default port/fragment/tracking params, sort query, trim path slashes; NULL on malformed"),
-    ("graft_url_host",
-      (es: Seq[Expression]) => NativeUrl.UrlHostExpr(es.head),
-      "graft_url_host(str) - lowercased URL host (port stripped); NULL on malformed"),
-    ("graft_registrable_domain",
-      (es: Seq[Expression]) => NativeUrl.RegistrableDomainExpr(es.head),
-      "graft_registrable_domain(host) - last 2 labels (3 over multi-part public suffixes)"),
-    ("graft_url_path_query",
-      (es: Seq[Expression]) => NativeUrl.UrlPathQueryExpr(es.head),
-      "graft_url_path_query(str) - path + query ('/a?q=1', fragment dropped, empty path -> '/'); NULL on malformed"),
-    ("graft_robots_match",
-      (es: Seq[Expression]) => NativeRobots.RobotsMatchExpr(es.head, es(1)),
-      "graft_robots_match(pathq, pattern) - RFC 9309 rule match: prefix semantics, '*' wildcard, trailing '$' anchor"),
-    ("graft_json_long",
-      (es: Seq[Expression]) => es(1) match {
-        case Literal(f: org.apache.spark.unsafe.types.UTF8String, _) =>
-          NativeJson.JsonGetLongExpr(es.head, f.toString)
-        case other => throw new IllegalArgumentException(
-          s"graft_json_long expects a string-literal field name, got $other")
-      },
-      "graft_json_long(doc, field) - top-level integer JSON field or NULL"))
+    fn("graft_tokens(str) - lowercased whitespace tokens")(a =>
+      NativeText.tokens(a(0))),
+    fn("graft_fingerprint(tokens) - 64-bit rolling token fingerprint")(a =>
+      NativeText.fingerprint(a(0))),
+    fn("graft_simhash64(tokens) - 64-bit SimHash signature")(a =>
+      NativeSignatures.simhash64(a(0))),
+    fn("graft_minhash(shingles, k) - k-component MinHash signature")(a =>
+      NativeSignatures.minhashSignature(a(0), a.int(1))),
+    fn("graft_minhash_text(str, n, k) - fused char-n-gram MinHash signature")(a =>
+      NativeSignatures.minhashText(a(0), a.int(1), a.int(2))),
+    fn("graft_char_shingles(str, n) - distinct lowercased char n-grams")(a =>
+      NativeSignatures.charShingles(a(0), a.int(1))),
+    fn("graft_srp_sig(vec, planes) - signed-random-projection signature")(a =>
+      NativeSignatures.srpSignature(a(0), a.int(1))),
+    fn("graft_char_entropy(str) - Shannon entropy (bits/char)")(a =>
+      NativeText.charEntropy(a(0))),
+    fn("graft_token_count(str) - fused whitespace token count")(a =>
+      NativeText.tokenCount(a(0))),
+    fn("graft_fingerprint_text(str) - fused 64-bit rolling token fingerprint")(a =>
+      NativeText.fingerprintText(a(0))),
+    fn("graft_simhash64_text(str) - fused 64-bit SimHash signature")(a =>
+      NativeText.simhashText(a(0))),
+    fn("graft_punct_ratio(str) - punctuation chars / total chars")(a =>
+      NativeText.punctRatio(a(0))),
+    fn("graft_lang_id(str) - fused best stopword-scored language code")(a =>
+      NativeText.langScoreText(a(0), Text.stopwordSets)),
+    fn("graft_parse_mdy(str) - strict m/d/yyyy text to DATE (NULL on junk)")(a =>
+      NativeDates.parseMdy(a(0))),
+    fn("graft_format_mdy(date) - DATE to MM/dd/yyyy text")(a =>
+      NativeDates.formatMdy(a(0))),
+    fn("graft_lang_score(tokens) - best stopword-scored language code")(a =>
+      NativeText.langScore(a(0), Text.stopwordSets)),
+    fn("graft_cosine(a, b) - cosine similarity of two float/double vectors")(a =>
+      NativeVector.cosineSim(a(0), a(1))),
+    fn("graft_intersect_count(a, b) - |a ∩ b| for distinct-element string arrays")(a =>
+      NativeText.intersectCount(a(0), a(1))),
+    fn("graft_chunks(str, size, step) - overlapping token-window chunks")(a =>
+      NativeText.chunks(a(0), a.int(1), a.int(2))),
+    fn("graft_dup_line_frac(str) - duplicate-line fraction over non-blank lines")(a =>
+      NativeText.dupLineFrac(a(0))),
+    fn("graft_sig_agree(a, b) - count of agreeing signature components")(a =>
+      NativeSignatures.sigAgree(a(0), a(1))),
+    fn("graft_chunks_with_counts(str, size, step) - chunks with per-window token counts")(a =>
+      NativeText.chunksWithCounts(a(0), a.int(1), a.int(2))),
+    fn("graft_subword_count(tokens) - BPE-ish subword count")(a =>
+      NativeText.subwordCount(a(0))),
+    fn("graft_top_ngram_frac(tokens, n) - share of the most frequent n-gram")(a =>
+      NativeText.topNgramFrac(a(0), a.int(1))),
+    fn("graft_dup_ngram_frac(tokens, n) - char fraction covered by duplicated n-grams")(a =>
+      NativeText.dupNgramFrac(a(0), a.int(1))),
+    fn("graft_dedup_lines(str) - drop repeated non-blank lines; struct<kept_text, n_removed>")(a =>
+      NativeText.dedupLines(a(0))),
+    fn("graft_html_extract(str) - HTML to text: strip comments/script/style/tags, decode XML entities, normalize whitespace")(a =>
+      NativeText.htmlExtract(a(0))),
+    fn("graft_nfc(str) - NFC Unicode normalization (canonical composition)")(a =>
+      NativeText.nfc(a(0))),
+    fn("graft_clean_text(str) - NFC + strip C0/DEL controls (keep \\n \\t) + collapse space/tab runs + trim edge spaces")(a =>
+      NativeText.cleanText(a(0))),
+    fn("graft_word_ngram_hashes(tokens, k) - 64-bit hash of every k-token window, in position order")(a =>
+      NativeText.wordNgramHashes(a(0), a.int(1))),
+    fn("graft_remove_token_ranges(tokens, starts, ends) - cut sorted disjoint token ranges; struct<kept_text, n_removed>")(a =>
+      NativeText.removeTokenRanges(a(0), a(1), a(2))),
+    fn("graft_normalize_url(str) - canonical URL: lowercase scheme/host, strip default port/fragment/tracking params, sort query, trim path slashes; NULL on malformed")(a =>
+      NativeUrl.normalizeUrl(a(0))),
+    fn("graft_url_host(str) - lowercased URL host (port stripped); NULL on malformed")(a =>
+      NativeUrl.urlHost(a(0))),
+    fn("graft_registrable_domain(host) - last 2 labels (3 over multi-part public suffixes)")(a =>
+      NativeUrl.registrableDomain(a(0))),
+    fn("graft_url_path_query(str) - path + query ('/a?q=1', fragment dropped, empty path -> '/'); NULL on malformed")(a =>
+      NativeUrl.urlPathQuery(a(0))),
+    fn("graft_robots_match(pathq, pattern) - RFC 9309 rule match: prefix semantics, '*' wildcard, trailing '$' anchor")(a =>
+      NativeRobots.robotsMatch(a(0), a(1))),
+    fn("graft_json_long(doc, field) - top-level integer JSON field or NULL")(a =>
+      NativeJson.jsonGetLong(a(0), a.string(1))))
 
   /** Register all functions on an existing session. */
   def register(spark: SparkSession): Unit =

@@ -123,15 +123,6 @@ object Text {
   def dupNgramCharFrac(c: Column, n: Int): Column =
     graft.expressions.NativeText.dupNgramFrac(tokens(c), n)
 
-  /** Mean token length. */
-  def meanTokenLen(c: Column): Column = {
-    val ts = tokens(c)
-    val n = size(ts).cast("double")
-    when(n > 0,
-      round(aggregate(ts, lit(0L), (acc, t) => acc + length(t)).cast("double") / n, 4))
-      .otherwise(lit(0.0))
-  }
-
   /** Shannon entropy (bits/char) over code points — repetition /
     * binary-junk detector (native expression). */
   def charEntropy(c: Column): Column =
@@ -171,10 +162,10 @@ object Text {
 
   /** SimHash-64 over tokens: per bit b, sum ±1 weighted by each
     * token's xxhash64 bit, take the sign bit. Near-identical docs land
-    * within small Hamming distance. Backed by a native Catalyst
-    * expression ([[graft.expressions.NativeSignatures.SimHash64Expr]])
-    * — the equivalent higher-order-function formulation walks a
-    * 64-element array per token through the interpreter and measured
+    * within small Hamming distance. Backed by one native static call
+    * ([[graft.expressions.NativeText.simhashTextEval]]) — the
+    * equivalent higher-order-function formulation walks a 64-element
+    * array per token through the interpreter and measured
     * ~9 s over 5M tokens at sf0.1; the native loop is ~50× cheaper. */
   def simhash64(c: Column): Column =
     graft.expressions.NativeText.simhashText(c)
@@ -184,8 +175,8 @@ object Text {
     bit_count(a.bitwiseXOR(b)).cast("long")
 
   /** Character n-gram shingles (distinct, lowercased), for Jaccard
-    * similarity. Native expression — see
-    * [[graft.expressions.NativeSignatures.CharShinglesExpr]]. */
+    * similarity. Native static call — see
+    * [[graft.expressions.NativeSignatures.charShinglesEval]]. */
   def charShingles(c: Column, n: Int): Column =
     graft.expressions.NativeSignatures.charShingles(c, n)
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CROSS-document boilerplate-line removal — the CCNet/RefinedWeb
-  * curation step the within-doc rule ([[graft.expressions.NativeText.DedupLinesExpr]],
+  * curation step the within-doc rule ([[graft.expressions.NativeText.dedupLines]],
   * x55) cannot reach: navigation headers, cookie banners, unsubscribe
   * footers repeat VERBATIM across thousands of documents while
   * appearing once per document. A line whose exact text occurs in at

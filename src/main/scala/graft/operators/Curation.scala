@@ -71,9 +71,4 @@ object Curation {
       .withColumn("drop_reasons", reasons)
       .withColumn("keep", size(col("drop_reasons")) === 0)
   }
-
-  /** Keep only passing documents. */
-  def filterDocs(df: DataFrame, textCol: String = "text",
-                 t: Thresholds = Thresholds()): DataFrame =
-    annotate(df, textCol, t).where(col("keep")).drop("drop_reasons", "keep")
 }

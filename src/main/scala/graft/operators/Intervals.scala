@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   *     broadcast anti join on the replaced ids.
   *
   * One exchange (the range shuffle), one in-partition sort, two scans
-  * of the pinned (localCheckpoint) sorted frame, no Window, no
+  * of the pinned (persisted) sorted frame, no Window, no
   * data-sized groupBy. Every driver collect is bounded by
   * #partitions, by construction.
   */
@@ -266,7 +266,7 @@ object Intervals {
       StructField("__cont", BooleanType, nullable = false),
       StructField("__last", BooleanType, nullable = false)))
     // boundary islands ride back on an accumulator DURING the
-    // checkpoint job (one job instead of checkpoint + collect); task
+    // pinning job (one job instead of pin + collect); task
     // retries may duplicate entries, so the driver dedupes by
     // (pid, idx) — duplicates are bit-identical rows
     val bdryAcc = spark.sparkContext.collectionAccumulator[Row]("x109_bdry")
@@ -321,9 +321,15 @@ object Intervals {
         }
       }
     // islands are consumed twice (boundary collect + final output);
-    // checkpoint the SMALL merged frame once and release the
-    // data-sized sorted cache
-    }(Encoders.row(islSchema)).localCheckpoint()
+    // pin the SMALL merged frame once and release the data-sized
+    // sorted cache. persist + count, not localCheckpoint: the pin is a
+    // CacheManager entry, so `clearCache()` releases it like every
+    // other operator pin (an RDD checkpoint outlives it until the RDD
+    // is garbage collected); a cache miss recomputes from the written
+    // range-shuffle blocks, which give the same islands
+    }(Encoders.row(islSchema))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    islands.count()
     sorted.unpersist()
 
     // fix-up: boundary islands only (≤ 2/partition), folded into

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{Catalog, KeyValue}
@@ -36,7 +35,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("readExternal discovers hive partitions from k=v dirs") {
-    val dir = Files.createTempDirectory("hive").toString
+    val dir = SparkTestSession.tempDir("hive").toString
     Seq((1, "x")).toDF("v", "k").write.mode("overwrite").partitionBy("k").parquet(dir)
     val df = Catalog.readExternal(spark, "parquet", dir)
     assert(df.columns.contains("k"))
@@ -93,7 +92,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("compact shrinks a fragmented parquet dir, preserving every row") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_compact").toString + "/t"
     val df = spark.range(0, 10000).select($"id", ($"id" * 3).as("v"))
     df.repartition(25).write.parquet(dir)
     val stats = graft.catalog.Catalog.compact(spark, dir, targetFileBytes = 64L << 20)
@@ -107,7 +106,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("merge: matched keys replaced whole-row, new keys inserted") {
-    val dir = Files.createTempDirectory("graft_merge_spec").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_merge_spec").toString + "/t"
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "name", "v").write.parquet(dir)
     val upd = Seq((2L, null.asInstanceOf[String], 99.0), (9L, "i", 1.0))
@@ -126,7 +125,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("merge rejects a mismatched update schema") {
-    val dir = Files.createTempDirectory("graft_merge_bad").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_merge_bad").toString + "/t"
     Seq((1L, "a")).toDF("k", "name").write.parquet(dir)
     val e = intercept[IllegalArgumentException] {
       Catalog.merge(spark, dir, Seq((1L, 2.0)).toDF("k", "v"), Seq("k"))
@@ -135,7 +134,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("merge rejects duplicate keys in the delta (BigQuery MERGE semantics)") {
-    val dir = Files.createTempDirectory("graft_merge_dup").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_merge_dup").toString + "/t"
     Seq((1L, "a")).toDF("k", "name").write.parquet(dir)
     val dup = Seq((1L, "x"), (1L, "y")).toDF("k", "name")
     val e = intercept[IllegalArgumentException] {
@@ -148,7 +147,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("mergePartitioned rewrites only touched leaves, creates new ones") {
-    val root = Files.createTempDirectory("graft_merge_part").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_merge_part").toString + "/t"
     Seq((1L, "a", 10.0, "d1"), (2L, "b", 20.0, "d1"),
         (3L, "c", 30.0, "d2"), (4L, "d", 40.0, "d3"))
       .toDF("k", "name", "v", "day")
@@ -180,7 +179,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("mergePartitioned identity is partition-scoped: keys do not migrate") {
-    val root = Files.createTempDirectory("graft_merge_scope").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_merge_scope").toString + "/t"
     Seq((1L, "a", "d1")).toDF("k", "name", "day")
       .write.partitionBy("day").parquet(root)
     // same key under ANOTHER partition value: inserts there, leaves
@@ -201,7 +200,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("compact with clusterBy yields disjoint per-file key ranges") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cluster").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_cluster").toString + "/t"
     spark.range(0, 20000).select($"id", (rand(7) * 100).as("noise"))
       .repartition(30) // keys scattered across every file
       .write.parquet(dir)
@@ -228,7 +227,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("compactPartitioned compacts each k=v leaf, preserving partition values") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compactp").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_compactp").toString + "/t"
     val df = spark.range(0, 9000)
       .select($"id", ($"id" % 3).cast("string").as("k"), ($"id" * 7).as("v"))
     df.repartition(8).write.partitionBy("k").parquet(dir)
@@ -249,14 +248,14 @@ class CatalogSpec extends AnyFunSuite {
     // partition pruning survives: one-partition scan
     assert(back.where($"k" === "1").count() == 3000)
     // flat dir degenerates to plain compact
-    val flat = java.nio.file.Files.createTempDirectory("graft_compactf").toString + "/t"
+    val flat = SparkTestSession.tempDir("graft_compactf").toString + "/t"
     spark.range(100).repartition(5).write.parquet(flat)
     val fstats = graft.catalog.Catalog.compactPartitioned(spark, flat)
     assert(fstats.filesBefore == 5 && fstats.filesAfter == 1, fstats.toString)
   }
 
   test("deleteKeys removes exactly the keyed rows; absent keys are no-ops") {
-    val dir = Files.createTempDirectory("graft_del").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_del").toString + "/t"
     Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
       .toDF("k", "v").write.parquet(dir)
     val stats = Catalog.deleteKeys(spark, dir,
@@ -272,7 +271,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("deleteKeysPartitioned probes every leaf, rewrites only hit leaves") {
-    val root = Files.createTempDirectory("graft_del_part").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_del_part").toString + "/t"
     Seq((1L, "a", "d1"), (2L, "b", "d1"),
         (3L, "c", "d2"), (4L, "d", "d3"))
       .toDF("k", "v", "day")
@@ -303,7 +302,7 @@ class CatalogSpec extends AnyFunSuite {
     // key is absent from the leaf FILES and must be matched against
     // the path. All-partition keys drop whole leaves; mixed keys
     // restrict the per-leaf erasure list by the path values.
-    val root = Files.createTempDirectory("graft_del_pkey").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_del_pkey").toString + "/t"
     Seq((1L, "a", "t1"), (2L, "b", "t1"), (3L, "c", "t2"), (4L, "d", "t3"))
       .toDF("k", "v", "tenant")
       .write.partitionBy("tenant").parquet(root)
@@ -327,7 +326,7 @@ class CatalogSpec extends AnyFunSuite {
     // two-level layout: erasing every day under a tenant must not
     // leave an empty tenant=... dir that the NEXT run's leaf walk
     // reads as a parquet-less leaf (AnalysisException)
-    val root = Files.createTempDirectory("graft_del_prune").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_del_prune").toString + "/t"
     Seq((1L, 7, "d1"), (2L, 7, "d2"), (3L, 8, "d1"))
       .toDF("k", "tenant", "day")
       .write.partitionBy("tenant", "day").parquet(root)
@@ -355,7 +354,7 @@ class CatalogSpec extends AnyFunSuite {
     // EVERY leaf whose path value fails the cast, silently deleting
     // the wrong partitions wholesale. NULL keys must only match
     // __HIVE_DEFAULT_PARTITION__ leaves.
-    val root = Files.createTempDirectory("graft_del_nullkey").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_del_nullkey").toString + "/t"
     Seq((1L, "1"), (2L, "acme"), (3L, "zorg"))
       .toDF("k", "tenant")
       .write.partitionBy("tenant").parquet(root)
@@ -378,7 +377,7 @@ class CatalogSpec extends AnyFunSuite {
   test("deleteKeysPartitioned on a FLAT directory degenerates to the flat erasure") {
     // a right-to-be-forgotten request must never silently no-op
     // because the table happened to be unpartitioned
-    val dir = Files.createTempDirectory("graft_del_flat").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft_del_flat").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(dir)
     val stats = Catalog.deleteKeysPartitioned(spark, dir,
       Seq(1L).toDF("k"), Seq("k"))
@@ -388,7 +387,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("swap crash artifacts are hidden: no phantom partitions, walkers skip them") {
-    val root = Files.createTempDirectory("graft_del_art").toString + "/t"
+    val root = SparkTestSession.tempDir("graft_del_art").toString + "/t"
     Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("k", "v", "day")
       .write.partitionBy("day").parquet(root)
     // simulate a crash-between-renames artifact with the OLD visible

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +21,7 @@ class CatalogSwapFaultSpec extends AnyFunSuite {
 
   private def faultyDir(prefix: String): String = {
     FaultInjectingFileSystem.register(spark)
-    val real = Files.createTempDirectory(prefix).toString
+    val real = SparkTestSession.tempDir(prefix).toString
     s"faulty://$real/t"
   }
 
@@ -89,7 +87,7 @@ class CatalogSwapFaultSpec extends AnyFunSuite {
 
   test("mergePartitioned: a failed leaf swap-in settles every leaf, then throws") {
     val faulty = faultyDir("swap_mp")
-    val clean = Files.createTempDirectory("swap_mp_clean").toString + "/t"
+    val clean = SparkTestSession.tempDir("swap_mp_clean").toString + "/t"
     val target = Seq((1L, 10.0, "d1"), (2L, 20.0, "d2"), (3L, 30.0, "d3"),
       (4L, 40.0, "d4")).toDF("k", "v", "day")
     // touches d1, d2 and d3, opens d5; d4 is untouched

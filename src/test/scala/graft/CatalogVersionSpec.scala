@@ -15,7 +15,7 @@ class CatalogVersionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_versioned").toString
+    SparkTestSession.tempDir("graft_versioned").toString
 
   test("put / commit / readAt / rollback semantics") {
     val root = freshRoot()
@@ -160,7 +160,7 @@ class CatalogVersionSpec extends AnyFunSuite {
     // let both racing writers believe they won seq N. The publish
     // primitive must be one-winner (hard link / O_EXCL), with the
     // winner's CONTENT intact afterwards.
-    val root = Files.createTempDirectory("graft_vexcl").toString
+    val root = SparkTestSession.tempDir("graft_vexcl").toString
     val p = new org.apache.hadoop.fs.Path(root)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val first = Versioned.tryCreateLogEntry(f, p, 7L, "data-A")

@@ -358,7 +358,7 @@ class DedupSimSpec extends AnyFunSuite {
     assert(recall >= 0.85, s"recall $recall")
 
     // the persisted-lists artifact returns the identical result set
-    val listsPath = java.nio.file.Files.createTempDirectory("ivf_lists").toString
+    val listsPath = SparkTestSession.tempDir("ivf_lists").toString
     graft.functions.Ivf.writeLists(df, index, listsPath)
     val viaArtifact = graft.functions.Ivf
       .searchIndexed(queries, listsPath, index, k = 5, nprobe = 3)

@@ -86,7 +86,7 @@ class EdgeCaseSpec extends AnyFunSuite {
 
   test("KV upsert onto a fresh (nonexistent) kind bootstraps it") {
     val eng = new Engine(spark,
-      kvRoot = java.nio.file.Files.createTempDirectory("edge_kv").toString)
+      kvRoot = SparkTestSession.tempDir("edge_kv").toString)
     eng.kvUpsert("fresh_kind", Seq((1L, "v")).toDF("key", "value"), "key")
     assert(eng.kvQuery("fresh_kind").count() == 1)
   }
@@ -96,7 +96,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // leaf paths in Spark's path resolution — the engine must probe,
     // not catch (this was caught by running Demo, not the specs)
     val eng = new Engine(spark, kvRoot =
-      java.nio.file.Files.createTempDirectory("edge_kv_root").toString + "/nested/kv")
+      SparkTestSession.tempDir("edge_kv_root").toString + "/nested/kv")
     eng.kvUpsert("cfg", Seq((1L, "on")).toDF("key", "flag"), "key")
     assert(eng.kvQuery("cfg").count() == 1)
     eng.kvDelete("never_created", Seq(1L).toDF("key"), "key") // no-op, no error

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ class EngineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val engine =
-    new Engine(spark, kvRoot = Files.createTempDirectory("eng_kv").toString)
+    new Engine(spark, kvRoot = SparkTestSession.tempDir("eng_kv").toString)
 
   test("dataset + view + query + pages (BigQueryClient parity)") {
     engine.ensureDataset("eng_db")
@@ -24,7 +23,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("external table registers hive-partitioned data (parity: create_external_table)") {
-    val dir = Files.createTempDirectory("eng_ext").toString
+    val dir = SparkTestSession.tempDir("eng_ext").toString
     Seq((1, "x"), (2, "y")).toDF("v", "k")
       .write.mode("overwrite").partitionBy("k").parquet(dir)
     val df = engine.externalTable("eng_ext", "parquet", dir)
@@ -64,7 +63,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("blob upload/download (GCSClient parity)") {
-    val p = Files.createTempDirectory("eng_blob").toString + "/x/y/blob.txt"
+    val p = SparkTestSession.tempDir("eng_blob").toString + "/x/y/blob.txt"
     engine.uploadString("hello graft", p)
     assert(engine.downloadString(p) == "hello graft")
   }
@@ -80,7 +79,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("kv upsert: a failed swap-in rename throws and keeps the previous rows") {
     FaultInjectingFileSystem.register(spark)
-    val real = Files.createTempDirectory("eng_kv_fault").toString
+    val real = SparkTestSession.tempDir("eng_kv_fault").toString
     val kv = new Engine(spark, kvRoot = s"faulty://$real/kv")
     kv.kvUpsert("users", Seq((1L, "ann"), (2L, "bob")).toDF("key", "name"), "key")
     def users(): Seq[(Long, String)] =

@@ -76,4 +76,15 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
+
+  test("a strictly typed function rejects a wrong input type instead of casting") {
+    // SigAgreeExpr declares array<bigint> inputs through
+    // ExpectsInputTypes, which rejects array<int>; a static call
+    // (ImplicitCastInputTypes) would cast instead, which is why the
+    // strictly typed functions stay expression classes
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      fresh.sql("SELECT graft_sig_agree(array(1, 2, 3), array(1, 9, 3))").collect()
+    }
+    assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions.{asc_nulls_first, col}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -116,7 +115,7 @@ class FjcPipelineSpec extends AnyFunSuite {
   }
 
   test("runAll writes raw/quality/trusted/15 dims as parquet") {
-    val out = Files.createTempDirectory("fjc_wh").toString
+    val out = SparkTestSession.tempDir("fjc_wh").toString
     FjcPipeline.runAll(spark, fixturePath, out)
     assert(spark.read.parquet(s"$out/quality").count() == 4)
     assert(spark.read.parquet(s"$out/trusted").columns.length == 34)
@@ -130,7 +129,7 @@ class FjcPipelineSpec extends AnyFunSuite {
 
   test("runAll: a failed dim write alerts with its step name and aborts the rest") {
     FaultInjectingFileSystem.register(spark)
-    val out = "faulty://" + Files.createTempDirectory("fjc_wh_fail").toString
+    val out = "faulty://" + SparkTestSession.tempDir("fjc_wh_fail").toString
     var alerted = Seq.empty[String]
     FaultInjectingFileSystem.failRenameWhen = (_, dst) => dst.toString.contains("/dims/DimNos/")
     try {

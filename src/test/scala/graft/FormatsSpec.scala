@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
@@ -16,7 +15,7 @@ class FormatsSpec extends AnyFunSuite {
     Tables.load(spark, "/root/testdata/sf0.001", "region")
 
   private def roundTrip(format: String): Unit = {
-    val dir = Files.createTempDirectory(s"fmt_$format").toString
+    val dir = SparkTestSession.tempDir(s"fmt_$format").toString
     region.write.mode("overwrite").format(format).save(dir)
     val back = spark.read.format(format)
       .option("inferSchema", "true").option("header", "true").load(dir)
@@ -28,7 +27,7 @@ class FormatsSpec extends AnyFunSuite {
   test("JSON-lines round-trip")(roundTrip("json"))
 
   test("CSV round-trip with header + explicit schema") {
-    val dir = Files.createTempDirectory("fmt_csv").toString
+    val dir = SparkTestSession.tempDir("fmt_csv").toString
     region.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(region.schema)
       .option("header", "true").csv(dir)
@@ -37,12 +36,12 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("compressed sinks: gzip csv and zstd parquet read back") {
-    val dir1 = Files.createTempDirectory("fmt_gz").toString
+    val dir1 = SparkTestSession.tempDir("fmt_gz").toString
     region.write.mode("overwrite").option("header", "true")
       .option("compression", "gzip").csv(dir1)
     assert(spark.read.schema(region.schema).option("header", "true")
       .csv(dir1).count() == region.count())
-    val dir2 = Files.createTempDirectory("fmt_zstd").toString
+    val dir2 = SparkTestSession.tempDir("fmt_zstd").toString
     region.write.mode("overwrite").option("compression", "zstd").parquet(dir2)
     assert(spark.read.parquet(dir2).count() == region.count())
   }

@@ -40,7 +40,7 @@ class HttpFetchSpec extends AnyFunSuite {
         exchange.getResponseBody.write(payload)
         exchange.close()
       })
-      val dir = Files.createTempDirectory("http_land").toString
+      val dir = SparkTestSession.tempDir("http_land").toString
       val p = HttpFetch.fetch(s"http://127.0.0.1:$port/archives/svc.tsv.gz", dir)
       assert(p.getFileName.toString == "svc.tsv.gz")
       assert(java.util.Arrays.equals(Files.readAllBytes(p), payload))
@@ -60,7 +60,7 @@ class HttpFetchSpec extends AnyFunSuite {
         exchange.getResponseBody.write(body)
         exchange.close()
       })
-      val dir = Files.createTempDirectory("http_land").toString
+      val dir = SparkTestSession.tempDir("http_land").toString
       val p = HttpFetch.fetch(s"http://127.0.0.1:$port/moved", dir, Some("renamed.bin"))
       assert(p.getFileName.toString == "renamed.bin")
       assert(new String(Files.readAllBytes(p), "UTF-8") == "plain payload")
@@ -73,7 +73,7 @@ class HttpFetchSpec extends AnyFunSuite {
         exchange.sendResponseHeaders(404, -1)
         exchange.close()
       })
-      val dir = Files.createTempDirectory("http_land")
+      val dir = SparkTestSession.tempDir("http_land")
       val e = intercept[RuntimeException](
         HttpFetch.fetch(s"http://127.0.0.1:$port/missing.gz", dir.toString))
       assert(e.getMessage.contains("404"))
@@ -95,7 +95,7 @@ class HttpFetchSpec extends AnyFunSuite {
           exchange.close()
         }
       })
-      val dir = Files.createTempDirectory("http_land").toString
+      val dir = SparkTestSession.tempDir("http_land").toString
       val p = HttpFetch.fetch(s"http://127.0.0.1:$port/flaky", dir,
         retries = 2, backoffMs = 10L)
       assert(calls.get() == 3)
@@ -111,7 +111,7 @@ class HttpFetchSpec extends AnyFunSuite {
         exchange.sendResponseHeaders(404, -1)
         exchange.close()
       })
-      val dir = Files.createTempDirectory("http_land").toString
+      val dir = SparkTestSession.tempDir("http_land").toString
       intercept[RuntimeException](
         HttpFetch.fetch(s"http://127.0.0.1:$port/gone", dir,
           retries = 3, backoffMs = 10L))
@@ -125,7 +125,7 @@ class HttpFetchSpec extends AnyFunSuite {
         exchange.sendResponseHeaders(500, -1)
         exchange.close()
       })
-      val dir = Files.createTempDirectory("http_land")
+      val dir = SparkTestSession.tempDir("http_land")
       val e = intercept[RuntimeException](
         HttpFetch.fetch(s"http://127.0.0.1:$port/down.gz", dir.toString,
           retries = 1, backoffMs = 10L))

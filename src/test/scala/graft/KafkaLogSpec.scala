@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +10,7 @@ class KafkaLogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshTopic(partitions: Int = 3): String = {
-    val root = Files.createTempDirectory("kafka_log").toString
+    val root = SparkTestSession.tempDir("kafka_log").toString
     KafkaLog.createTopic(root, "t", partitions)
     root
   }
@@ -127,8 +125,8 @@ class KafkaLogSpec extends AnyFunSuite {
     val root = freshTopic(partitions = 2)
     KafkaLog.produce(Seq(("a", "1"), ("b", "2")).toDF("key", "value"),
       root, "t", col("key"), col("value"))
-    val ckpt = Files.createTempDirectory("kafka_ckpt").toString
-    val outDir = Files.createTempDirectory("kafka_sink").toString
+    val ckpt = SparkTestSession.tempDir("kafka_ckpt").toString
+    val outDir = SparkTestSession.tempDir("kafka_sink").toString
     def runOnce(): Unit = {
       val q = KafkaLog.readStream(spark, root, "t")
         .writeStream.outputMode("append").format("parquet")

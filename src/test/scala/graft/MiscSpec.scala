@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
@@ -16,7 +15,7 @@ class MiscSpec extends AnyFunSuite {
         "gs://bucket/path", remove_file = true, "2024-01-01T00:00:00"),
       Messages.TransferRequest("sftp://h2:22/x", "gs://b2/y",
         remove_file = false, "2024-01-02T00:00:00")).toDS()
-    val topic = Files.createTempDirectory("topic").toString
+    val topic = SparkTestSession.tempDir("topic").toString
     Messages.publish(reqs, topic)
     val got = Messages.subscribe(spark, topic).collect().toSet
     assert(got == reqs.collect().toSet)
@@ -27,7 +26,7 @@ class MiscSpec extends AnyFunSuite {
       Messages.TransferRequest("sftp://a/1", "gs://b/1", remove_file = false, "2024-01-01"),
       Messages.TransferRequest("sftp://a/2", "gs://b/2", remove_file = false, "2024-01-02"),
       Messages.TransferRequest("sftp://a/3", "gs://b/3", remove_file = true, "2024-01-03")).toDS()
-    val topic = Files.createTempDirectory("topic_ack").toString
+    val topic = SparkTestSession.tempDir("topic_ack").toString
     Messages.publish(reqs, topic)
 
     // cache pins each pulled set: pull() is lazy over topic-minus-acks,
@@ -583,7 +582,7 @@ class MiscSpec extends AnyFunSuite {
   test("Messages: re-publishing identical payloads yields fresh ids (no silent loss)") {
     val req = Seq(Messages.TransferRequest("sftp://a/1", "gs://b/1",
       remove_file = false, "2024-01-01")).toDS()
-    val topic = Files.createTempDirectory("topic_repub").toString
+    val topic = SparkTestSession.tempDir("topic_repub").toString
     Messages.publish(req, topic)
     val first = Messages.pull(spark, topic, "w").cache()
     assert(first.count() == 1)

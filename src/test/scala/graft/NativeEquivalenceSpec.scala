@@ -5,6 +5,8 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.Text
 
 /** Randomized equivalence: each native expression must agree with the
@@ -437,5 +439,104 @@ class NativeEquivalenceSpec extends AnyFunSuite {
     df.foreach { case (sc, err) =>
       assert(err <= sc / 2 + 1e-12, s"err $err exceeds scale/2 (${sc / 2})")
     }
+  }
+
+  test("every static-call builder gives the same rows under codegen and interpreted") {
+    import graft.expressions.{NativeDates, NativeEditSim, NativeRobots,
+      NativeSignatures, NativeText, NativeUrl}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.{LocalTableScanExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types._
+    // NULL, empty, ASCII, 2/3/4-byte UTF-8, and junk that must give
+    // NULL (an impossible date, a malformed URL)
+    val texts = Seq[String](null, "", "The cat and THE dog. a b a b!",
+      "x\ny\nx\n   \nx", "Café naïve — Ünïcode ß", "日本語 の テキスト 日本語 の",
+      "emoji 😀 😀 𝄞 x 😀", "<p>A &amp; <b>B</b></p><script>1<2</script>",
+      "Cafe\u0301 \u0001 a\t\tb  ", "2/29/2000", "2/30/2000", "12/31/1999",
+      "HTTP://Ex.COM:80/a/?b=2&a=1&utm_source=x#f", "https://WWW.Ex.org:8443/p/q?z=1",
+      "http://h.io:port/x", "/a/b")
+    val patterns = Seq[String]("/a*b$", "", null, "*q", "/")
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("t", StringType),
+      StructField("u", StringType), StructField("d", DateType),
+      StructField("p", StringType),
+      StructField("starts", ArrayType(IntegerType)),
+      StructField("ends", ArrayType(IntegerType))))
+    val rows = texts.indices.map { i =>
+      Row(i, texts(i), texts((i + 1) % texts.size),
+        if (i % 4 == 0) null else java.sql.Date.valueOf(s"${1990 + i}-0${1 + i % 9}-1${i % 10}"),
+        patterns(i % patterns.size),
+        if (i % 3 == 0) null else Seq(i % 2), Seq(i % 2 + 2))
+    }
+    val t = $"t"
+    val toks = NativeText.tokens(t)
+    val builders: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "tokens" -> toks,
+      "fingerprint" -> NativeText.fingerprint(toks),
+      "charEntropy" -> NativeText.charEntropy(t),
+      "topNgramFrac" -> NativeText.topNgramFrac(toks, 2),
+      "dupNgramFrac" -> NativeText.dupNgramFrac(toks, 2),
+      "intersectCount" -> NativeText.intersectCount(toks, NativeText.tokens($"u")),
+      "jaccardArrays" -> NativeText.jaccardArrays(toks, NativeText.tokens($"u")),
+      "chunks" -> NativeText.chunks(t, 3, 2),
+      "dupLineFrac" -> NativeText.dupLineFrac(t),
+      "dedupLines" -> NativeText.dedupLines(t),
+      "nfc" -> NativeText.nfc(t),
+      "htmlExtract" -> NativeText.htmlExtract(t),
+      "cleanText" -> NativeText.cleanText(t),
+      "chunksWithCounts" -> NativeText.chunksWithCounts(t, 3, 2),
+      "wordNgrams" -> NativeText.wordNgrams(toks, 2),
+      "wordNgramHashes" -> NativeText.wordNgramHashes(toks, 2),
+      "wordNgramHashes seeded" -> NativeText.wordNgramHashes(toks, 2, 7L),
+      "wordNgramHashPairs" -> NativeText.wordNgramHashPairs(toks, 2),
+      "wordBigrams" -> NativeText.wordBigrams(toks),
+      "removeTokenRanges" -> NativeText.removeTokenRanges(toks, $"starts", $"ends"),
+      "subwordCount" -> NativeText.subwordCount(toks),
+      "tokenCount" -> NativeText.tokenCount(t),
+      "punctRatio" -> NativeText.punctRatio(t),
+      "fingerprintText" -> NativeText.fingerprintText(t),
+      "simhashText" -> NativeText.simhashText(t),
+      "subwordCountText" -> NativeText.subwordCountText(t),
+      "simhash64" -> NativeSignatures.simhash64(toks),
+      "charShingles" -> NativeSignatures.charShingles(t, 3),
+      "jaccardText" -> NativeSignatures.jaccardText(t, $"u", 3),
+      "parseMdy" -> NativeDates.parseMdy(t),
+      "formatMdy" -> NativeDates.formatMdy($"d"),
+      "normalizeUrl" -> NativeUrl.normalizeUrl(t),
+      "urlHost" -> NativeUrl.urlHost(t),
+      "urlPathQuery" -> NativeUrl.urlPathQuery(t),
+      "robotsMatch" -> NativeRobots.robotsMatch(t, $"p"),
+      "jaroWinkler" -> NativeEditSim.jaroWinkler(t, $"u"))
+    val staged = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      .localCheckpoint()
+    val local = spark.createDataFrame(rows.asJava, schema)
+    def unwrap(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val results = builders.map { case (name, c) =>
+      val gen = staged.select($"id", c.as("v"))
+      val genRows = gen.collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      val genPlan = unwrap(gen.queryExecution.executedPlan)
+      assert(genPlan.isInstanceOf[WholeStageCodegenExec] &&
+        genPlan.toString.contains("static_invoke("), s"$name not codegen'd:\n$genPlan")
+      val interp = local.select($"id", c.as("v"))
+      val interpRows = interp.collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      val interpPlan = interp.queryExecution.executedPlan
+      assert(interpPlan.isInstanceOf[LocalTableScanExec],
+        s"$name not evaluated on the local relation:\n$interpPlan")
+      assert(genRows.size == rows.size && genRows == interpRows,
+        s"$name: codegen $genRows != interpreted $interpRows")
+      name -> genRows
+    }.toMap
+    // NULL in gives NULL out; junk gives NULL where the function says so
+    val nullRow = texts.indexOf(null)
+    assert(results.values.forall(_(nullRow) == null))
+    assert(results("parseMdy")(texts.indexOf("2/30/2000")) == null)
+    assert(results("parseMdy")(texts.indexOf("2/29/2000")) ==
+      java.sql.Date.valueOf("2000-02-29"))
+    assert(results("normalizeUrl")(texts.indexOf("http://h.io:port/x")) == null)
+    assert(results("urlHost")(texts.indexOf("http://h.io:port/x")) == null)
   }
 }

@@ -66,7 +66,7 @@ class PlanSpec extends AnyFunSuite {
   test("indexed IVF search prunes unprobed list partitions (DPP)") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val idx = Ivf.indexFor(s"plan-spec-dpp:$sfDir", emb, k = 8, iters = 1)
-    val lists = java.nio.file.Files.createTempDirectory("ivf_dpp").toString
+    val lists = SparkTestSession.tempDir("ivf_dpp").toString
     Ivf.writeLists(emb, idx, lists)
     val q = Ivf.searchIndexed(emb.where($"vec_id" < 2), lists, idx, k = 3, nprobe = 2)
     val plan = executedPlan(q)
@@ -92,7 +92,7 @@ class PlanSpec extends AnyFunSuite {
         graft.functions.Text.dupNgramCharFrac($"text", 3).as("dup3"))
     df.write.format("noop").mode("overwrite").save()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("dup_ngram_frac_native"), plan)
+    assert(plan.contains("NativeText.dupNgramCharFracEval("), plan)
     assert("\\*\\(\\d+\\) Project".r.findFirstIn(plan).isDefined,
       s"dup-ngram projection not codegen'd:\n$plan")
     // map-only: no exchange anywhere in the per-doc signal scan
@@ -130,8 +130,8 @@ class PlanSpec extends AnyFunSuite {
     // makes it adaptive; a noop write would execute a separate QE)
     annotated.collect()
     val plan = annotated.queryExecution.executedPlan.toString
-    assert(plan.contains("dup_line_frac_native"), plan)
-    assert(plan.contains("char_entropy_native"), plan)
+    assert(plan.contains("NativeText.dupLineFracEval("), plan)
+    assert(plan.contains("NativeText.charEntropyEval("), plan)
     // the signal projection must live inside whole-stage codegen
     assert("\\*\\(\\d+\\) Project".r.findAllIn(plan).nonEmpty,
       s"curation projection not in WSCG:\n$plan")
@@ -139,7 +139,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("chunking emits struct<chunk,n_tok> natively — no re-tokenize of chunk text") {
     val plan = executedPlan(SparkEntry.queries("x22_chunking")(spark, sfDir))
-    assert(plan.contains("chunks_with_counts_native"), plan)
+    assert(plan.contains("NativeText.chunksWithCountsEval("), plan)
     assert(!plan.contains("split("), s"chunk text must not be re-split for counts:\n$plan")
   }
 
@@ -244,7 +244,7 @@ class PlanSpec extends AnyFunSuite {
       "the sun sets slowly behind the distant mountains of the west"
     val d = "observability dashboards aggregate latency percentiles " +
       "error rates and saturation metrics across distributed services for the oncall engineer"
-    val dir = java.nio.file.Files.createTempDirectory("plan_admit").toString
+    val dir = SparkTestSession.tempDir("plan_admit").toString
     Seq((100L, a)).toDF("doc_id", "text").write.parquet(s"$dir/corpus")
     Seq((1L, a.replace("slowly", "quickly")), (2L, d), (3L, d.replace("oncall", "platform")),
       (4L, d)).toDF("doc_id", "text").write.parquet(s"$dir/batch")
@@ -351,7 +351,7 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("e", date_add(to_date($"l_shipdate"), $"l_linenumber"))
     // the island pass itself must be window-free and hash-shuffle-free:
     // its one exchange is the RANGE partition pinned inside the
-    // localCheckpoint (a hot key spreads across partitions there), and
+    // persisted islands frame (a hot key spreads across partitions there), and
     // the boundary fix-up joins back via broadcast
     val islands = graft.operators.Intervals.mergeIslands(
       li, "l_suppkey", "s", "e", Seq("l_orderkey", "l_linenumber"))
@@ -483,7 +483,7 @@ class PlanSpec extends AnyFunSuite {
       graft.operators.LmScore.scoreBits(docs.where($"doc_id" >= 30), lm))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"LM joins must stay equi-join shaped:\n$plan")
-    assert(plan.contains("word_bigrams_native"), plan)
+    assert(plan.contains("NativeText.wordBigramsEval("), plan)
     val trainPlan = lm.big.queryExecution.executedPlan.toString
     assert(trainPlan.contains("HashAggregate(keys=[a") ||
       trainPlan.contains("InMemory"), // persisted artifact may show as cached scan
@@ -523,13 +523,13 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("HashAggregate(keys=[gh1"), plan)
     // the window stream is a native expression over the scan — no
     // CodegenFallback HOF chain feeding the posexplode
-    assert(plan.contains("word_ngram_hash_pairs_native")
-      && plan.contains("tokens_native"), plan)
+    assert(plan.contains("NativeText.wordNgramHashPairsEval(")
+      && plan.contains("NativeText.tokensEval("), plan)
     val rewrite = executedPlan(
       graft.operators.SpanDedup.dedupSpans(docs, k = 8))
     assert(!rewrite.contains("CartesianProduct") && !rewrite.contains("BroadcastNestedLoop"),
       s"span rewrite join must stay equi-join shaped:\n$rewrite")
-    assert(rewrite.contains("remove_token_ranges_native"), rewrite)
+    assert(rewrite.contains("NativeText.removeTokenRangesEval("), rewrite)
   }
 
   test("SemiAntiRightDedup: non-broadcastable anti/semi right sides dedup before the join") {
@@ -613,7 +613,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = executedPlan(graft.operators.Robots.verdicts(urls, rules))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("Window"), s"longest-match must be an agg, not a window sort:\n$plan")
-    assert(plan.contains("robots_match_native"), s"match must be the native expr in the join:\n$plan")
+    assert(plan.contains("NativeRobots.robotsMatchEval("), s"match must be the native expr in the join:\n$plan")
     assert(plan.contains("partial_max"),
       s"THIS groupBy's longest-match max must map-side combine:\n$plan")
   }
@@ -691,7 +691,7 @@ class PlanSpec extends AnyFunSuite {
     val p = graft.operators.EntityResolution.pairs(
       docs, "doc_id", "name", threshold = 0.9)
     val plan = executedPlan(p)
-    assert(plan.contains("jaro_winkler_native"),
+    assert(plan.contains("NativeEditSim.jaroWinklerEval("),
       s"similarity must ride the join as the native expression:\n$plan")
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
@@ -700,7 +700,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("dims: all 15 code sets from ONE trusted-zone scan, partial collect_set before one exchange") {
     import graft.pipeline.FjcPipeline
-    val trustedDir = java.nio.file.Files.createTempDirectory("plan_trusted").toString
+    val trustedDir = SparkTestSession.tempDir("plan_trusted").toString
     FjcPipeline.quality(FjcPipeline.readRaw(spark, getClass.getResource("/fjc_sample.tsv").getPath))
       .write.mode("overwrite").parquet(trustedDir)
     val plan = executedPlan(graft.ops.Dims.codes(spark.read.parquet(trustedDir),

@@ -225,7 +225,7 @@ class SketchesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = spark.range(15000)
       .select(($"id" % 9).as("slice"), ($"id" % 3701).as("k"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_store").toString + "/s"
+    val dir = SparkTestSession.tempDir("graft_hll_store").toString + "/s"
     df.groupBy($"slice").agg(graft.functions.Hll.sketch($"k").as("s"))
       .write.parquet(dir)
     val merged = spark.read.parquet(dir)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions.{coalesce, expr, lit, max}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
     * stream can tail (the raw fixture is ns, which the stream reader's
     * fixed schema can't take directly). */
   private lazy val stagedDir: String = {
-    val dir = Files.createTempDirectory("events_stream").toString
+    val dir = SparkTestSession.tempDir("events_stream").toString
     Tables.load(spark, sfDir, "events").write.mode("overwrite").parquet(dir)
     dir
   }
@@ -70,7 +69,7 @@ class StreamingSpec extends AnyFunSuite {
     // event is late by construction — then the emitted session set
     // must be IDENTICAL whether the source is consumed as one batch
     // or file-by-file with state carried across micro-batches
-    val dir = Files.createTempDirectory("events_sorted").toString
+    val dir = SparkTestSession.tempDir("events_sorted").toString
     val ev = Tables.load(spark, sfDir, "events")
     val tsl = ev.select($"ts".cast("long").as("t"))
       .stat.approxQuantile("t", Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
@@ -117,7 +116,7 @@ class StreamingSpec extends AnyFunSuite {
     // emit). Sessions that SPAN the restart boundary are the point:
     // they only come out right if run 2 reloads run 1's open-session
     // state from the state store instead of starting empty.
-    val dir = Files.createTempDirectory("events_restart").toString
+    val dir = SparkTestSession.tempDir("events_restart").toString
     val ev = Tables.load(spark, sfDir, "events")
     val mid = ev.select($"ts".cast("long").as("t"))
       .stat.approxQuantile("t", Array(0.5), 0.001).head.toLong
@@ -131,8 +130,8 @@ class StreamingSpec extends AnyFunSuite {
         .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
         .foreach(f => assert(f.setLastModified(t0 + slice * 2000L)))
     }
-    val ckpt = Files.createTempDirectory("restart_ckpt").toString
-    val sink = Files.createTempDirectory("restart_sink").toString
+    val ckpt = SparkTestSession.tempDir("restart_ckpt").toString
+    val sink = SparkTestSession.tempDir("restart_sink").toString
     def runOnce(): Unit = {
       val q = EventStreams.sessionAgg(EventStreams.readStream(spark, dir,
           options = Map("maxFilesPerTrigger" -> "1")))
@@ -176,7 +175,7 @@ class StreamingSpec extends AnyFunSuite {
     // 60-minute window can only be emitted if run 2 reloaded run 1's
     // buffered view rows — and the exactly-once sink must not
     // re-emit run 1's pairs.
-    val dir = Files.createTempDirectory("events_join_restart").toString
+    val dir = SparkTestSession.tempDir("events_join_restart").toString
     val ev = Tables.load(spark, sfDir, "events")
     // cut the stream INSIDE the widest actual view→click pair, so at
     // least one pair is guaranteed to straddle the restart (a median
@@ -203,8 +202,8 @@ class StreamingSpec extends AnyFunSuite {
         .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
         .foreach(f => assert(f.setLastModified(t0 + slice * 2000L)))
     }
-    val ckpt = Files.createTempDirectory("join_restart_ckpt").toString
-    val sink = Files.createTempDirectory("join_restart_sink").toString
+    val ckpt = SparkTestSession.tempDir("join_restart_ckpt").toString
+    val sink = SparkTestSession.tempDir("join_restart_sink").toString
     def runOnce(): Unit = {
       val q = EventStreams.viewClickJoin(
           EventStreams.readStream(spark, dir,
@@ -255,7 +254,7 @@ class StreamingSpec extends AnyFunSuite {
     // as a second file with a later mtime; maxFilesPerTrigger=1 makes
     // the sentinel batch evict ALL real view state and flush every
     // null. The result is then the COMPLETE batch left join.
-    val dir = Files.createTempDirectory("events_lo").toString
+    val dir = SparkTestSession.tempDir("events_lo").toString
     val ev = Tables.load(spark, sfDir, "events")
     ev.coalesce(1).write.mode("append").parquet(dir)
     def parquets = new java.io.File(dir).listFiles()
@@ -344,7 +343,7 @@ class StreamingSpec extends AnyFunSuite {
     // the shared staged dir may be a single file (single-row-group
     // fixture): stage a 4-file copy so file-per-batch really yields
     // multiple batches with state carried across them
-    val multiDir = Files.createTempDirectory("events_multi").toString
+    val multiDir = SparkTestSession.tempDir("events_multi").toString
     Tables.load(spark, sfDir, "events").repartition(4)
       .write.mode("overwrite").parquet(multiDir)
     val stream = spark.readStream.schema(EventStreams.schema)
@@ -374,7 +373,7 @@ class StreamingSpec extends AnyFunSuite {
     // to the batch operator.
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val multiDir = Files.createTempDirectory("events_funnel").toString
+    val multiDir = SparkTestSession.tempDir("events_funnel").toString
     // repartition scatters each user's events across files — batches
     // see them out of time order, the case the buffer+re-sort exists for
     Tables.load(spark, sfDir, "events").repartition(4)
@@ -407,7 +406,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ST5: bounded funnel — watermark evicts, timeout collapses, parity holds") {
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_funnel_b").toString
+    val dir = SparkTestSession.tempDir("events_funnel_b").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00")
     def day(d: Int) = new java.sql.Timestamp(t0.getTime + d * 86400000L)
     // one file per slice, mtimes strictly ascending → one slice per
@@ -487,7 +486,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ST5: bounded step times equal the batch greedy chain; state rows fall") {
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_steptimes_b").toString
+    val dir = SparkTestSession.tempDir("events_steptimes_b").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00")
     def day(d: Int) = new java.sql.Timestamp(t0.getTime + d * 86400000L)
     // same slice discipline as the bounded-funnel test: one file per
@@ -551,7 +550,7 @@ class StreamingSpec extends AnyFunSuite {
     // the FIRST step-0 event, so the correct verdict is chain 1's.
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_funnel_restart").toString
+    val dir = SparkTestSession.tempDir("events_funnel_restart").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00")
     def day(d: Double) = new java.sql.Timestamp(t0.getTime + (d * 86400000L).toLong)
     val slices: Seq[Seq[(Long, java.sql.Timestamp, Long, String)]] = Seq(
@@ -612,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ST5: bounded streaming attribution equals the batch as-of; state rows fall") {
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_attrib").toString
+    val dir = SparkTestSession.tempDir("events_attrib").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00")
     def day(d: Double) = new java.sql.Timestamp(t0.getTime + (d * 86400000L).toLong)
     // u1: same-ts channel tie (view vs click → MAX = view), purchase
@@ -681,7 +680,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ST5: bounded streaming retention equals batch cohorts; state rows fall") {
     import EventStreams._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_retention").toString
+    val dir = SparkTestSession.tempDir("events_retention").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-04 10:00:00") // a Monday
     def day(d: Double) = new java.sql.Timestamp(t0.getTime + (d * 86400000L).toLong)
     // u1: cohort week0, active weeks {0,1,3}; u2: cohort week1,
@@ -738,7 +737,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ST2+: streaming per-window HLL blobs — append mode evicts, blobs equal batch") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("events_hll").toString
+    val dir = SparkTestSession.tempDir("events_hll").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 00:30:00")
     def ts(d: Int, u: Long) = (u, new java.sql.Timestamp(t0.getTime + d * 86400000L))
     // 3 real days with overlapping users, then a far-future sentinel
@@ -784,8 +783,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ST6: foreachBatch parquet sink") {
-    val out = Files.createTempDirectory("sink_out").toString
-    val ckpt = Files.createTempDirectory("sink_ckpt").toString
+    val out = SparkTestSession.tempDir("sink_out").toString
+    val ckpt = SparkTestSession.tempDir("sink_ckpt").toString
     val stream = EventStreams.readStream(spark, stagedDir)
     val q = EventStreams.sinkToParquet(
       stream.select($"event_id", $"event_type"), out, ckpt)
@@ -796,7 +795,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ST5+: dropDuplicatesWithinWatermark dedups within the delay; state expires after") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("dedup_stream").toString
+    val dir = SparkTestSession.tempDir("dedup_stream").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     val slices = Seq(
@@ -834,7 +833,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Tables.load(spark, sfDir, "documents")
     val corpus = docs.where($"doc_id" < 30)
     val streamHalf = docs.where($"doc_id" >= 30)
-    val dir = Files.createTempDirectory("docs_stream").toString
+    val dir = SparkTestSession.tempDir("docs_stream").toString
     streamHalf.coalesce(2).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     val q = graft.streaming.StreamNearDup.vsCorpus(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +18,7 @@ class TablesSpec extends AnyFunSuite {
   private val micros = 1700000000123456L // 2023-11-14T22:13:20.123456Z
 
   private def loadStaged(write: String => Unit): (DataType, Long) = {
-    val dir = Files.createTempDirectory("tables_ts").toString
+    val dir = SparkTestSession.tempDir("tables_ts").toString
     write(s"$dir/events.parquet")
     val df = Tables.load(spark, dir, "events")
     val dt = df.schema("ts").dataType
@@ -55,7 +53,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("tables without a ts column load untouched") {
-    val dir = Files.createTempDirectory("tables_notts").toString
+    val dir = SparkTestSession.tempDir("tables_notts").toString
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/region.parquet")
     val df = Tables.load(spark, dir, "region")
     assert(df.schema.map(_.name) == Seq("id", "name"))
@@ -63,7 +61,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("plan cache reuses per session and does not pin dropped sessions") {
-    val dir = Files.createTempDirectory("tables_cache").toString
+    val dir = SparkTestSession.tempDir("tables_cache").toString
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/region.parquet")
 
     // same session + table → the SAME resolved plan instance

@@ -183,7 +183,7 @@ class WarcSpec extends AnyFunSuite {
       Warc.gzipMember(respRecord(2, "B" * 50000, status = 404)),
       Warc.gzipMember(respRecord(3, "C")))
     val bytes = members.reduce(_ ++ _)
-    val dir = Files.createTempDirectory("graft_warc_idx")
+    val dir = SparkTestSession.tempDir("graft_warc_idx")
     Files.write(dir.resolve("a.warc.gz"), bytes)
 
     val idx = Warc.buildIndex(spark, dir.toString)
@@ -209,7 +209,7 @@ class WarcSpec extends AnyFunSuite {
     val m1 = Warc.gzipMember(respRecord(1, "first"))
     val m2 = Warc.gzipMember(respRecord(2, "second"))
     val m3 = Warc.gzipMember(respRecord(3, "third"))
-    val dir = Files.createTempDirectory("graft_warc_fetch")
+    val dir = SparkTestSession.tempDir("graft_warc_fetch")
     val f = dir.resolve("a.warc.gz")
     Files.write(f, m1 ++ m2 ++ m3)
     // materialize the index BEFORE corrupting (a DataFrame is lazy —
@@ -243,7 +243,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("fetchAt equals full-scan read on every field, across files") {
-    val dir = Files.createTempDirectory("graft_warc_eq")
+    val dir = SparkTestSession.tempDir("graft_warc_eq")
     val rnd = new scala.util.Random(11)
     for (fno <- 0 until 3) {
       val ms = (0 until 5).map { i =>
@@ -294,7 +294,7 @@ class WarcSpec extends AnyFunSuite {
     val fancy = out.toByteArray
     val plain = Warc.gzipMember(respRecord(10, "tail"))
 
-    val dir = Files.createTempDirectory("graft_warc_hdr")
+    val dir = SparkTestSession.tempDir("graft_warc_hdr")
     Files.write(dir.resolve("a.warc.gz"), fancy ++ plain)
     val idx = Warc.buildIndex(spark, dir.toString).orderBy("offset").collect()
     assert(idx.length == 2)
@@ -326,7 +326,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("updateIndex indexes ONLY archives the existing index has no rows for") {
-    val dir = Files.createTempDirectory("graft_warc_upd")
+    val dir = SparkTestSession.tempDir("graft_warc_upd")
     Files.write(dir.resolve("day1.warc.gz"), Warc.gzipMember(respRecord(1, "a")))
     // materialize (a DataFrame over the dir would see day2 lazily)
     def pin(df: org.apache.spark.sql.DataFrame) = spark.createDataFrame(
@@ -376,7 +376,7 @@ class WarcSpec extends AnyFunSuite {
     val bad = Warc.gzipMember("this is not a WARC record\r\n\r\n".getBytes(UTF_8))
     val bytes = Warc.gzipMember(respRecord(1, "ok")) ++ bad ++
       Warc.gzipMember(respRecord(2, "after"))
-    val dir = Files.createTempDirectory("graft_warc_dirty")
+    val dir = SparkTestSession.tempDir("graft_warc_dirty")
     Files.write(dir.resolve("a.warc.gz"), bytes)
     val scanned = Warc.read(spark, dir.toString).collect()
     val idx = Warc.buildIndex(spark, dir.toString)
@@ -409,7 +409,7 @@ class WarcSpec extends AnyFunSuite {
     // (unknown), not silently classify the scan as complete and leave
     // the index permanently truncated with no durable record
     FaultInjectingFileSystem.register(spark)
-    val dir = Files.createTempDirectory("graft_warc_stat")
+    val dir = SparkTestSession.tempDir("graft_warc_stat")
     val bad = Warc.gzipMember("not a WARC record\r\n\r\n".getBytes(UTF_8))
     Files.write(dir.resolve("a.warc.gz"),
       Warc.gzipMember(respRecord(1, "ok")) ++ bad)
@@ -438,7 +438,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("distributed read: one task per file, schema, response projection") {
-    val dir = Files.createTempDirectory("graft_warc_spec")
+    val dir = SparkTestSession.tempDir("graft_warc_spec")
     Files.write(dir.resolve("a.warc.gz"),
       Warc.gzipMember(reqRecord(1)) ++ Warc.gzipMember(respRecord(1, "<b>A</b>")))
     Files.write(dir.resolve("b.warc"),

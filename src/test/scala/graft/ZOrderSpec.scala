@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.ZOrder
@@ -59,7 +57,7 @@ class ZOrderSpec extends AnyFunSuite {
   test("locality: a 2-D box touches few z-files; a 1-key sort reads all") {
     val grid = (0 until 32).flatMap(x => (0 until 32).map(y => (x.toLong, y.toLong)))
       .toDF("x", "y")
-    val zDir = Files.createTempDirectory("graft_zorder").toString
+    val zDir = SparkTestSession.tempDir("graft_zorder").toString
     ZOrder.write(grid, "x", "y", zDir, numFiles = 16, bits = 5)
 
     val box = (r: org.apache.spark.sql.DataFrame) =>
@@ -73,7 +71,7 @@ class ZOrderSpec extends AnyFunSuite {
     assert(spark.read.parquet(zDir).count() == 1024)
 
     // same data sorted by x only: a y-box predicate hits EVERY file
-    val xDir = Files.createTempDirectory("graft_xsort").toString
+    val xDir = SparkTestSession.tempDir("graft_xsort").toString
     grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(xDir)
     val xFiles = spark.read.parquet(xDir).where(col("y") < 8)

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * did not judge stale). */
 class KafkaLockSpec extends AnyFunSuite {
 
-  private def freshDir(): Path = Files.createTempDirectory("kafka_lock")
+  private def freshDir(): Path = graft.SparkTestSession.tempDir("kafka_lock")
 
   test("bodies never overlap under contention") {
     val dir = freshDir()
