@@ -128,16 +128,20 @@ object Sim {
   def srpSignature(v: Column, planes: Int): Column =
     graft.expressions.NativeSignatures.srpSignature(v, planes)
 
+  /** The SRP-LSH design point: 6 bands of 10 bits (a 60-plane
+    * signature). */
+  private val SrpBands = 6
+  private val SrpBitsPerBand = 10
+
   /** Approximate near-duplicate pairs by SRP-LSH banding: vectors
     * sharing any signature band become candidates (equi-join on the
     * band key — shuffle, no cross product); candidates are verified
     * with exact cosine ≥ threshold.
     *
-    * bands × bitsPerBand ≤ 63. At scale the candidate join is the only
-    * shuffle and its key space is `bands × 2^bitsPerBand` buckets.
+    * At scale the candidate join is the only shuffle and its key space
+    * is 6 × 2^10 buckets.
     */
   def nearDupPairs(df: DataFrame, threshold: Double,
-                   bands: Int = 6, bitsPerBand: Int = 10,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // Fully lazy by design: the vector projection is scan+cast, cheap
     // to recompute per branch, and a persisted/pre-materialized copy
@@ -149,7 +153,7 @@ object Sim {
     // memory for the session). Callers that genuinely reuse staged
     // artifacts should persist the INPUT themselves.
     val vecs = fanOut(df).select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val cand = srpBandCandidates(vecs, bands, bitsPerBand)
+    val cand = srpBandCandidates(vecs)
     cand
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
@@ -160,17 +164,16 @@ object Sim {
 
   /** Ids-only SRP-LSH candidate pairs over a staged (id, v) frame:
     * vectors sharing any signature band. */
-  private def srpBandCandidates(vecs: DataFrame, bands: Int, bitsPerBand: Int): DataFrame = {
-    val planes = bands * bitsPerBand
-    val withSig = vecs.withColumn("sig", srpSignature(col("v"), planes))
-    val mask = (1L << bitsPerBand) - 1
+  private def srpBandCandidates(vecs: DataFrame): DataFrame = {
+    val withSig = vecs.withColumn("sig", srpSignature(col("v"), SrpBands * SrpBitsPerBand))
+    val mask = (1L << SrpBitsPerBand) - 1
     // band on ids ONLY (vectors re-joined for verify) — and with
-    // 2^bitsPerBand = 1024 buckets per band the candidate set stays
+    // 2^10 = 1024 buckets per band the candidate set stays
     // near-linear instead of quadratic-within-16-buckets
     val banded = withSig.select(
       col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * bitsPerBand).bitwiseAND(mask)): _*)))
+      posexplode(array((0 until SrpBands).map(b =>
+        shiftright(col("sig"), b * SrpBitsPerBand).bitwiseAND(mask)): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
     banded.as("l").join(banded.as("r"), Seq("band", "bucket"))
@@ -183,11 +186,9 @@ object Sim {
     * verification) for recall audits: containment of the exact
     * high-cosine pair set in this candidate set is what the banding
     * design promises. */
-  def srpCandidates(df: DataFrame, bands: Int = 6, bitsPerBand: Int = 10,
+  def srpCandidates(df: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    srpBandCandidates(
-      fanOut(df).select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
-      bands, bitsPerBand)
+    srpBandCandidates(fanOut(df).select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")))
 
   /** Same rationale and policy as the dedup side — one shared
     * implementation so the fan-out condition can't drift. */

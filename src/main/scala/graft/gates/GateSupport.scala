@@ -182,26 +182,36 @@ private[graft] object GateSupport {
     finally rmTree(new java.io.File(dir))
   }
 
+  /** How long a gate stream may run: 2 minutes. */
+  private val GateTimeoutMs = 120000L
+
   /** Await a gate stream; if the timeout fires with the query still
     * running, STOP it (before the caller's checkpoint dir is deleted
     * out from under a live micro-batch) and fail LOUDLY — returning
     * normally would hand the caller a partially-populated sink to
     * compare against the oracle. */
-  def awaitGate(q: org.apache.spark.sql.streaming.StreamingQuery,
-                        timeoutMs: Long = 120000): Unit = {
-    // scale-up runs (sf1 fixtures are 10-100× the gate-design size)
-    // may legitimately need more than the default 2-minute budget.
-    // Parse defensively BEFORE awaitTermination: a malformed value
-    // must not throw past the q.stop() below and let the caller
-    // delete the checkpoint dir under a live micro-batch.
-    val t = sys.env.get("SPARK_GRAFT_STREAM_GATE_TIMEOUT_MS")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(timeoutMs)
-    if (!q.awaitTermination(t)) {
+  def awaitGate(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    if (!q.awaitTermination(GateTimeoutMs)) {
       q.stop()
       throw new IllegalStateException(
-        s"streaming gate query did not finish within ${t} ms")
+        s"streaming gate query did not finish within $GateTimeoutMs ms")
     }
+
+  /** Replay the stream `query` builds over the `staged` dir into the
+    * memory sink `name` in one AvailableNow run, with state-store
+    * parallelism sized to `staged` and a fresh checkpoint, and return
+    * the sink table. `query` is built inside, under the gate's stream
+    * conf. */
+  def replayToMemory(s: SparkSession, staged: String, name: String, mode: String)
+                    (query: => DataFrame): DataFrame = {
+    withStreamPartitions(s, streamPartitionsFor(staged)) {
+      withCheckpoint { ckpt =>
+        awaitGate(query.writeStream.outputMode(mode).format("memory")
+          .queryName(name).option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
+      }
+    }
+    s.table(name)
   }
 
   /** IVF inverted lists staged once per dataset dir (hive-partitioned

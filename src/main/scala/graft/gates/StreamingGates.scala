@@ -60,20 +60,12 @@ private[graft] object StreamingGates {
     // aggregate, memory sink — must equal the q18 batch oracle.
     "x13_stream_hourly" -> ((s, d) => {
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        val agg = s.readStream.schema(graft.streaming.EventStreams.schema)
+      replayToMemory(s, staged, "x13_out", "complete") {
+        s.readStream.schema(graft.streaming.EventStreams.schema)
           .parquet(staged)
           .groupBy(date_trunc("HOUR", col("ts")).as("h"), col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("v"))
-        withCheckpoint { ckpt =>
-          val q = agg.writeStream.outputMode("complete").format("memory")
-            .queryName("x13_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x13_out")
-        .orderBy(asc_nulls_first("h"), asc_nulls_first("event_type"))
+      }.orderBy(asc_nulls_first("h"), asc_nulls_first("event_type"))
     }),
 
     // X18 [ST3,ST4,ST5] STATEFUL streaming through the gate: session
@@ -82,23 +74,15 @@ private[graft] object StreamingGates {
     // max_ts - delay) on top of gaps-and-islands sessionization.
     "x18_stream_sessions" -> ((s, d) => {
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        val agg = s.readStream.schema(graft.streaming.EventStreams.schema)
+      replayToMemory(s, staged, "x18_out", "append") {
+        s.readStream.schema(graft.streaming.EventStreams.schema)
           .parquet(staged)
           .withWatermark("ts", "10 minutes")
           .groupBy(col("user_id"), session_window(col("ts"), "10 minutes"))
           .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("v"))
           .select(col("user_id"), col("session_window.start").as("session_start"),
             col("n_events"), col("v"))
-        withCheckpoint { ckpt =>
-          val q = agg.writeStream.outputMode("append").format("memory")
-            .queryName("x18_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x18_out")
-        .orderBy(asc_nulls_first("user_id"), asc_nulls_first("session_start"))
+      }.orderBy(asc_nulls_first("user_id"), asc_nulls_first("session_start"))
     }),
 
     // X28 [ST5+] STREAMING DEDUP through the gate: first-occurrence
@@ -123,20 +107,11 @@ private[graft] object StreamingGates {
       val docs = t(s, d, "documents")
       val staged = stageStreamDocs(s, d)
       val corpus = docs.where(col("doc_id") < 300)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        val stream = s.readStream.schema(docs.schema).parquet(staged)
-        val matches = graft.streaming.StreamNearDup.vsCorpus(
-          stream, corpus, threshold = 0.5,
+      replayToMemory(s, staged, "x56_out", "append") {
+        graft.streaming.StreamNearDup.vsCorpus(
+          s.readStream.schema(docs.schema).parquet(staged), corpus, threshold = 0.5,
           corpusCacheKey = Some(s"inc_corpus:$d"))
-        withCheckpoint { ckpt =>
-          val q = matches.writeStream.outputMode("append").format("memory")
-            .queryName("x56_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x56_out")
-        .select(col("doc_id"), col("corpus_id")).distinct()
+      }.select(col("doc_id"), col("corpus_id")).distinct()
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).cast(LongType).as("n_matches"))
         .orderBy(asc_nulls_first("doc_id"))
@@ -144,20 +119,12 @@ private[graft] object StreamingGates {
 
     "x28_stream_dedup" -> ((s, d) => {
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        val dedup = s.readStream.schema(graft.streaming.EventStreams.schema)
+      replayToMemory(s, staged, "x28_out", "append") {
+        s.readStream.schema(graft.streaming.EventStreams.schema)
           .parquet(staged)
           .select(col("user_id"), col("event_type"))
           .dropDuplicates("user_id", "event_type")
-        withCheckpoint { ckpt =>
-          val q = dedup.writeStream.outputMode("append").format("memory")
-            .queryName("x28_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x28_out")
-        .orderBy(asc_nulls_first("user_id"), asc_nulls_first("event_type"))
+      }.orderBy(asc_nulls_first("user_id"), asc_nulls_first("event_type"))
     }),
 
     // X32 [ST+] stream-static enrichment join: the event stream joins
@@ -168,21 +135,14 @@ private[graft] object StreamingGates {
     "x32_stream_enrich" -> ((s, d) => {
       val staged = stageEvents(s, d)
       val nation = t(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        val agg = s.readStream.schema(graft.streaming.EventStreams.schema)
+      replayToMemory(s, staged, "x32_out", "complete") {
+        s.readStream.schema(graft.streaming.EventStreams.schema)
           .parquet(staged)
           .withColumn("nk", col("user_id") % 25)
           .join(broadcast(nation), col("nk") === col("n_nationkey"))
           .groupBy(col("n_name"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("v"))
-        withCheckpoint { ckpt =>
-          val q = agg.writeStream.outputMode("complete").format("memory")
-            .queryName("x32_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x32_out").orderBy(asc_nulls_first("n_name"))
+      }.orderBy(asc_nulls_first("n_name"))
     }),
 
     // X47 STREAM-STREAM interval join through the gate: views pair
@@ -193,19 +153,10 @@ private[graft] object StreamingGates {
     // per-user id sums pin exact pair membership.
     "x47_stream_interval_join" -> ((s, d) => {
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema).parquet(staged)
-          val q = graft.streaming.EventStreams.viewClickJoin(events, 60)
-            .writeStream.outputMode("append").format("memory")
-            .queryName("x47_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x47_out")
-        .groupBy(col("user_id"))
+      replayToMemory(s, staged, "x47_out", "append") {
+        graft.streaming.EventStreams.viewClickJoin(s.readStream
+          .schema(graft.streaming.EventStreams.schema).parquet(staged), 60)
+      }.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(col("view_id")).cast(LongType).as("view_id_sum"),
           sum(col("click_id")).cast(LongType).as("click_id_sum"))
@@ -221,20 +172,12 @@ private[graft] object StreamingGates {
     // nulls cannot hide.
     "x47b_stream_outer_join" -> ((s, d) => {
       val staged = stageEventsWithSentinel(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged)
-          val q = graft.streaming.EventStreams
-            .viewClickJoin(events, 60, joinType = "left_outer")
-            .writeStream.outputMode("append").format("memory")
-            .queryName("x47b_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x47b_out").where(col("user_id") >= 0)
+      replayToMemory(s, staged, "x47b_out", "append") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+        graft.streaming.EventStreams.viewClickJoin(events, 60, joinType = "left_outer")
+      }.where(col("user_id") >= 0)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("click_id").isNull, 1L).otherwise(0L))
@@ -254,20 +197,11 @@ private[graft] object StreamingGates {
     "x42_stream_totals" -> ((s, d) => {
       import s.implicits._
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema).parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.runningTotals(events)
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x42_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      s.table("x42_out")
-        .groupBy(col("user_id"))
+      replayToMemory(s, staged, "x42_out", "update") {
+        graft.streaming.EventStreams.runningTotals(s.readStream
+          .schema(graft.streaming.EventStreams.schema).parquet(staged)
+          .as[graft.streaming.EventStreams.Event]).toDF()
+      }.groupBy(col("user_id"))
         .agg(max(struct(col("n"), col("total"))).as("last"))
         .select(col("user_id"), col("last.n").as("n"),
           round(col("last.total"), 2).as("total"))
@@ -284,22 +218,15 @@ private[graft] object StreamingGates {
     "x96_stream_funnel" -> ((s, d) => {
       import s.implicits._
       val staged = stageEvents(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema).parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.funnelLevels(events,
-              Seq("view", "click", "purchase"),
-              windowSeconds = Some(7L * 86400))
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x96_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
-      }
-      val levels = s.table("x96_out")
-        .groupBy(col("user_id"))
+      val levels = replayToMemory(s, staged, "x96_out", "update") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema).parquet(staged)
+          .as[graft.streaming.EventStreams.Event]
+        graft.streaming.EventStreams.funnelLevels(events,
+            Seq("view", "click", "purchase"),
+            windowSeconds = Some(7L * 86400))
+          .toDF()
+      }.groupBy(col("user_id"))
         .agg(max(struct(col("n_seen"), col("level"))).as("last"))
         .select(col("user_id"), col("last.level").as("level"))
       // same reduction as the batch operator's — one shared helper,
@@ -322,22 +249,16 @@ private[graft] object StreamingGates {
     "x96b_stream_funnel_bounded" -> ((s, d) => {
       import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.funnelLevelsBounded(events,
-              Seq("view", "click", "purchase"),
-              windowSeconds = Some(7L * 86400), lateness = "30 minutes")
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x96b_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
+      val sink = replayToMemory(s, staged, "x96b_out", "update") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+          .as[graft.streaming.EventStreams.Event]
+        graft.streaming.EventStreams.funnelLevelsBounded(events,
+            Seq("view", "click", "purchase"),
+            windowSeconds = Some(7L * 86400), lateness = "30 minutes")
+          .toDF()
       }
-      val sink = s.table("x96b_out")
       // eviction evidence: some snapshot must show a buffer smaller
       // than its chain's event count (a per-snapshot comparison — a
       // global max-vs-max would false-fail if the busiest user's
@@ -365,22 +286,16 @@ private[graft] object StreamingGates {
     "x119_stream_attribution" -> ((s, d) => {
       import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.lastTouchBounded(events,
-              Seq("click", "view"), "purchase",
-              lookbackSeconds = 7L * 86400, lateness = "30 minutes")
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x119_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
+      val sink = replayToMemory(s, staged, "x119_out", "update") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+          .as[graft.streaming.EventStreams.Event]
+        graft.streaming.EventStreams.lastTouchBounded(events,
+            Seq("click", "view"), "purchase",
+            lookbackSeconds = 7L * 86400, lateness = "30 minutes")
+          .toDF()
       }
-      val sink = s.table("x119_out")
       // boundedness evidence: conversions really left the buffer
       require(sink.where(col("is_final")).count() > 0,
         "bounded attribution never finalized any conversion")
@@ -404,21 +319,15 @@ private[graft] object StreamingGates {
     "x120_stream_retention" -> ((s, d) => {
       import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.retentionBounded(events,
-              horizonWeeks = 52, lateness = "30 minutes")
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x120_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
+      val sink = replayToMemory(s, staged, "x120_out", "update") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+          .as[graft.streaming.EventStreams.Event]
+        graft.streaming.EventStreams.retentionBounded(events,
+            horizonWeeks = 52, lateness = "30 minutes")
+          .toDF()
       }
-      val sink = s.table("x120_out")
       // boundedness evidence: cohorts really finalized (pending
       // buffers flushed) and the provisional path was exercised
       require(sink.where(col("is_final")).count() > 0,
@@ -440,22 +349,16 @@ private[graft] object StreamingGates {
     "x121_stream_conversion_lag" -> ((s, d) => {
       import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val events = s.readStream
-            .schema(graft.streaming.EventStreams.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged)
-            .as[graft.streaming.EventStreams.Event]
-          val q = graft.streaming.EventStreams.stepTimesBounded(events,
-              Seq("view", "click", "purchase"),
-              windowSeconds = Some(7L * 86400), lateness = "30 minutes")
-            .toDF().writeStream.outputMode("update").format("memory")
-            .queryName("x121_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
+      val sink = replayToMemory(s, staged, "x121_out", "update") {
+        val events = s.readStream
+          .schema(graft.streaming.EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged)
+          .as[graft.streaming.EventStreams.Event]
+        graft.streaming.EventStreams.stepTimesBounded(events,
+            Seq("view", "click", "purchase"),
+            windowSeconds = Some(7L * 86400), lateness = "30 minutes")
+          .toDF()
       }
-      val sink = s.table("x121_out")
       // boundedness evidence: buffers really folded into chain slots
       require(sink.where(col("n_buffered") < col("n_seen")).count() > 0,
         "bounded step-times never evicted any buffer")
@@ -487,19 +390,11 @@ private[graft] object StreamingGates {
       import s.implicits._
       val staged = stageEvents(s, d)
       val p = 12
-      withStreamPartitions(s, streamPartitionsFor(staged)) {
-        withCheckpoint { ckpt =>
-          val q = graft.streaming.EventStreams.distinctSketches(
-              s.readStream.schema(graft.streaming.EventStreams.schema)
-                .parquet(staged),
-              "ts", "1 day", "user_id", p)
-            .writeStream.outputMode("complete").format("memory")
-            .queryName("x106_out").option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-          awaitGate(q)
-        }
+      val stream = replayToMemory(s, staged, "x106_out", "complete") {
+        graft.streaming.EventStreams.distinctSketches(
+          s.readStream.schema(graft.streaming.EventStreams.schema).parquet(staged),
+          "ts", "1 day", "user_id", p)
       }
-      val stream = s.table("x106_out")
       val events = t(s, d, "events")
       val batch = graft.streaming.EventStreams.distinctSketches(
         events, "ts", "1 day", "user_id", p)

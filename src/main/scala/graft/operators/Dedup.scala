@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Text
 
@@ -18,6 +19,31 @@ import graft.functions.Text
   * is bounded by the distinct-key count per partition.
   */
 object Dedup {
+
+  /** The one MinHash-LSH design point every near-dup path runs: 16
+    * bands × 8 rows = 128 hashes (a pair with Jaccard j collides in
+    * some band w.p. 1-(1-j^8)^16; j = 0.8 w.p. ~0.96), and a 0.3
+    * half-width of the near-threshold band the hybrid verify
+    * re-checks exactly (divergence bound: see [[lshHybridPairs]]).
+    * SimHash pairs band on 4 pigeonhole chunks of 16 bits. */
+  private val Bands = 16
+  private val RowsPerBand = 8
+  private val NumHashes = Bands * RowsPerBand
+  private val Margin = 0.3
+  private val HammingChunks = 4
+
+  /** Verified pair sets up to this many rows (100 000) are clustered
+    * on the driver, larger ones by the distributed star components.
+    * The cap picks the mechanism, never the result; specs reach the
+    * distributed branch through [[withCcDriverCap]]. */
+  private val ccDriverCap = new scala.util.DynamicVariable[Int](100000)
+
+  private[graft] def withCcDriverCap[T](n: Int)(body: => T): T =
+    ccDriverCap.withValue(n)(body)
+
+  /** MinHash signature of a text column at the design point. */
+  private[graft] def minhash(text: Column, shingleSize: Int): Column =
+    graft.expressions.NativeSignatures.minhashText(text, shingleSize, NumHashes)
 
   /** Ensure CPU-bound signature work gets the cluster's parallelism:
     * a byte-small but compute-heavy input (one parquet row group of
@@ -75,7 +101,7 @@ object Dedup {
     * the table is staged (persisted + materialized) once per key and
     * reused for the session lifetime; without one the caller owns
     * persist/unpersist of the returned lazy frame. */
-  def signatureTable(df: DataFrame, numHashes: Int, shingleSize: Int,
+  def signatureTable(df: DataFrame, shingleSize: Int,
                      idCol: String = "doc_id", textCol: String = "text",
                      cacheKey: Option[String] = None): DataFrame = {
     // fused shingle+minhash: hashes each char window in place instead
@@ -91,19 +117,31 @@ object Dedup {
     // estimator's documented 2e-10 divergence bound).
     def build(): DataFrame = fanOut(df)
       .where(length(col(textCol)) >= shingleSize)
-      .select(col(idCol).as("id"),
-        graft.expressions.NativeSignatures
-          .minhashText(col(textCol), shingleSize, numHashes)
-          .as("sig"),
+      .select(col(idCol).as("id"), minhash(col(textCol), shingleSize).as("sig"),
         xxhash64(col(textCol)).as("fp"))
     cacheKey match {
       case Some(k) =>
-        sigCache.computeIfAbsent(s"$k|$numHashes|$shingleSize|$idCol|$textCol", _ => {
-          val t = build().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sigCache.computeIfAbsent(s"$k|$shingleSize|$idCol|$textCol", _ => {
+          val t = build().persist(StorageLevel.MEMORY_AND_DISK)
           t.count() // materialize the artifact eagerly
           t
         })
       case None => build()
+    }
+  }
+
+  /** `body` over the signature table of `df`, persisted for the body's
+    * duration only unless already staged (under `cacheKey`, or under
+    * another key for the same plan, which an unpersist would release):
+    * the body must return nothing that still reads it. */
+  private def withSignatures[T](df: DataFrame, shingleSize: Int, idCol: String,
+                                textCol: String, cacheKey: Option[String])
+                               (body: DataFrame => T): T = {
+    val sig = signatureTable(df, shingleSize, idCol, textCol, cacheKey)
+    if (sig.storageLevel != StorageLevel.NONE) body(sig)
+    else {
+      sig.persist(StorageLevel.MEMORY_AND_DISK)
+      try body(sig) finally { sig.unpersist(); () }
     }
   }
 
@@ -123,25 +161,17 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
 
-  /** MinHash signature as an array column: one base hash per shingle
-    * + `numHashes` affine rehashes, in a native Catalyst expression
-    * (the k×|shingles| interpreted-HOF formulation measured 42 s at
-    * sf0.1; this is sub-second). */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    graft.expressions.NativeSignatures.minhashSignature(shingles, numHashes)
-
   /** MinHash+LSH near-dup candidate pairs, verified by the MinHash
     * Jaccard estimator.
     *
-    * shingle → minhash(numHashes) → band (rows-per-band slices, each
-    * hashed to a bucket key) → equi-join on (band, bucket) → estimated
-    * Jaccard ≥ threshold. Probability a pair with Jaccard j collides:
-    * 1-(1-j^r)^b — with 16 bands × 8 rows, j=0.8 is caught w.p. ~0.96.
-    * The estimator (fraction of agreeing signature components, std ≈
-    * √(j(1-j)/k) ≈ 0.04 at k=128) replaces exact shingle-set Jaccard
-    * in the verify stage so candidates are checked from the already-
-    * staged 1 KB signatures instead of re-shingling the corpus; use
-    * [[ngramJaccardPairs]] when exact scores are required.
+    * shingle → minhash(128) → band (16 slices of 8 rows, each hashed
+    * to a bucket key) → equi-join on (band, bucket) → estimated
+    * Jaccard ≥ threshold. The estimator (fraction of agreeing
+    * signature components, std ≈ √(j(1-j)/k) ≈ 0.04 at k=128) replaces
+    * exact shingle-set Jaccard in the verify stage so candidates are
+    * checked from the already-staged 1 KB signatures instead of
+    * re-shingling the corpus; use [[ngramJaccardPairs]] when exact
+    * scores are required.
     *
     * The signature table (id + k longs — ~100× smaller than the
     * corpus) is persisted: it feeds both sides of the band join and
@@ -152,33 +182,28 @@ object Dedup {
     */
   def minhashLsh(df: DataFrame, threshold: Double,
                  idCol: String = "doc_id", textCol: String = "text",
-                 shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
-                 cacheKey: Option[String] = None): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val cached = cacheKey.isDefined
-    val sig0 = signatureTable(df, numHashes, shingleSize, idCol, textCol, cacheKey)
-    val sig = if (cached) sig0
-      else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      bandCandidates(Seq(sig), bands, rowsPerBand)
+                 shingleSize: Int = 5,
+                 cacheKey: Option[String] = None): DataFrame =
+    withSignatures(df, shingleSize, idCol, textCol, cacheKey) { sig =>
+      bandCandidates(Seq(sig))
         .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
         .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
           round(graft.expressions.NativeSignatures.sigAgree(col("sig_a"), col("sig_b"))
-            .cast("double") / numHashes, 4)
+            .cast("double") / NumHashes, 4)
             .as("jaccard"))
         .where(col("jaccard") >= threshold)
         // eager: materialize before the staged signatures are released
         .localCheckpoint()
-    } finally { if (!cached) sig.unpersist(); () }
-  }
+    }
 
-  /** (id, band, bucket) view of a signature table: each signature
-    * sliced into `bands` row groups, each hashed to a bucket key. */
-  private[graft] def bandedView(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sig.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)))
+  /** (id, band, bucket) view of a signature table, plus the `carry`
+    * columns: each signature sliced into the design point's bands,
+    * each hashed to a bucket key. */
+  private[graft] def bandedView(sig: DataFrame, carry: String*): DataFrame =
+    sig.select((col("id") +: carry.map(col) :+
+      posexplode(array((0 until Bands).map(b =>
+        xxhash64(lit(b), slice(col("sig"), b * RowsPerBand + 1, RowsPerBand))): _*))): _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** LSH band join of the first (id, sig) table against the union of
@@ -188,9 +213,8 @@ object Dedup {
     * pairs are a self-join and keep id_a < id_b; every other side is a
     * distinct table, so all its shared keys count. Package-private so
     * PlanSpec can pin its equi-join shape. */
-  private[graft] def bandCandidates(sigs: Seq[DataFrame], bands: Int,
-                                    rowsPerBand: Int): DataFrame = {
-    val views = sigs.map(bandedView(_, bands, rowsPerBand))
+  private[graft] def bandCandidates(sigs: Seq[DataFrame]): DataFrame = {
+    val views = sigs.map(bandedView(_))
     val tagged = views.zipWithIndex
       .map { case (v, i) => v.withColumn("side", lit(i)) }
       .reduce(_ union _)
@@ -206,11 +230,9 @@ object Dedup {
     * must appear here. */
   def lshCandidates(df: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
-                    shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
-                    cacheKey: Option[String] = None): DataFrame = {
-    val sig = signatureTable(df, bands * rowsPerBand, shingleSize, idCol, textCol, cacheKey)
-    bandCandidates(Seq(sig), bands, rowsPerBand).drop("side")
-  }
+                    shingleSize: Int = 5,
+                    cacheKey: Option[String] = None): DataFrame =
+    bandCandidates(Seq(signatureTable(df, shingleSize, idCol, textCol, cacheKey))).drop("side")
 
   /** Near-dup pairs with EXACT shingle-set Jaccard verification:
     * candidates come from the same MinHash-LSH band join (ids only, no
@@ -223,14 +245,14 @@ object Dedup {
     * by the candidate count. */
   def lshExactPairs(df: DataFrame, threshold: Double,
                     idCol: String = "doc_id", textCol: String = "text",
-                    shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8): DataFrame = {
+                    shingleSize: Int = 5): DataFrame = {
     val base = fanOut(df).where(length(col(textCol)) >= shingleSize)
       .select(col(idCol).as("id"), Text.charShingles(col(textCol), shingleSize).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val sig = base.select(col("id"),
-        minhashSignature(col("sh"), bands * rowsPerBand).as("sig"))
-      bandCandidates(Seq(sig), bands, rowsPerBand)
+        graft.expressions.NativeSignatures.minhashSignature(col("sh"), NumHashes).as("sig"))
+      bandCandidates(Seq(sig))
         .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
         .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"), Text.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
@@ -245,58 +267,48 @@ object Dedup {
   /** Near-dup pairs with HYBRID verification: candidates from the LSH
     * band join are first scored with the MinHash Jaccard estimator
     * (computed from the already-staged signatures — no re-shingling);
-    * only candidates whose estimate falls within `margin` of the
-    * threshold get exact shingle-set Jaccard — on the driver over
+    * only candidates whose estimate falls within the margin (0.3) of
+    * the threshold get exact shingle-set Jaccard — on the driver over
     * their fetched texts while the sliver is small, by a shuffled
     * re-join otherwise (see [[hybridVerify]]).
     *
     * Divergence bound: a clear-margin candidate disagrees with exact
     * Jaccard only when the estimator errs by ≥ margin, which by
-    * Hoeffding (k = bands·rowsPerBand components, each in {0,1}) has
-    * P ≤ 2·exp(−2·k·margin²) per pair — at k = 128 that is ≈ 2e−10
-    * for margin 0.3 (the default) but only ≈ 7e−5 for margin 0.2;
-    * equivalently the worst-case normal tail (σ = √(j(1−j)/k) ≤ 0.044
-    * at j = 0.5) puts margin 0.3 at ≈ 6.8σ vs 4.5σ for 0.2. Expected
-    * divergences over a run are candidate_count × that bound, so the
-    * default stays negligible (≪ 1) up to ~10^9 candidate pairs where
-    * a 0.2 margin would already expect divergences at ~10^4. The
-    * near-threshold band (where the estimator could err) is always
-    * resolved exactly, so survivors match [[lshExactPairs]] up to the
-    * stated per-pair bound while the expensive exact re-check touches
-    * only the near-threshold sliver of candidates. (For high
-    * thresholds, `threshold + margin > 1` means no estimator
-    * fast-accepts at all — every surviving pair is exact-verified,
-    * the safe direction.) */
+    * Hoeffding (k = 128 components, each in {0,1}) has
+    * P ≤ 2·exp(−2·k·margin²) per pair — ≈ 2e−10 at margin 0.3, where
+    * a margin of 0.2 would give only ≈ 7e−5; equivalently the
+    * worst-case normal tail (σ = √(j(1−j)/k) ≤ 0.044 at j = 0.5) puts
+    * margin 0.3 at ≈ 6.8σ vs 4.5σ for 0.2. Expected divergences over a
+    * run are candidate_count × that bound, so they stay negligible
+    * (≪ 1) up to ~10^9 candidate pairs where a 0.2 margin would
+    * already expect divergences at ~10^4. The near-threshold band
+    * (where the estimator could err) is always resolved exactly, so
+    * survivors match [[lshExactPairs]] up to the stated per-pair bound
+    * while the expensive exact re-check touches only the
+    * near-threshold sliver of candidates. (For high thresholds,
+    * `threshold + margin > 1` means no estimator fast-accepts at all —
+    * every surviving pair is exact-verified, the safe direction.) */
   def lshHybridPairs(df: DataFrame, threshold: Double,
                      idCol: String = "doc_id", textCol: String = "text",
-                     shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
-                     margin: Double = 0.3,
+                     shingleSize: Int = 5,
                      cacheKey: Option[String] = None): DataFrame =
-    hybridPairs(df, df, threshold, idCol, textCol, shingleSize, bands, rowsPerBand,
-      margin, cacheKey).drop("side")
+    hybridPairs(df, df, threshold, idCol, textCol, shingleSize, cacheKey).drop("side")
 
   /** [[lshHybridPairs]] with the side column kept, reading the near
     * sliver's texts from `src`, which must hold for every id of `df`
     * exactly the rows `df` holds (the dedup build passes the corpus
-    * its exact-copy reps were picked from). */
+    * its exact-copy reps were picked from). Stages SIGNATURES only
+    * (id + k longs, ~100× smaller than the corpus and ~1000× smaller
+    * than staged shingle sets — persisting the shingle arrays was the
+    * dominant cost of the all-exact variant). Shingles are recomputed
+    * only for the near-threshold sliver of candidates. */
   private def hybridPairs(df: DataFrame, src: DataFrame, threshold: Double,
                           idCol: String, textCol: String, shingleSize: Int,
-                          bands: Int, rowsPerBand: Int, margin: Double,
-                          cacheKey: Option[String]): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // Stage SIGNATURES only (id + k longs, ~100× smaller than the
-    // corpus and ~1000× smaller than staged shingle sets — persisting
-    // the shingle arrays was the dominant cost of the all-exact
-    // variant). Shingles are recomputed only for the near-threshold
-    // sliver of candidates.
-    val cached = cacheKey.isDefined
-    val sig0 = signatureTable(df, numHashes, shingleSize, idCol, textCol, cacheKey)
-    val sig = if (cached) sig0
-      else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hybridVerify(bandCandidates(Seq(sig), bands, rowsPerBand), Seq(sig -> src),
-      threshold, margin, numHashes, shingleSize, idCol, textCol)
-    finally { if (!cached) sig.unpersist(); () }
-  }
+                          cacheKey: Option[String]): DataFrame =
+    withSignatures(df, shingleSize, idCol, textCol, cacheKey) { sig =>
+      hybridVerify(bandCandidates(Seq(sig)), Seq(sig -> src),
+        threshold, shingleSize, idCol, textCol)
+    }
 
   /** The near-threshold re-check runs on the driver for at most this
     * many (id, side) keys — at most half as many near pairs, whose
@@ -319,18 +331,20 @@ object Dedup {
     * signatures) resolves clear-margin candidates; only the
     * near-threshold sliver gets exact shingle-set Jaccard, over texts
     * fetched from each side's source. Up to `nearCap` near (id, side)
-    * keys that happens on the driver (see [[NearFetchPushdownCap]]).
-    * Divergence bound vs all-exact: see [[lshHybridPairs]]. The
-    * result (id_a, id_b, side) is a filter over the checkpointed
-    * scores, unioned with a local relation of the exactly verified
-    * near pairs (above the cap: one checkpoint of both), so it never
-    * reads the signature tables or sources again and callers may
-    * unpersist them as soon as this returns. */
+    * keys that happens on the driver (see [[NearFetchPushdownCap]];
+    * `nearCap` and `margin` are arguments so specs can force the
+    * distributed re-check and the all-exact verify). Divergence bound
+    * vs all-exact: see [[lshHybridPairs]]. The result (id_a, id_b,
+    * side) is a filter over the checkpointed scores, unioned with a
+    * local relation of the exactly verified near pairs (above the cap:
+    * one checkpoint of both), so it never reads the signature tables
+    * or sources again and callers may unpersist them as soon as this
+    * returns. */
   private[graft] def hybridVerify(cand: DataFrame, sides: Seq[(DataFrame, DataFrame)],
-                                  threshold: Double, margin: Double,
-                                  numHashes: Int, shingleSize: Int,
+                                  threshold: Double, shingleSize: Int,
                                   idCol: String, textCol: String,
-                                  nearCap: Int = NearFetchPushdownCap): DataFrame = {
+                                  nearCap: Int = NearFetchPushdownCap,
+                                  margin: Double = Margin): DataFrame = {
     // `same_fp` = identical raw text (64-bit fingerprint equality) —
     // Jaccard is exactly 1 for those pairs, so they fast-accept at
     // any threshold without touching the shingle re-join. Replica-
@@ -348,7 +362,7 @@ object Dedup {
       .join(sigB, Seq("id_b", "side"))
       .select(col("id_a"), col("id_b"), col("side"),
         (graft.expressions.NativeSignatures.sigAgree(col("sig_a"), col("sig_b"))
-          .cast("double") / numHashes)
+          .cast("double") / NumHashes)
           .as("est"),
         (col("fp_a") === col("fp_b")).as("same_fp"))
       // eager: both branches below read this (ids+estimate+flag only,
@@ -447,32 +461,29 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs: bucket by the signature split into
-    * `chunks` pieces — two docs within Hamming distance < chunks must
-    * share at least one piece (pigeonhole), so candidate generation is
-    * again an equi-join; verify with exact Hamming ≤ maxHamming. */
+    * 4 pieces — two docs within Hamming distance < 4 must share at
+    * least one piece (pigeonhole), so candidate generation is again an
+    * equi-join; verify with exact Hamming ≤ maxHamming. */
   def simhashPairs(df: DataFrame, maxHamming: Int,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   chunks: Int = 4): DataFrame = {
-    val sig = fanOut(df).select(col(idCol).as("id"), Text.simhash64(col(textCol)).as("sig"))
-    hammingPairs(sig, maxHamming, chunks = chunks)
-  }
+                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    hammingPairs(fanOut(df).select(col(idCol).as("id"), Text.simhash64(col(textCol)).as("sig")),
+      maxHamming)
 
   /** Pigeonhole near-dup pairs over an arbitrary (id, 64-bit sig)
     * frame — the banding+verify core of [[simhashPairs]], exposed so
     * the pairing operator works over any 64-bit signature (and so the
     * gate can audit it on engine-replayable synthetic signatures with
     * an exact `bit_count(xor)` oracle). Exhaustive for
-    * `maxHamming < chunks`: two sigs within that distance must share
-    * an identical chunk, so the candidate equi-join misses nothing. */
+    * `maxHamming < 4`: two sigs within that distance must share an
+    * identical 16-bit chunk, so the candidate equi-join misses nothing. */
   def hammingPairs(sigs: DataFrame, maxHamming: Int,
-                   idCol: String = "id", sigCol: String = "sig",
-                   chunks: Int = 4): DataFrame = {
-    require(chunks > maxHamming, "need chunks > maxHamming for pigeonhole recall")
-    val bits = 64 / chunks
-    val mask = if (bits == 64) -1L else (1L << bits) - 1
+                   idCol: String = "id", sigCol: String = "sig"): DataFrame = {
+    require(HammingChunks > maxHamming, s"pigeonhole recall needs maxHamming < $HammingChunks")
+    val bits = 64 / HammingChunks
+    val mask = (1L << bits) - 1
     val sig = sigs.select(col(idCol).as("id"), col(sigCol).as("sig"))
     val banded = sig.select(col("id"), col("sig"),
-      posexplode(array((0 until chunks).map(c =>
+      posexplode(array((0 until HammingChunks).map(c =>
         shiftright(col("sig"), c * bits).bitwiseAND(mask)): _*)))
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "piece")
     // signatures are single longs — cheap to carry through the band join
@@ -486,7 +497,7 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Adaptive connected components: a pair set under `driverCap` rows
+  /** Adaptive connected components: a pair set under the driver cap
     * (the common case — near-dup pairs are bounded by the band join's
     * collision count, orders of magnitude below the corpus, and a
     * per-batch admission graph is smaller still) is solved with one
@@ -501,9 +512,8 @@ object Dedup {
     * appear in `pairs`, and the driver path additionally comes back
     * as a local relation, so downstream anti-joins broadcast instead
     * of shuffling. */
-  def connectedComponentsAdaptive(pairs: DataFrame,
-                                  driverCap: Int = 100000): DataFrame = {
-    collectAtMost(pairs.select(col("id_a"), col("id_b")), driverCap) match {
+  def connectedComponentsAdaptive(pairs: DataFrame): DataFrame = {
+    collectAtMost(pairs.select(col("id_a"), col("id_b")), ccDriverCap.value) match {
       case None => connectedComponentsStar(pairs)
       case Some(capped) =>
         val idType = pairs.schema("id_a").dataType
@@ -519,8 +529,8 @@ object Dedup {
     * — the one tail of [[dedupNearDups]] and [[dedupIncremental]]:
     * every side-0 id verified against another side (a corpus dup, in
     * admission), plus every id that is not the min id of its cluster
-    * under the side-0 pairs that touch no corpus dup. Up to
-    * `ccDriverCap` pairs come back in one single-task collect (the
+    * under the side-0 pairs that touch no corpus dup. Up to the
+    * driver cap (100 000) pairs come back in one single-task collect (the
     * [[hybridVerify]] result reads only checkpointed or local rows)
     * and the set is built on the driver by union-find: a local
     * relation, bounded by the same cap, that the final anti-join
@@ -528,14 +538,13 @@ object Dedup {
     * anti-joins, then [[connectedComponentsAdaptive]]). The cap picks
     * the mechanism, never the result. One column, `idCol`, of id_a's
     * type. */
-  private def connectedComponentsDropSet(pairs: DataFrame, idCol: String,
-                                         ccDriverCap: Int): DataFrame = {
+  private def connectedComponentsDropSet(pairs: DataFrame, idCol: String): DataFrame = {
     val idType = pairs.schema("id_a").dataType
     // side-0 id_b are side-0 ids: cast back from the band union's
     // widened type so the union-find sees one id type
     val verified = pairs.select(col("id_a"),
       when(col("side") === 0, col("id_b")).cast(idType).as("id_b"), col("side"))
-    collectAtMost(verified, ccDriverCap) match {
+    collectAtMost(verified, ccDriverCap.value) match {
       case Some(rows) =>
         val corpusDups = rows.iterator.filter(_.getInt(2) != 0).map(_.get(0)).toSet
         val intra = rows.iterator
@@ -551,7 +560,7 @@ object Dedup {
         val intraPairs = verified.where(col("side") === 0)
           .join(corpusDups.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
           .join(corpusDups.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
-        val nonCanonical = connectedComponentsAdaptive(intraPairs, ccDriverCap)
+        val nonCanonical = connectedComponentsAdaptive(intraPairs)
           .where(col("component") < col("id")).select(col("id"))
         corpusDups.union(nonCanonical).select(col("id").as(idCol))
     }
@@ -733,7 +742,7 @@ object Dedup {
     * The tail is admission's ([[dedupIncremental]] against an empty
     * corpus): the [[hybridVerify]] result (a filter over checkpointed
     * scores ∪ a local relation of the near sliver) comes back in one
-    * single-task collect under `ccDriverCap`, the non-canonical ids
+    * single-task collect under the driver cap, the non-canonical ids
     * are found by driver union-find, and the returned frame is `df`
     * anti-joined with that local drop set and the exact-copy losers
     * (which scale with the corpus and stay distributed). Above the cap
@@ -742,7 +751,6 @@ object Dedup {
   def dedupNearDups(df: DataFrame, threshold: Double,
                     idCol: String = "doc_id", textCol: String = "text",
                     cacheKey: Option[String] = None,
-                    ccDriverCap: Int = 100000,
                     shingleSize: Int = 5): DataFrame = {
     // EXACT-COPY PRE-COLLAPSE: replica-heavy corpora (the realistic
     // web profile; the sf1/sf5 scale fixtures are 10-50× exact
@@ -787,12 +795,11 @@ object Dedup {
     // distinct-text reps get their own staged-signature key — the
     // unsuffixed key may already hold the full-corpus artifact for
     // other operators sharing it (dedupIncremental, StreamNearDup).
-    // Banding and margin are lshHybridPairs' defaults. Near texts are
-    // fetched from `df`: near ids are rep ids, and a rep id's rows in
-    // `df` are its rows in `reps`, without re-running the groups
+    // Near texts come from `df`: near ids are rep ids, and a rep id's
+    // rows in `df` are its rows in `reps`, without re-running the groups
     val pairs = hybridPairs(reps, df, threshold, idCol, textCol, shingleSize,
-      bands = 16, rowsPerBand = 8, margin = 0.3, cacheKey.map(_ + "#reps"))
-    df.join(connectedComponentsDropSet(pairs, idCol, ccDriverCap).union(exactLosers),
+      cacheKey.map(_ + "#reps"))
+    df.join(connectedComponentsDropSet(pairs, idCol).union(exactLosers),
       Seq(idCol), "left_anti")
   }
 
@@ -831,7 +838,7 @@ object Dedup {
     * with [[dedupNearDups]]: the [[hybridVerify]] result (a filter
     * over checkpointed scores ∪ a local relation of the near sliver,
     * re-checked on the driver) comes back in one single-task collect
-    * when it holds up to `ccDriverCap` pairs, and the drop set is
+    * when it holds up to the driver cap's pairs, and the drop set is
     * built on the driver, so the final anti-join broadcasts a local
     * relation bounded by the same cap; above it the drop set stays
     * distributed (shuffled anti-joins, [[connectedComponentsAdaptive]]).
@@ -849,11 +856,8 @@ object Dedup {
     * of cross candidates (pruned id fetch). */
   def dedupIncremental(batch: DataFrame, corpus: DataFrame, threshold: Double,
                        idCol: String = "doc_id", textCol: String = "text",
-                       shingleSize: Int = 5, bands: Int = 16, rowsPerBand: Int = 8,
-                       margin: Double = 0.3,
-                       corpusCacheKey: Option[String] = None,
-                       ccDriverCap: Int = 100000): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                       shingleSize: Int = 5,
+                       corpusCacheKey: Option[String] = None): DataFrame = {
     // Batch-side EXACT-COPY PRE-COLLAPSE — the dedupNearDups argument
     // carried over to the bipartite shape (re-crawled batches are the
     // replica-heavy profile this operator exists for). A non-rep
@@ -887,19 +891,14 @@ object Dedup {
     // null-safe: a null id or a null `_rep` is no loser (admitted)
     val exactLosers = tagged.where(coalesce(col(idCol) =!= col("_rep"), lit(false)))
       .select(col(idCol))
-    val numHashes = bands * rowsPerBand
-    val corpusCached = corpusCacheKey.isDefined
-    val cSig0 = signatureTable(corpus, numHashes, shingleSize, idCol, textCol, corpusCacheKey)
-    val cSig = if (corpusCached) cSig0 else cSig0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bSig = signatureTable(batchReps, numHashes, shingleSize, idCol, textCol, None)
+    withSignatures(corpus, shingleSize, idCol, textCol, corpusCacheKey) { cSig =>
+      val bSig = signatureTable(batchReps, shingleSize, idCol, textCol)
       // side 0 = batch reps, side 1 = corpus
-      val pairs = hybridVerify(bandCandidates(Seq(bSig, cSig), bands, rowsPerBand),
-        Seq(bSig -> batchReps, cSig -> corpus),
-        threshold, margin, numHashes, shingleSize, idCol, textCol)
-      val nearDrop = connectedComponentsDropSet(pairs, idCol, ccDriverCap)
-      batch.join(nearDrop.union(exactLosers), Seq(idCol), "left_anti")
-    } finally { if (!corpusCached) cSig.unpersist(); () }
+      val pairs = hybridVerify(bandCandidates(Seq(bSig, cSig)),
+        Seq(bSig -> batchReps, cSig -> corpus), threshold, shingleSize, idCol, textCol)
+      batch.join(connectedComponentsDropSet(pairs, idCol).union(exactLosers),
+        Seq(idCol), "left_anti")
+    }
   }
 
   /** Exact n-gram Jaccard over a bounded pair set (for oracle-sized

@@ -109,8 +109,7 @@ object SemDedup {
                iters: Int = 3, probes: Int = 1,
                keepFarthest: Boolean = false,
                idCol: String = "vec_id", vecCol: String = "embedding",
-               indexKey: Option[String] = None,
-               ccDriverCap: Int = 100000): DataFrame = {
+               indexKey: Option[String] = None): DataFrame = {
     // cosine is ≤ 1 (round(·,4) included), so nothing can pair — and
     // the exact-copy collapse below would be WRONG here (identical
     // vectors are not duplicates under an unreachable threshold)
@@ -130,7 +129,7 @@ object SemDedup {
     val pairs = semanticPairs(
       reps.select(col("rid").as("id"), col("v")), index, threshold, probes,
       idCol = "id", vecCol = "v")
-    val comps = Dedup.connectedComponentsAdaptive(pairs, ccDriverCap)
+    val comps = Dedup.connectedComponentsAdaptive(pairs)
     // every rep gets a duplicate-group label: its CC component when it
     // paired, else itself (exact copies of an isolated vector still
     // collapse to rid — they are cosine-1 duplicates of each other)

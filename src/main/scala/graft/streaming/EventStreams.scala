@@ -167,7 +167,13 @@ object EventStreams extends Serializable {
     * for it — so the reduced levels equal
     * [[graft.operators.Funnel.funnel]] whenever every event arrives
     * within `lateness` of the running max event time. */
-  def boundedVerdicts(snapshots: DataFrame): DataFrame = {
+  def boundedVerdicts(snapshots: DataFrame): DataFrame =
+    earliestChainVerdicts(snapshots, "level")
+
+  /** `(user_id, payload)` of each user's snapshot from the earliest
+    * started chain, then the highest n_seen — the selection of
+    * [[boundedVerdicts]] and [[stepTimesVerdicts]]. */
+  private def earliestChainVerdicts(snapshots: DataFrame, payload: String): DataFrame = {
     // -1 → MaxValue so never-started chains lose to any real chain;
     // negate so one max(struct) both minimizes the start and then
     // maximizes n_seen (chain_start ≥ 0 in bounded mode: pre-epoch
@@ -175,8 +181,8 @@ object EventStreams extends Serializable {
     val key = when(col("chain_start") === -1L, Long.MaxValue)
       .otherwise(col("chain_start"))
     snapshots.groupBy(col("user_id"))
-      .agg(max(struct((-key).as("nk"), col("n_seen"), col("level"))).as("last"))
-      .select(col("user_id"), col("last.level").as("level"))
+      .agg(max(struct((-key).as("nk"), col("n_seen"), col(payload))).as("last"))
+      .select(col("user_id"), col(s"last.$payload").as(payload))
   }
 
   private def eventMicros(ts: Timestamp): Long =
@@ -447,14 +453,8 @@ object EventStreams extends Serializable {
     * sink → `(user_id, slots)`: same selection as [[boundedVerdicts]]
     * (earliest started chain — the one the batch operator computes —
     * then highest n_seen, strictly growing within a chain). */
-  def stepTimesVerdicts(snapshots: DataFrame): DataFrame = {
-    val key = when(col("chain_start") === -1L, Long.MaxValue)
-      .otherwise(col("chain_start"))
-    snapshots.groupBy(col("user_id"))
-      .agg(max(struct((-key).as("nk"), col("n_seen"), col("slots")))
-        .as("last"))
-      .select(col("user_id"), col("last.slots").as("slots"))
-  }
+  def stepTimesVerdicts(snapshots: DataFrame): DataFrame =
+    earliestChainVerdicts(snapshots, "slots")
 
   // (ts micros, kind 0=touch 1=conversion, channel ("" on
   // conversions — tuple sort must not see null), value, event_id)

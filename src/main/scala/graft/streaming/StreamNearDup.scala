@@ -43,43 +43,32 @@ object StreamNearDup {
     * `threshold`. */
   def vsCorpus(streamDocs: DataFrame, corpusDocs: DataFrame,
                threshold: Double, shingleSize: Int = 5,
-               bands: Int = 16, rowsPerBand: Int = 8,
                idCol: String = "doc_id", textCol: String = "text",
                corpusCacheKey: Option[String] = None): DataFrame = {
     require(streamDocs.isStreaming, "streamDocs must be a streaming DataFrame")
-    val nh = bands * rowsPerBand
     // the static side of a stream-static join is re-evaluated per
     // micro-batch — an unpersisted signature table would re-shingle
     // and re-MinHash the whole corpus on every batch. The cached path
     // persists inside signatureTable; the uncached path persists here
     // (lifetime = the streaming query's; long-lived streams should
     // pass a cache key so the artifact is shared and releasable).
-    val corpusSig = corpusCacheKey match {
-      case Some(_) => Dedup.signatureTable(corpusDocs, nh, shingleSize,
-        idCol, textCol, corpusCacheKey)
-      case None =>
-        val sig = Dedup.signatureTable(corpusDocs, nh, shingleSize,
-          idCol, textCol, None)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sig.count() // materialize once, before the first batch
-        sig
+    val corpusSig = Dedup.signatureTable(corpusDocs, shingleSize, idCol, textCol,
+      corpusCacheKey)
+    if (corpusCacheKey.isEmpty) {
+      corpusSig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      corpusSig.count() // materialize once, before the first batch
     }
-    val corpusBands = Dedup.bandedView(corpusSig, bands, rowsPerBand)
-      .withColumnRenamed("id", "corpus_id")
+    val corpusBands = Dedup.bandedView(corpusSig).withColumnRenamed("id", "corpus_id")
     val corpusText = corpusDocs
       .select(col(idCol).as("corpus_id"), col(textCol).as("corpus_text"))
-    // stream side of the band view: same slicing/hashing arithmetic
-    // as Dedup.bandedView, carrying the text through for the verify
-    // stage (the corpus view is ids-only; the stream row needs its
-    // text exactly once more downstream)
-    val streamBands = streamDocs
+    // the stream side's band view carries the text through for the
+    // verify stage (the corpus view is ids-only; the stream row needs
+    // its text exactly once more downstream)
+    val streamBands = Dedup.bandedView(streamDocs
       .where(length(col(textCol)) >= shingleSize)
-      .select(col(idCol).as("doc_id"), col(textCol).as("stream_text"),
-        NativeSignatures.minhashText(col(textCol), shingleSize, nh).as("sig"))
-      .select(col("doc_id"), col("stream_text"),
-        posexplode(array((0 until bands).map(b =>
-          xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+      .select(col(idCol).as("id"), col(textCol).as("stream_text"),
+        Dedup.minhash(col(textCol), shingleSize).as("sig")), "stream_text")
+      .withColumnRenamed("id", "doc_id")
     val cand = streamBands
       .join(corpusBands, Seq("band", "bucket"))
       .select(col("doc_id"), col("stream_text"), col("corpus_id"))

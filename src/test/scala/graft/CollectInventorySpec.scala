@@ -17,11 +17,10 @@ class CollectInventorySpec extends AnyFunSuite {
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    // harness code is out of scope: gate queries and the demo/verify/
+    // harness code is out of scope: gate queries and the verify/
     // explain mains materialize deliberately tiny audit frames
     val harnessDirs = Set("gates", "tools")
-    val harnessFiles = Set("Demo.scala",
-      "SparkEntry.scala", "Verify.scala")
+    val harnessFiles = Set("SparkEntry.scala", "Verify.scala")
     val counts = scalaFiles(root)
       .filterNot(f => harnessFiles.contains(f.getName) ||
         f.getPath.split(java.io.File.separatorChar)

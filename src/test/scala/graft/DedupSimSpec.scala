@@ -94,7 +94,7 @@ class DedupSimSpec extends AnyFunSuite {
     assert((0L to 40L).forall(viaDriver(_) == 0L)) // chain fully merged
     // cap forced to 0: must fall through to the distributed path and
     // still agree
-    val viaFallthrough = Dedup.connectedComponentsAdaptive(pairs, driverCap = 0)
+    val viaFallthrough = Dedup.withCcDriverCap(0)(Dedup.connectedComponentsAdaptive(pairs))
       .as[(Long, Long)].collect().toMap
     assert(viaFallthrough == viaDriver)
     // non-numeric ids: min is Spark's own ordering (lexicographic)
@@ -112,21 +112,20 @@ class DedupSimSpec extends AnyFunSuite {
     // 120 sliding-window docs: consecutive docs share 20 of 21
     // shingles (jaccard ≈ 0.91 ≥ 0.85), two-step share 19 of 23
     // (≈ 0.83 < 0.85) — so the verified pair graph is a 119-hop
-    // chain, the worst case for O(diameter) propagation. ccDriverCap
-    // = 0 forces the distributed branch that production hits at
+    // chain, the worst case for O(diameter) propagation. A driver cap
+    // of 0 forces the distributed branch that production hits at
     // corpus scale; exact components ⇒ a single survivor (min id).
     val words = (0 until 145).map(i => s"w$i")
     val chainDocs = (0 until 120)
       .map(i => (i.toLong, words.slice(i, i + 25).mkString(" ")))
       .toDF("doc_id", "text")
-    val survivors = Dedup.dedupNearDups(chainDocs, threshold = 0.85,
-        ccDriverCap = 0)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    val survivors = Dedup.withCcDriverCap(0)(Dedup.dedupNearDups(chainDocs, threshold = 0.85)
+      .select("doc_id").as[Long].collect().sorted.toSeq)
     assert(survivors == Seq(0L))
     val emptyCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val admitted = Dedup.dedupIncremental(chainDocs, emptyCorpus,
-        threshold = 0.85, ccDriverCap = 0)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    val admitted = Dedup.withCcDriverCap(0)(Dedup.dedupIncremental(chainDocs, emptyCorpus,
+        threshold = 0.85)
+      .select("doc_id").as[Long].collect().sorted.toSeq)
     assert(admitted == Seq(0L))
   }
 
@@ -208,8 +207,8 @@ class DedupSimSpec extends AnyFunSuite {
     assert(viaDriver == want)
     // cap 0: the verified pairs exceed it, so the drop set is built by
     // the distributed anti-joins and components instead
-    val distributed = admittedIds(
-      Dedup.dedupIncremental(replicaBatch, replicaCorpus, threshold = 0.5, ccDriverCap = 0))
+    val distributed = Dedup.withCcDriverCap(0)(admittedIds(
+      Dedup.dedupIncremental(replicaBatch, replicaCorpus, threshold = 0.5)))
     assert(distributed == viaDriver)
   }
 
@@ -226,10 +225,12 @@ class DedupSimSpec extends AnyFunSuite {
     // components (at 0.5: 2 verified pairs, 1 intra); distributed
     // throughout
     for ((threshold, want) <- Seq(0.5 -> Seq(1), 0.86 -> Seq(1, 2)); cap <- Seq(100000, 1, 0)) {
-      val kept = Dedup.dedupIncremental(batch, replicaCorpus, threshold, ccDriverCap = cap)
-      assert(kept.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
-      assert(kept.select("doc_id").as[Int].collect().sorted.toSeq == want,
-        s"threshold $threshold cap $cap")
+      Dedup.withCcDriverCap(cap) {
+        val kept = Dedup.dedupIncremental(batch, replicaCorpus, threshold)
+        assert(kept.schema("doc_id").dataType == org.apache.spark.sql.types.IntegerType)
+        assert(kept.select("doc_id").as[Int].collect().sorted.toSeq == want,
+          s"threshold $threshold cap $cap")
+      }
     }
   }
 
@@ -415,10 +416,10 @@ class DedupSimSpec extends AnyFunSuite {
     // the distributed one only checkpointed rows
     val exact86 = ids(Dedup.lshExactPairs(nearCorpus, threshold = 0.86))
     assert(exact86.contains((0L, 1L)))
-    val sig = Dedup.signatureTable(nearCorpus, numHashes = 128, shingleSize = 5)
+    val sig = Dedup.signatureTable(nearCorpus, shingleSize = 5)
       .localCheckpoint()
-    def verify(nearCap: Int) = Dedup.hybridVerify(Dedup.bandCandidates(Seq(sig), 16, 8),
-      Seq(sig -> nearCorpus), 0.86, 0.3, 128, 5, "doc_id", "text", nearCap)
+    def verify(nearCap: Int) = Dedup.hybridVerify(Dedup.bandCandidates(Seq(sig)),
+      Seq(sig -> nearCorpus), 0.86, 5, "doc_id", "text", nearCap)
     def hasLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
       .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     val onDriver = verify(1000)
@@ -429,7 +430,8 @@ class DedupSimSpec extends AnyFunSuite {
     assert(ids(distributed) == exact86)
     // degenerate margins: all-exact (margin 1) and all-estimator (margin 0)
     // must also agree on this corpus (clear pairs are clear by construction)
-    assert(ids(Dedup.lshHybridPairs(nearCorpus, threshold = 0.5, margin = 1.0)) == exact)
+    assert(ids(Dedup.hybridVerify(Dedup.bandCandidates(Seq(sig)),
+      Seq(sig -> nearCorpus), 0.5, 5, "doc_id", "text", margin = 1.0)) == exact)
     // high threshold: threshold + margin > 1 leaves no estimator
     // fast-accept, so identical texts ride the fingerprint
     // short-circuit — (0,3) must pair, near-dups must not, and the
@@ -440,11 +442,43 @@ class DedupSimSpec extends AnyFunSuite {
   }
 
   test("signatureTable: same cache key returns the same staged artifact") {
-    val a = Dedup.signatureTable(docs, numHashes = 128, shingleSize = 5,
-      cacheKey = Some("spec-sig-key"))
-    val b = Dedup.signatureTable(docs, numHashes = 128, shingleSize = 5,
-      cacheKey = Some("spec-sig-key"))
+    val a = Dedup.signatureTable(docs, shingleSize = 5, cacheKey = Some("spec-sig-key"))
+    val b = Dedup.signatureTable(docs, shingleSize = 5, cacheKey = Some("spec-sig-key"))
     assert(a eq b) // staged once, reused — the build-artifact contract
+  }
+
+  /** CacheManager entries added by `body` (negative: removed). The
+    * count is `private[sql]` in Scala but a public JVM method. */
+  private def cacheEntriesAdded(body: => Unit): Int = {
+    val cm = spark.sharedState.cacheManager
+    def entries = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    val before = entries
+    body
+    entries - before
+  }
+
+  test("uncached minhashLsh, lshHybridPairs and dedupIncremental leave no staged signatures") {
+    // frames no other spec stages under a key: a persist of a plan that
+    // is already cached would add no entry of its own
+    val corpus = nearCorpus.where($"doc_id" =!= 6L)
+    assert(cacheEntriesAdded(Dedup.minhashLsh(corpus, threshold = 0.5).collect()) == 0)
+    assert(cacheEntriesAdded(Dedup.lshHybridPairs(corpus, threshold = 0.5).collect()) == 0)
+    assert(cacheEntriesAdded(Dedup.dedupIncremental(replicaBatch.where($"doc_id" =!= 12L),
+      replicaCorpus.where($"doc_id" =!= 7L), threshold = 0.5).collect()) == 0)
+  }
+
+  test("a keyed signatureTable stages one entry and clearSignatureCache releases it") {
+    val key = "spec-staging-contract"
+    val corpus = nearCorpus.where($"doc_id" =!= 5L)
+    var staged: org.apache.spark.sql.DataFrame = null
+    assert(cacheEntriesAdded {
+      staged = Dedup.signatureTable(corpus, shingleSize = 5, cacheKey = Some(key))
+    } == 1)
+    // an uncached call over the same frame reads the staged table and
+    // leaves it staged
+    assert(cacheEntriesAdded(Dedup.minhashLsh(corpus, threshold = 0.5).collect()) == 0)
+    assert(staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(cacheEntriesAdded(Dedup.clearSignatureCache(key)) == -1)
   }
 
   test("cosine similarity of a zero-norm vector is 0.0, never NaN") {

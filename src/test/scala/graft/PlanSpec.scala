@@ -187,10 +187,10 @@ class PlanSpec extends AnyFunSuite {
     // candidates must both come out of ONE (band, bucket) equi-join.
     val docs = Tables.load(spark, sfDir, "documents")
     val bSig = graft.operators.Dedup.signatureTable(
-      docs.where($"doc_id" >= 30), numHashes = 128, shingleSize = 5)
+      docs.where($"doc_id" >= 30), shingleSize = 5)
     val cSig = graft.operators.Dedup.signatureTable(
-      docs.where($"doc_id" < 30), numHashes = 128, shingleSize = 5)
-    val cand = graft.operators.Dedup.bandCandidates(Seq(bSig, cSig), 16, 8)
+      docs.where($"doc_id" < 30), shingleSize = 5)
+    val cand = graft.operators.Dedup.bandCandidates(Seq(bSig, cSig))
     val plan = executedPlan(cand).split("== Initial Plan ==").head
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"candidates must stay equi-join shaped:\n$plan")
