@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * join, coalesce partitions, broadcast demotion) behaves like it would
   * on a 1000-executor cluster; shuffle partitions sized to the core
   * count instead of the 200 default; UTC session time zone for oracle
-  * parity.
+  * parity; `file:` on [[ForklessLocalFileSystem]] / [[ForklessLocalFs]]
+  * (no `chmod`/`readlink` process per create or rename). Hadoop caches
+  * a JVM's first `file:` FileSystem: one made before this keeps Hadoop's.
   */
 object Session {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -35,6 +37,8 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerLateRules(spark)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.{coalesce, expr, lit, max}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -606,6 +608,81 @@ class StreamingSpec extends AnyFunSuite {
       .agg(max(struct($"n_seen", $"level")).as("last"))
       .select($"last.level").as[Int].head()
     assert(naive == 3, "fixture no longer exercises the hazard")
+  }
+
+  test("ST5: bounded funnel commits keep their checksums; a restart from the checkpoint gives the same verdicts") {
+    // Session.local's file: filesystem (ForklessLocalFileSystem) only
+    // stops Hadoop's chmod/readlink child processes: the state store's
+    // Hadoop .crc sidecars and Spark's checkpoint checksum files must
+    // still be written, and a query restarted from the checkpoint
+    // must reload the state they protect.
+    import EventStreams._
+    import org.apache.spark.sql.DataFrame
+    val dir = SparkTestSession.tempDir("events_funnel_ckpt").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00")
+    def day(d: Int) = new java.sql.Timestamp(t0.getTime + d * 86400000L)
+    val slices: Seq[Seq[(Long, java.sql.Timestamp, Long, String)]] = Seq(
+      Seq((1L, day(0), 1L, "view"), (2L, day(0), 3L, "click")),
+      Seq((3L, day(1), 2L, "view"), (4L, day(1), 3L, "purchase")),
+      Seq((5L, day(2), 1L, "click")),
+      Seq((6L, day(3), 2L, "click")),
+      Seq((7L, day(5), 1L, "purchase")),
+      Seq((8L, day(100), -1L, "view")),
+      Seq((9L, day(101), 3L, "view")))
+    def stage(rows: Seq[(Long, java.sql.Timestamp, Long, String)]): Unit = {
+      val before = graft.gates.GateSupport.listParquet(dir)
+      rows.toDF("event_id", "ts", "user_id", "event_type")
+        .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
+        .coalesce(1).write.mode("append").parquet(dir)
+      graft.gates.GateSupport.bumpMtime(dir, before)
+    }
+    val steps = Seq("view", "click", "purchase")
+    def replay(ckpt: String, sink: String): Unit = {
+      val stream = spark.readStream.schema(EventStreams.schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir).as[Event]
+      val q = funnelLevelsBounded(stream, steps,
+          windowSeconds = Some(7L * 86400), lateness = "30 minutes")
+        .toDF().writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(sink)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "stream did not finish")
+    }
+    def verdicts(sink: String): Map[Long, Int] =
+      EventStreams.boundedVerdicts(spark.read.parquet(sink).where($"user_id" >= 0))
+        .as[(Long, Int)].collect().toMap
+    val ckpt = SparkTestSession.tempDir("funnel_ckpt").toString
+    val sink = SparkTestSession.tempDir("funnel_ckpt_sink").resolve("out").toString
+    slices.take(4).foreach(stage)
+    replay(ckpt, sink) // run 1: four slices, then the query instance is gone
+    slices.drop(4).foreach(stage)
+    replay(ckpt, sink) // run 2: fresh instance, same checkpoint — state reload
+    val onceCkpt = SparkTestSession.tempDir("funnel_once_ckpt").toString
+    val onceSink = SparkTestSession.tempDir("funnel_once_sink").resolve("out").toString
+    replay(onceCkpt, onceSink)
+    assert(verdicts(sink) == Map(1L -> 3, 2L -> 2, 3L -> 1), verdicts(sink).toString)
+    assert(verdicts(sink) == verdicts(onceSink))
+
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => java.nio.file.Paths.get(ckpt).relativize(p).toString).toSet
+      finally walk.close()
+    }
+    // Hadoop's sidecar of `dir/name` is `dir/.name.crc`; Spark's
+    // checkpoint checksum of a state file is `dir/name.crc`
+    def sidecar(f: String): String = {
+      val (d, n) = f.splitAt(f.lastIndexOf('/') + 1)
+      s"$d.$n.crc"
+    }
+    val deltas = files.filter(f => f.startsWith("state/") && f.endsWith(".delta"))
+    val logs = files.filter(_.matches("(offsets|commits)/\\d+"))
+    assert(deltas.size >= 9 && logs.size >= 18, files.toSeq.sorted.mkString(", "))
+    val missing = (deltas.toSeq.flatMap(d => Seq(sidecar(d), s"$d.crc", sidecar(s"$d.crc"))) ++
+      logs.toSeq.map(sidecar)).filterNot(files)
+    assert(missing.isEmpty, s"missing checksums: ${missing.sorted.mkString(", ")}")
   }
 
   test("ST5: bounded streaming attribution equals the batch as-of; state rows fall") {
