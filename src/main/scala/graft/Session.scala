@@ -12,9 +12,39 @@ import org.apache.spark.sql.SparkSession
   * parity; `file:` on [[ForklessLocalFileSystem]] / [[ForklessLocalFs]]
   * (no `chmod`/`readlink` process per create or rename). Hadoop caches
   * a JVM's first `file:` FileSystem: one made before this keeps Hadoop's.
+  *
+  * Generated code is compiled once per session, not once per run:
+  *  - `spark.sql.codegen.cache.maxEntries` [[CodegenCacheEntries]]. Spark
+  *    keys its cache of compiled classes by (class loader, source) and
+  *    holds 100, which Guava enforces as 4 LRU segments of 25. One
+  *    iteration of the benchmark's corpus build and admission generates
+  *    about 125 classes, so at 100 every warm iteration compiled 91 of
+  *    them again. The cache is a static conf, sized once per JVM when
+  *    the first class is compiled: a JVM that compiled generated code
+  *    before this session keeps Spark's 100.
+  *  - `spark.sql.artifact.isolation.enabled=false`. With isolation on,
+  *    every streaming query runs in a cloned session whose artifacts
+  *    get their own executor class loader, so each query start
+  *    recompiled its classes under a new cache key, and task threads
+  *    queued on the cache's per-key lock behind those compiles. Off, every session shares the
+  *    executor's one class loader. Session artifacts (`addArtifact`,
+  *    per-session jars) are then shared by all sessions; nothing under
+  *    `src/` adds any.
+  *  - `spark.buffer.pageSize=2m`. Spark sizes execution pages from
+  *    the heap and core count (16 MB for a 2 GB heap on 4 cores), and
+  *    G1 allocates each page outside the young generation, so faster
+  *    tasks that leave more pages alive between young collections raise
+  *    peak RSS. With 2 MB pages and the two settings above, peak RSS
+  *    stayed at or below its earlier level on every benchmark workload.
   */
 object Session {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Compiled classes the codegen cache holds: several times the
+    * largest working set measured (about 125 classes, one corpus build
+    * plus admission), so a long-lived session that runs several
+    * workloads still compiles each class once. */
+  val CodegenCacheEntries = 1000
 
   def local(appName: String = "graft", cores: Int = cpus,
             warehouseDir: Option[String] = None): SparkSession = {
@@ -39,6 +69,9 @@ object Session {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.buffer.pageSize", "2m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerLateRules(spark)

@@ -135,13 +135,29 @@ object EventStreams extends Serializable {
       }
   }
 
-  case class FunnelBuf(evs: Seq[(Long, Int)])
+  /** Unbounded-mode state: the user's step events so far, sorted,
+    * packed by [[packEvents]].
+    *
+    * Funnel state rows hold binary columns, not collections. Spark 4.1
+    * deserializes every array or `Seq` field (primitive `Array[Long]`
+    * too) through `MapObjects`, whose lambda variables get fresh ids
+    * each time the state encoder is resolved, which is once per
+    * micro-batch, so the state deserializer compiled again on every
+    * batch (measured with `Array[Long]` fields: one class per batch). A
+    * binary column reads with no lambda, and the class compiles once
+    * per session. A checkpoint written with the earlier `Seq`
+    * layout (`evs` here; `acc: Seq[Long]`, `tail: Seq[(Long, Int)]` in
+    * [[FunnelChain]]) does not restart silently: Spark's state-schema
+    * check rejects the new value schema when the restarted query plans
+    * its first batch (pinned in `StreamingSpec`). */
+  case class FunnelBuf(events: Array[Byte])
   case class FunnelSnapshot(user_id: Long, n_seen: Long, level: Int)
   /** Bounded-mode state: the greedy chain's slot timestamps for the
-    * watermark-FROZEN prefix (`acc`, -1 = unfilled), how many events
-    * that prefix folded (`nPref`), and only the not-yet-frozen tail
-    * of raw events. */
-  case class FunnelChain(acc: Seq[Long], nPref: Long, tail: Seq[(Long, Int)])
+    * watermark-FROZEN prefix (`acc`, -1 = unfilled, packed by
+    * [[packSlots]]), how many events that prefix folded (`nPref`), and
+    * only the not-yet-frozen tail of raw events (`tail`, packed by
+    * [[packEvents]]). Binary for the reason given at [[FunnelBuf]]. */
+  case class FunnelChain(acc: Array[Byte], nPref: Long, tail: Array[Byte])
   /** Bounded-mode snapshot: adds the state-store buffer size at
     * emission time, so gates/specs can ASSERT the state stays bounded
     * instead of trusting it, and the chain's (tentative) start
@@ -187,6 +203,31 @@ object EventStreams extends Serializable {
 
   private def eventMicros(ts: Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
+
+  /** `(epoch micros, step)` events as a state column: 12 bytes each. */
+  private def packEvents(evs: Iterable[(Long, Int)]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(12 * evs.size)
+    evs.foreach { case (t, s) => b.putLong(t).putInt(s) }
+    b.array
+  }
+
+  private def unpackEvents(bytes: Array[Byte]): IndexedSeq[(Long, Int)] = {
+    val b = java.nio.ByteBuffer.wrap(bytes)
+    IndexedSeq.fill(bytes.length / 12)((b.getLong, b.getInt))
+  }
+
+  /** Chain slot timestamps as a state column: 8 bytes each. */
+  private def packSlots(acc: Array[Long]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(8 * acc.length)
+    acc.foreach(b.putLong)
+    b.array
+  }
+
+  private def unpackSlots(bytes: Array[Byte]): Array[Long] = {
+    val acc = new Array[Long](bytes.length / 8)
+    java.nio.ByteBuffer.wrap(bytes).asLongBuffer.get(acc)
+    acc
+  }
 
   private def mergeSorted(a: Seq[(Long, Int)],
                           b: Array[(Long, Int)]): Seq[(Long, Int)] = {
@@ -264,14 +305,14 @@ object EventStreams extends Serializable {
       .flatMapGroupsWithState[FunnelBuf, FunnelSnapshot](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, batch: Iterator[Event], state: GroupState[FunnelBuf]) =>
-          val prev = state.getOption.getOrElse(FunnelBuf(Vector.empty))
+          val prev = state.getOption.fold(Seq.empty[(Long, Int)])(b => unpackEvents(b.events))
           // prev is sorted: sort only the new batch and MERGE — the
           // per-batch cost is O(buffer + batch log batch), not a full
           // re-sort of the history
           val add = batch.map(e =>
             (eventMicros(e.ts), stepIdx(e.event_type))).toArray.sorted
-          val all = mergeSorted(prev.evs, add)
-          state.update(FunnelBuf(all))
+          val all = mergeSorted(prev, add)
+          state.update(FunnelBuf(packEvents(all)))
           Iterator(FunnelSnapshot(uid, all.size.toLong, greedy(all)))
       }
   }
@@ -371,14 +412,15 @@ object EventStreams extends Serializable {
             // unchanged since the last data-driven snapshot, whose
             // emitAcc already folded the buffer).
             val st = state.get
-            val acc = st.acc.toArray
-            greedyInto(acc, winUs, st.tail)
+            val acc = unpackSlots(st.acc)
+            val tail = unpackEvents(st.tail)
+            greedyInto(acc, winUs, tail)
             val wmMs = state.getCurrentWatermarkMs()
             if (removable(acc, wmMs)) {
               state.remove()
             } else {
               state.update(
-                FunnelChain(acc.toSeq, st.nPref + st.tail.size, Vector.empty))
+                FunnelChain(packSlots(acc), st.nPref + tail.size, Array.emptyByteArray))
               // chain started but window still open: re-arm at the
               // window end so the row self-removes when it closes
               // (timeout > watermark holds: not-removable ⇒ wm ≤ t0+w)
@@ -389,17 +431,17 @@ object EventStreams extends Serializable {
             Iterator.empty
           } else {
             val st = state.getOption.getOrElse(
-              FunnelChain(Seq.fill(k)(-1L), 0L, Vector.empty))
+              FunnelChain(packSlots(Array.fill(k)(-1L)), 0L, Array.emptyByteArray))
             val add = batch.map(e =>
               (eventMicros(e.ts), stepIdx(e.event_type))).toArray.sorted
-            val all = mergeSorted(st.tail, add)
+            val all = mergeSorted(unpackEvents(st.tail), add)
             // events older than the watermark are final (no future
             // input can precede them) — fold them into the frozen
             // slots now; watermark 0 means "none yet", evict nothing
             val wmMs = state.getCurrentWatermarkMs()
             val cutoff = if (wmMs > 0L) wmMs * 1000L else Long.MinValue
             val (evict, keep) = all.span(_._1 < cutoff)
-            val acc = st.acc.toArray
+            val acc = unpackSlots(st.acc)
             greedyInto(acc, winUs, evict)
             val emitAcc = acc.clone()
             greedyInto(emitAcc, winUs, keep)
@@ -408,7 +450,7 @@ object EventStreams extends Serializable {
               // change: final snapshot below, no row left behind
               state.remove()
             } else {
-              state.update(FunnelChain(acc.toSeq, st.nPref + evict.size, keep))
+              state.update(FunnelChain(packSlots(acc), st.nPref + evict.size, packEvents(keep)))
               if (keep.nonEmpty)
                 // when the watermark passes the buffer's newest event
                 // and no new data arrives, finish the fold via timeout

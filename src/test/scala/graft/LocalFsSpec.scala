@@ -68,6 +68,13 @@ class LocalFsSpec extends AnyFunSuite {
     val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
     assert(parts.nonEmpty, names.toString)
     assert(parts.forall(p => names.contains(s".$p.crc")), names.toString)
+    // the rest of Session.local's constant wiring: a codegen cache that
+    // holds the workload, one executor class loader for every stream,
+    // and 2 MB execution pages
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Session.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(spark.sparkContext.getConf.get("spark.buffer.pageSize") == "2m")
   }
 
   test("created files and dirs get the stock modes through FileSystem and FileContext") {

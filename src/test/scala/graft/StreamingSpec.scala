@@ -685,6 +685,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"missing checksums: ${missing.sorted.mkString(", ")}")
   }
 
+  test("ST5: a bounded funnel checkpoint in the Seq state layout fails loudly on restart") {
+    // the funnel's state rows moved from Seqs to binary columns; a
+    // checkpoint whose state rows hold the earlier layout must stop the
+    // restarted query at Spark's state-schema check, not misread rows
+    import EventStreams._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val dir = SparkTestSession.tempDir("events_funnel_layout").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00").getTime
+    def stage(id: Long, d: Int): Unit = {
+      val before = graft.gates.GateSupport.listParquet(dir)
+      Seq((id, new java.sql.Timestamp(t0 + d * 86400000L), 1L, "view"))
+        .toDF("event_id", "ts", "user_id", "event_type")
+        .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
+        .coalesce(1).write.mode("append").parquet(dir)
+      graft.gates.GateSupport.bumpMtime(dir, before)
+    }
+    def stream = spark.readStream.schema(EventStreams.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir).as[Event]
+    val ckpt = SparkTestSession.tempDir("funnel_layout_ckpt").toString
+    def run(out: org.apache.spark.sql.Dataset[FunnelSnapshotB]) = {
+      val q = out.toDF().writeStream.outputMode("update").format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try scala.util.Try(q.awaitTermination(120000)).failed.toOption.orElse(q.exception)
+      finally q.stop()
+    }
+    stage(1L, 0)
+    val seqLayout = stream.withWatermark("ts", "30 minutes").groupByKey(_.user_id)
+      .flatMapGroupsWithState[StreamingSpec.SeqFunnelChain, FunnelSnapshotB](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (uid: Long, batch: Iterator[Event], state: GroupState[StreamingSpec.SeqFunnelChain]) =>
+          val n = batch.size
+          state.update(StreamingSpec.SeqFunnelChain(Seq(-1L, -1L, -1L), n, Vector.empty))
+          Iterator(FunnelSnapshotB(uid, n, 0, 0, -1L))
+      }
+    assert(run(seqLayout).isEmpty)
+    stage(2L, 1)
+    val err = run(funnelLevelsBounded(stream, Seq("view", "click", "purchase"),
+      windowSeconds = Some(7L * 86400), lateness = "30 minutes"))
+    assert(err.exists(_.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")),
+      err.toString)
+  }
+
   test("ST5: bounded streaming attribution equals the batch as-of; state rows fall") {
     import EventStreams._
     import org.apache.spark.sql.functions._
@@ -936,4 +979,9 @@ class StreamingSpec extends AnyFunSuite {
       s"onlyStream=${got -- want}\nonlyBatch=${want -- got}")
     assert(got.nonEmpty, "fixture must contain cross near-dups")
   }
+}
+
+object StreamingSpec {
+  /** The bounded funnel's state row before it moved to binary columns. */
+  case class SeqFunnelChain(acc: Seq[Long], nPref: Long, tail: Seq[(Long, Int)])
 }
