@@ -1,6 +1,6 @@
 package graft.gates
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -75,6 +75,17 @@ private[graft] object GateSupport {
       }
       p
     })
+
+  /** The staged events as a typed stream; `oneFilePerTrigger` replays
+    * one file per micro-batch, so the watermark advances between
+    * batches (the time-ordered staging's cadence). */
+  def eventStream(s: SparkSession, staged: String, oneFilePerTrigger: Boolean = false)
+      : Dataset[graft.streaming.EventStreams.Event] = {
+    import s.implicits._
+    val reader = s.readStream.schema(graft.streaming.EventStreams.schema)
+    (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", "1") else reader)
+      .parquet(staged).as[graft.streaming.EventStreams.Event]
+  }
 
   /** Events staged for OUTER stream-stream joins: the real events as
     * one file, then a far-future sentinel pair (user −1 view / user

@@ -195,12 +195,9 @@ private[graft] object StreamingGates {
     // emit intermediate snapshots — the batch GROUP BY oracle applies
     // regardless of batch boundaries.
     "x42_stream_totals" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEvents(s, d)
       replayToMemory(s, staged, "x42_out", "update") {
-        graft.streaming.EventStreams.runningTotals(s.readStream
-          .schema(graft.streaming.EventStreams.schema).parquet(staged)
-          .as[graft.streaming.EventStreams.Event]).toDF()
+        graft.streaming.EventStreams.runningTotals(eventStream(s, staged)).toDF()
       }.groupBy(col("user_id"))
         .agg(max(struct(col("n"), col("total"))).as("last"))
         .select(col("user_id"), col("last.n").as("n"),
@@ -216,13 +213,9 @@ private[graft] object StreamingGates {
     // then equal the BATCH funnel oracle exactly, independent of
     // micro-batch boundaries.
     "x96_stream_funnel" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEvents(s, d)
       val levels = replayToMemory(s, staged, "x96_out", "update") {
-        val events = s.readStream
-          .schema(graft.streaming.EventStreams.schema).parquet(staged)
-          .as[graft.streaming.EventStreams.Event]
-        graft.streaming.EventStreams.funnelLevels(events,
+        graft.streaming.EventStreams.funnelLevels(eventStream(s, staged),
             Seq("view", "click", "purchase"),
             windowSeconds = Some(7L * 86400))
           .toDF()
@@ -247,14 +240,10 @@ private[graft] object StreamingGates {
     // 30-minute window over a month of data, buffers must stay far
     // below the per-user event count.
     "x96b_stream_funnel_bounded" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
       val sink = replayToMemory(s, staged, "x96b_out", "update") {
-        val events = s.readStream
-          .schema(graft.streaming.EventStreams.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-          .as[graft.streaming.EventStreams.Event]
-        graft.streaming.EventStreams.funnelLevelsBounded(events,
+        graft.streaming.EventStreams.funnelLevelsBounded(
+            eventStream(s, staged, oneFilePerTrigger = true),
             Seq("view", "click", "purchase"),
             windowSeconds = Some(7L * 86400), lateness = "30 minutes")
           .toDF()
@@ -284,14 +273,10 @@ private[graft] object StreamingGates {
     // (channel, n, revenue) table the batch operator produces; the
     // oracle replays the identical as-of in SQL.
     "x119_stream_attribution" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
       val sink = replayToMemory(s, staged, "x119_out", "update") {
-        val events = s.readStream
-          .schema(graft.streaming.EventStreams.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-          .as[graft.streaming.EventStreams.Event]
-        graft.streaming.EventStreams.lastTouchBounded(events,
+        graft.streaming.EventStreams.lastTouchBounded(
+            eventStream(s, staged, oneFilePerTrigger = true),
             Seq("click", "view"), "purchase",
             lookbackSeconds = 7L * 86400, lateness = "30 minutes")
           .toDF()
@@ -317,14 +302,10 @@ private[graft] object StreamingGates {
     // curve the batch operator produces; the oracle replays x86's SQL
     // (the fixture spans ~5 weeks, far inside the 52-week horizon).
     "x120_stream_retention" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
       val sink = replayToMemory(s, staged, "x120_out", "update") {
-        val events = s.readStream
-          .schema(graft.streaming.EventStreams.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-          .as[graft.streaming.EventStreams.Event]
-        graft.streaming.EventStreams.retentionBounded(events,
+        graft.streaming.EventStreams.retentionBounded(
+            eventStream(s, staged, oneFilePerTrigger = true),
             horizonWeeks = 52, lateness = "30 minutes")
           .toDF()
       }
@@ -347,14 +328,10 @@ private[graft] object StreamingGates {
     // p50/p90 table the batch gate ships. The oracle replays x91's
     // SQL verbatim — batch equality across micro-batch boundaries.
     "x121_stream_conversion_lag" -> ((s, d) => {
-      import s.implicits._
       val staged = stageEventsTimeOrdered(s, d)
       val sink = replayToMemory(s, staged, "x121_out", "update") {
-        val events = s.readStream
-          .schema(graft.streaming.EventStreams.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-          .as[graft.streaming.EventStreams.Event]
-        graft.streaming.EventStreams.stepTimesBounded(events,
+        graft.streaming.EventStreams.stepTimesBounded(
+            eventStream(s, staged, oneFilePerTrigger = true),
             Seq("view", "click", "purchase"),
             windowSeconds = Some(7L * 86400), lateness = "30 minutes")
           .toDF()

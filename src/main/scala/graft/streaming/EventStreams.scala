@@ -1,7 +1,8 @@
 package graft.streaming
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -138,25 +139,26 @@ object EventStreams extends Serializable {
   /** Unbounded-mode state: the user's step events so far, sorted,
     * packed by [[packEvents]].
     *
-    * Funnel state rows hold binary columns, not collections. Spark 4.1
-    * deserializes every array or `Seq` field (primitive `Array[Long]`
-    * too) through `MapObjects`, whose lambda variables get fresh ids
-    * each time the state encoder is resolved, which is once per
-    * micro-batch, so the state deserializer compiled again on every
-    * batch (measured with `Array[Long]` fields: one class per batch). A
-    * binary column reads with no lambda, and the class compiles once
-    * per session. A checkpoint written with the earlier `Seq`
-    * layout (`evs` here; `acc: Seq[Long]`, `tail: Seq[(Long, Int)]` in
-    * [[FunnelChain]]) does not restart silently: Spark's state-schema
-    * check rejects the new value schema when the restarted query plans
-    * its first batch (pinned in `StreamingSpec`). */
+    * Every keyed state row in this object holds binary columns, not
+    * collections. Spark 4.1 deserializes every array or `Seq` field
+    * (primitive `Array[Long]` too) through `MapObjects`, whose lambda
+    * variables get fresh ids each time the state encoder is resolved,
+    * which is once per micro-batch, so the state deserializer compiled
+    * again on every batch (measured with `Array[Long]` fields: one
+    * class per batch). A binary column reads with no lambda, and the
+    * class compiles once per session. A checkpoint written with an
+    * earlier `Seq` layout (`evs` here; `acc`/`tail` in [[FunnelChain]],
+    * `tail` in [[AttribState]], `pendingWeeks` in [[RetentionState]])
+    * does not restart silently: Spark's state-schema check rejects the
+    * new value schema when the restarted query plans its first batch
+    * (pinned in `StreamingSpec`). */
   case class FunnelBuf(events: Array[Byte])
   case class FunnelSnapshot(user_id: Long, n_seen: Long, level: Int)
   /** Bounded-mode state: the greedy chain's slot timestamps for the
     * watermark-FROZEN prefix (`acc`, -1 = unfilled, packed by
     * [[packSlots]]), how many events that prefix folded (`nPref`), and
     * only the not-yet-frozen tail of raw events (`tail`, packed by
-    * [[packEvents]]). Binary for the reason given at [[FunnelBuf]]. */
+    * [[packEvents]]). */
   case class FunnelChain(acc: Array[Byte], nPref: Long, tail: Array[Byte])
   /** Bounded-mode snapshot: adds the state-store buffer size at
     * emission time, so gates/specs can ASSERT the state stays bounded
@@ -204,36 +206,41 @@ object EventStreams extends Serializable {
   private def eventMicros(ts: Timestamp): Long =
     Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
-  /** `(epoch micros, step)` events as a state column: 12 bytes each. */
-  private def packEvents(evs: Iterable[(Long, Int)]): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(12 * evs.size)
-    evs.foreach { case (t, s) => b.putLong(t).putInt(s) }
-    b.array
+  /** A state column: `xs` written one after another, big-endian. */
+  private def pack[A](xs: Iterable[A])(put: (DataOutputStream, A) => Unit): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    xs.foreach(put(out, _))
+    out.flush()
+    bytes.toByteArray
   }
 
-  private def unpackEvents(bytes: Array[Byte]): IndexedSeq[(Long, Int)] = {
-    val b = java.nio.ByteBuffer.wrap(bytes)
-    IndexedSeq.fill(bytes.length / 12)((b.getLong, b.getInt))
+  private def unpack[A](bytes: Array[Byte])(get: DataInputStream => A): IndexedSeq[A] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val out = Vector.newBuilder[A]
+    while (in.available() > 0) out += get(in)
+    out.result()
   }
+
+  /** `(epoch micros, step)` events as a state column: 12 bytes each. */
+  private def packEvents(evs: Iterable[(Long, Int)]): Array[Byte] =
+    pack(evs) { (o, e) => o.writeLong(e._1); o.writeInt(e._2) }
+
+  private def unpackEvents(bytes: Array[Byte]): IndexedSeq[(Long, Int)] =
+    unpack(bytes)(in => (in.readLong(), in.readInt()))
 
   /** Chain slot timestamps as a state column: 8 bytes each. */
-  private def packSlots(acc: Array[Long]): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(8 * acc.length)
-    acc.foreach(b.putLong)
-    b.array
-  }
+  private def packSlots(acc: Array[Long]): Array[Byte] = pack(acc)(_.writeLong(_))
 
-  private def unpackSlots(bytes: Array[Byte]): Array[Long] = {
-    val acc = new Array[Long](bytes.length / 8)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer.get(acc)
-    acc
-  }
+  private def unpackSlots(bytes: Array[Byte]): Array[Long] =
+    unpack(bytes)(_.readLong()).toArray
 
-  private def mergeSorted(a: Seq[(Long, Int)],
-                          b: Array[(Long, Int)]): Seq[(Long, Int)] = {
+  /** Merges sorted `b` into sorted `a`; on ties `a`'s events come first,
+    * as in a stable sort of `a ++ b`. */
+  private def mergeSorted[E](a: IndexedSeq[E], b: IndexedSeq[E])(
+      ord: Ordering[E]): IndexedSeq[E] = {
     if (b.isEmpty) return a
-    val out = Vector.newBuilder[(Long, Int)]
-    val ord = implicitly[Ordering[(Long, Int)]]
+    val out = Vector.newBuilder[E]
     var i = 0
     var j = 0
     while (i < a.length && j < b.length) {
@@ -305,34 +312,113 @@ object EventStreams extends Serializable {
       .flatMapGroupsWithState[FunnelBuf, FunnelSnapshot](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (uid: Long, batch: Iterator[Event], state: GroupState[FunnelBuf]) =>
-          val prev = state.getOption.fold(Seq.empty[(Long, Int)])(b => unpackEvents(b.events))
+          val prev = state.getOption.fold(IndexedSeq.empty[(Long, Int)])(b => unpackEvents(b.events))
           // prev is sorted: sort only the new batch and MERGE — the
           // per-batch cost is O(buffer + batch log batch), not a full
           // re-sort of the history
           val add = batch.map(e =>
-            (eventMicros(e.ts), stepIdx(e.event_type))).toArray.sorted
-          val all = mergeSorted(prev, add)
+            (eventMicros(e.ts), stepIdx(e.event_type))).toVector.sorted
+          val all = mergeSorted(prev, add)(Ordering[(Long, Int)])
           state.update(FunnelBuf(packEvents(all)))
           Iterator(FunnelSnapshot(uid, all.size.toLong, greedy(all)))
       }
   }
 
+  /** What differs between the bounded keyed state machines;
+    * [[boundedFold]] runs the watermark protocol around it. `E` is a
+    * buffered event, `R` the residue its committed events fold into,
+    * `S` the binary state row. */
+  private abstract class BoundedMachine[E, R, S, Out] extends Serializable {
+    def accepts(eventType: String): Boolean
+    def encode(e: Event): E
+    def micros(e: E): Long
+    val order: Ordering[E]
+    def empty: R
+    def load(s: S): (R, IndexedSeq[E])
+    def store(r: R, tail: Seq[E]): S
+    /** `r` with the sorted `evs` folded in (they sort after every event
+      * `r` holds), and the rows the fold emits. The `provisional` pass
+      * runs over the events still buffered and its residue is
+      * discarded; `nBuffered` is how many events the invocation leaves
+      * in the buffer. */
+    def fold(uid: Long, r: R, evs: Seq[E], nBuffered: Int,
+             provisional: Boolean): (R, Seq[Out])
+    /** True when, with an empty buffer, no event the watermark still
+      * admits can change what `r` emits: the row can leave the store. */
+    def removable(r: R, wmMs: Long): Boolean
+    /** Epoch micros after which a kept, not removable `r` with an
+      * empty buffer should be looked at again, if ever. */
+    def expiryUs(r: R): Option[Long]
+  }
+
+  /** The watermark protocol of the bounded machines. A watermark
+    * (`lateness`) bounds how far behind the running max event time
+    * input may arrive; anything older is dropped by the engine. Each
+    * invocation merges the user's new events into the sorted buffer and
+    * splits it at the watermark: no future input can sort before an
+    * event the watermark passed, so those are FINAL and fold into the
+    * committed residue, and a provisional pass over the kept events
+    * gives the rows that can still change. A row whose buffer is empty
+    * and whose residue is removable leaves the state store; otherwise
+    * the `EventTimeTimeout` is armed at the newest buffered event, or
+    * else at the residue's expiry, so users who go quiet still fold and
+    * get reaped. On timeout the whole buffer is final: it folds, and
+    * the row is removed or stored with an empty buffer and its expiry
+    * armed. */
+  private def boundedFold[E, R, S: Encoder, Out: Encoder](events: Dataset[Event],
+      lateness: String, m: BoundedMachine[E, R, S, Out]): Dataset[Out] = {
+    import events.sparkSession.implicits._
+    events
+      .filter(e => e.ts != null && e.event_type != null && m.accepts(e.event_type))
+      .withWatermark("ts", lateness)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[S, Out](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (uid: Long, batch: Iterator[Event], state: GroupState[S]) =>
+          val (r0, tail) = state.getOption.fold((m.empty, IndexedSeq.empty[E]))(m.load)
+          val wmMs = state.getCurrentWatermarkMs()
+          val (evict, keep) =
+            if (state.hasTimedOut) (tail, IndexedSeq.empty[E])
+            else {
+              // the buffer is sorted: sort only the batch and merge
+              val add = batch.map(m.encode).toVector.sorted(m.order)
+              // watermark 0 means "none yet": evict nothing
+              val cutoff = if (wmMs > 0L) wmMs * 1000L else Long.MinValue
+              mergeSorted(tail, add)(m.order).span(m.micros(_) < cutoff)
+            }
+          val (r, finals) = m.fold(uid, r0, evict, keep.size, provisional = false)
+          val provisionals =
+            if (state.hasTimedOut) Nil
+            else m.fold(uid, r, keep, keep.size, provisional = true)._2
+          if (keep.isEmpty && m.removable(r, wmMs)) state.remove()
+          else {
+            state.update(m.store(r, keep))
+            // both lie past the watermark: kept events are at or after
+            // the cutoff, and a residue that is not removable expires
+            // after it
+            keep.lastOption.map(m.micros).orElse(m.expiryUs(r))
+              .foreach(armTimeout(state, _))
+          }
+          (finals ++ provisionals).iterator
+      }
+  }
+
+  /** Arms the row's `EventTimeTimeout` to fire once the watermark
+    * passes epoch micros `us`. */
+  private def armTimeout(state: GroupState[_], us: Long): Unit =
+    state.setTimeoutTimestamp(Math.floorDiv(us, 1000L) + 1L)
+
   /** [[funnelLevels]] with BOUNDED state — the production mode for
-    * unbounded streams. A watermark (`lateness`) bounds how far behind
-    * the running max event time input may arrive; anything older is
-    * dropped by the engine (the standard watermark contract). That
-    * bound is what makes eviction sound: once the watermark passes a
-    * buffered event, no future input can sort before it, so its
-    * greedy outcome is FINAL — the event folds into the frozen chain
-    * slots (`FunnelChain.acc`: k timestamps) and leaves the buffer.
+    * unbounded streams, on the watermark protocol of [[boundedFold]]:
+    * an event the watermark passed has a FINAL greedy outcome and folds
+    * into the frozen chain slots (`FunnelChain.acc`: k timestamps).
     * Per-user state is therefore k+1 longs plus only the events
     * inside the current lateness window, instead of the full per-user
-    * history; `GroupStateTimeout.EventTimeTimeout` collapses the
-    * buffer of users who go QUIET (no further events would otherwise
-    * mean no further eviction), so idle users converge to the k+1-long
-    * residue too. Results equal [[funnelLevels]] — and the batch
-    * operator — exactly, whenever every event arrives within
-    * `lateness` of the running max event time.
+    * history, and the timeout collapses the buffer of users who go
+    * quiet, so idle users converge to the k+1-long residue too.
+    * Results equal [[funnelLevels]] — and the batch operator —
+    * exactly, whenever every event arrives within `lateness` of the
+    * running max event time.
     *
     * State ROWS are bounded too, not just per-row size: with
     * `windowSeconds` set, once the watermark passes a started chain's
@@ -361,112 +447,62 @@ object EventStreams extends Serializable {
         emitAcc.count(_ != -1L), nBuf, emitAcc(0)))(
       org.apache.spark.sql.Encoders.product[FunnelSnapshotB])
 
-  /** The shared bounded greedy-chain state machine behind
-    * [[funnelLevelsBounded]] and [[stepTimesBounded]]: identical
-    * state/eviction/reap semantics, parameterized only by what each
-    * data-driven snapshot projects out of the greedy slot array. */
+  /** A greedy chain's frozen slots and how many events they folded. */
+  private case class Chain(acc: Array[Long], nPref: Long)
+
+  /** The greedy-chain machine behind [[funnelLevelsBounded]] and
+    * [[stepTimesBounded]]: identical state/eviction/reap semantics,
+    * parameterized only by what each data-driven snapshot projects out
+    * of the greedy slot array. A timeout emits nothing (n_seen and the
+    * slots are unchanged since the last data-driven snapshot, whose
+    * provisional pass already folded the buffer). */
   private def chainCoreBounded[Out](events: Dataset[Event],
       steps: Seq[String], windowSeconds: Option[Long], lateness: String)(
       emit: (Long, Long, Array[Long], Int) => Out)(
-      implicit outEnc: org.apache.spark.sql.Encoder[Out]): Dataset[Out] = {
+      implicit outEnc: Encoder[Out]): Dataset[Out] = {
     import events.sparkSession.implicits._
     require(steps.nonEmpty && steps.distinct.size == steps.size,
       "funnel steps must be non-empty and distinct")
     val stepIdx = steps.zipWithIndex.toMap
     val k = steps.size
     val winUs = windowSeconds.map(_ * 1000000L)
-    events
-      .filter(e => e.ts != null && e.event_type != null &&
-        stepIdx.contains(e.event_type))
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelChain, Out](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[FunnelChain]) =>
-          // a state row with an empty buffer is REMOVABLE when no
-          // admissible future event can change its chain:
-          // (a) the chain NEVER started (acc all -1) — the residue is
-          //     only the nPref count, and dropping it is verdict-sound:
-          //     pre-step-0 events can never fill a slot (greedy needs
-          //     t > acc(0)), and boundedVerdicts tolerates the n_seen
-          //     restart (never-started snapshots carry chain_start =
-          //     -1, level 0, and lose to any started chain) — without
-          //     this, users who emit step events but never step 0
-          //     would each leak a permanent row;
-          // (b) the chain is COMPLETE (no -1 slot) — nothing left to
-          //     fill, and any restart chain starts at ts ≥ watermark >
-          //     every frozen slot time, so it loses the min-chain_start
-          //     selection;
-          // (c) the chain started and the watermark passed its window
-          //     end — FINAL: anything the watermark still admits is
-          //     out-of-window for every unfilled slot.
-          // State rows therefore track OPEN chains, not the all-time
-          // user population.
-          def removable(acc: Array[Long], wmMs: Long): Boolean =
-            acc(0) == -1L || !acc.contains(-1L) ||
-              winUs.exists(w => wmMs > 0L && wmMs * 1000L > acc(0) + w)
-          if (state.hasTimedOut) {
-            // the watermark passed the timeout with no new data for
-            // this user: every buffered event is final — fold the
-            // whole tail. Nothing is emitted (n_seen/level are
-            // unchanged since the last data-driven snapshot, whose
-            // emitAcc already folded the buffer).
-            val st = state.get
-            val acc = unpackSlots(st.acc)
-            val tail = unpackEvents(st.tail)
-            greedyInto(acc, winUs, tail)
-            val wmMs = state.getCurrentWatermarkMs()
-            if (removable(acc, wmMs)) {
-              state.remove()
-            } else {
-              state.update(
-                FunnelChain(packSlots(acc), st.nPref + tail.size, Array.emptyByteArray))
-              // chain started but window still open: re-arm at the
-              // window end so the row self-removes when it closes
-              // (timeout > watermark holds: not-removable ⇒ wm ≤ t0+w)
-              if (winUs.isDefined)
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(acc(0) + winUs.get, 1000L) + 1L)
-            }
-            Iterator.empty
-          } else {
-            val st = state.getOption.getOrElse(
-              FunnelChain(packSlots(Array.fill(k)(-1L)), 0L, Array.emptyByteArray))
-            val add = batch.map(e =>
-              (eventMicros(e.ts), stepIdx(e.event_type))).toArray.sorted
-            val all = mergeSorted(unpackEvents(st.tail), add)
-            // events older than the watermark are final (no future
-            // input can precede them) — fold them into the frozen
-            // slots now; watermark 0 means "none yet", evict nothing
-            val wmMs = state.getCurrentWatermarkMs()
-            val cutoff = if (wmMs > 0L) wmMs * 1000L else Long.MinValue
-            val (evict, keep) = all.span(_._1 < cutoff)
-            val acc = unpackSlots(st.acc)
-            greedyInto(acc, winUs, evict)
-            val emitAcc = acc.clone()
-            greedyInto(emitAcc, winUs, keep)
-            if (keep.isEmpty && removable(acc, wmMs)) {
-              // nothing buffered and nothing a future event could
-              // change: final snapshot below, no row left behind
-              state.remove()
-            } else {
-              state.update(FunnelChain(packSlots(acc), st.nPref + evict.size, packEvents(keep)))
-              if (keep.nonEmpty)
-                // when the watermark passes the buffer's newest event
-                // and no new data arrives, finish the fold via timeout
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(keep.last._1, 1000L) + 1L)
-              else if (winUs.isDefined)
-                // empty buffer, started chain, open window: arm the
-                // window end so the row is reaped even if the user
-                // never returns (keep.isEmpty && !removable ⇒ chain
-                // started, wm ≤ t0+w, so the timestamp is legal)
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(acc(0) + winUs.get, 1000L) + 1L)
-            }
-            Iterator(emit(uid, st.nPref + all.size, emitAcc, keep.size))
-          }
+    boundedFold(events, lateness, new BoundedMachine[(Long, Int), Chain, FunnelChain, Out] {
+      def accepts(eventType: String) = stepIdx.contains(eventType)
+      def encode(e: Event) = (eventMicros(e.ts), stepIdx(e.event_type))
+      def micros(e: (Long, Int)) = e._1
+      val order = Ordering[(Long, Int)]
+      def empty = Chain(Array.fill(k)(-1L), 0L)
+      def load(s: FunnelChain) = (Chain(unpackSlots(s.acc), s.nPref), unpackEvents(s.tail))
+      def store(r: Chain, tail: Seq[(Long, Int)]) =
+        FunnelChain(packSlots(r.acc), r.nPref, packEvents(tail))
+      def fold(uid: Long, r: Chain, evs: Seq[(Long, Int)], nBuffered: Int,
+               provisional: Boolean) = {
+        val acc = r.acc.clone()
+        greedyInto(acc, winUs, evs)
+        val next = Chain(acc, r.nPref + evs.size)
+        (next, if (provisional) Seq(emit(uid, next.nPref, acc, nBuffered)) else Nil)
       }
+      // an empty-buffered residue is REMOVABLE when no admissible future
+      // event can change its chain, so state rows track OPEN chains,
+      // not the all-time user population:
+      // (a) the chain NEVER started (acc all -1): pre-step-0 events can
+      //     never fill a slot (greedy needs t > acc(0)), and
+      //     boundedVerdicts tolerates the n_seen restart (never-started
+      //     snapshots carry chain_start = -1, level 0, and lose to any
+      //     started chain); without this, users who never emit step 0
+      //     would each leak a permanent row;
+      // (b) the chain is COMPLETE: nothing left to fill, and a restart
+      //     chain starts at ts ≥ watermark > every frozen slot time, so
+      //     it loses the min-chain_start selection;
+      // (c) the watermark passed a started chain's window end: anything
+      //     it still admits is out-of-window for every unfilled slot.
+      def removable(r: Chain, wmMs: Long) =
+        r.acc(0) == -1L || !r.acc.contains(-1L) ||
+          winUs.exists(w => wmMs > 0L && wmMs * 1000L > r.acc(0) + w)
+      // a started chain with an open window: reap it when the window
+      // closes, even if the user never returns
+      def expiryUs(r: Chain) = winUs.map(r.acc(0) + _)
+    })
   }
 
   case class StepTimesSnapshot(user_id: Long, slots: Seq[Long],
@@ -501,20 +537,34 @@ object EventStreams extends Serializable {
   // (ts micros, kind 0=touch 1=conversion, channel ("" on
   // conversions — tuple sort must not see null), value, event_id)
   private type AttribEv = (Long, Int, String, Double, Long)
+  /** Attribution state: the latest finalized touch, the buffered
+    * events (packed by [[packAttrib]]) and the invocation count. */
   case class AttribState(lastTs: Long, lastCh: String,
-                         tail: Seq[AttribEv], seq: Long)
+                         tail: Array[Byte], seq: Long)
   case class AttribSnapshot(user_id: Long, event_id: Long, ts: Long,
                             value: Double, channel: String,
                             upd_seq: Long, n_buffered: Int,
                             is_final: Boolean)
+  private case class LastTouch(ts: Long, ch: String, seq: Long)
+
+  /** Attribution events as a state column; the channel is written by
+    * `writeUTF`, which throws on a name over 65 535 bytes. */
+  private def packAttrib(evs: Iterable[AttribEv]): Array[Byte] =
+    pack(evs) { case (o, (t, kind, ch, v, id)) =>
+      o.writeLong(t); o.writeInt(kind); o.writeUTF(ch); o.writeDouble(v); o.writeLong(id)
+    }
+
+  private def unpackAttrib(bytes: Array[Byte]): IndexedSeq[AttribEv] =
+    unpack(bytes)(in => (in.readLong(), in.readInt(), in.readUTF(), in.readDouble(), in.readLong()))
 
   /** ST5 bounded-state streaming LAST-TOUCH ATTRIBUTION — the x92
     * batch operator (backward as-of within a lookback) as a keyed
-    * state machine. Per-user state is ONE (ts, channel) pair — the
-    * latest finalized touch — plus only the events inside the current
-    * lateness window; once the watermark passes an event its as-of
-    * outcome is FINAL (no admissible future touch can sort before
-    * it), so it folds into the pair and leaves the buffer.
+    * state machine on the watermark protocol of [[boundedFold]].
+    * Per-user state is ONE (ts, channel) pair — the latest finalized
+    * touch — plus only the events inside the current lateness window;
+    * once the watermark passes an event its as-of outcome is FINAL (no
+    * admissible future touch can sort before it), so it folds into the
+    * pair and leaves the buffer.
     *
     * State ROWS are bounded too: a user whose buffer is empty and
     * whose last touch has aged past the lookback relative to the
@@ -540,87 +590,47 @@ object EventStreams extends Serializable {
       "touch types must be non-empty and distinct from the conversion type")
     val touchSet = touchTypes.toSet
     val lookUs = lookbackSeconds * 1000000L
-    val ord = Ordering.Tuple3[Long, Int, String]
-    events
-      .filter(e => e.ts != null && e.event_type != null &&
-        (touchSet.contains(e.event_type) || e.event_type == conversionType))
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttribState, AttribSnapshot](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[AttribState]) =>
-          // fold ONE final event into the committed last-touch pair,
-          // returning the conversion verdict for kind-1 events
-          def foldEv(lastTs: Long, lastCh: String, e: AttribEv)
-              : (Long, String, Option[AttribSnapshot]) = e match {
-            case (t, 0, ch, _, _) =>
-              if (t > lastTs || (t == lastTs && (lastCh == null || ch > lastCh)))
-                (t, ch, None)
-              else (lastTs, lastCh, None)
-            case (t, _, _, v, id) =>
-              val credited =
-                if (lastTs != Long.MinValue && lastTs >= t - lookUs) lastCh
-                else null
-              (lastTs, lastCh,
-                Some(AttribSnapshot(uid, id, t, v, credited, 0L, 0, false)))
-          }
-          def foldAll(ts0: Long, ch0: String, evs: Iterable[AttribEv])
-              : (Long, String, Seq[AttribSnapshot]) =
-            evs.foldLeft((ts0, ch0, Seq.empty[AttribSnapshot])) {
-              case ((lt, lc, acc), e) =>
-                val (nt, nc, out) = foldEv(lt, lc, e)
-                (nt, nc, acc ++ out)
-            }
-          def removable(lastTs: Long, wmMs: Long): Boolean =
-            lastTs == Long.MinValue || (wmMs > 0L && wmMs * 1000L - lastTs > lookUs)
-          val st = state.getOption.getOrElse(
-            AttribState(Long.MinValue, null, Vector.empty, 0L))
-          val seq = st.seq + 1
-          if (state.hasTimedOut) {
-            // watermark passed the timeout with no new data: the whole
-            // buffer is final
-            val (lt, lc, finals) = foldAll(st.lastTs, st.lastCh, st.tail)
-            val wmMs = state.getCurrentWatermarkMs()
-            if (removable(lt, wmMs)) state.remove()
-            else {
-              state.update(AttribState(lt, lc, Vector.empty, seq))
-              // touch residue still creditable: reap at its expiry
-              // (> watermark holds: not-removable ⇒ wm*1000 ≤ lt+look)
-              state.setTimeoutTimestamp(
-                Math.floorDiv(lt + lookUs, 1000L) + 1L)
-            }
-            finals.map(s => s.copy(upd_seq = seq, is_final = true)).iterator
-          } else {
-            val add = batch.map { e =>
-              val t = eventMicros(e.ts)
-              if (touchSet.contains(e.event_type))
-                (t, 0, e.event_type, 0.0, e.event_id)
-              else (t, 1, "", e.value, e.event_id)
-            }.toVector
-            val all = (st.tail ++ add)
-              .sortBy(e => (e._1, e._2, e._3))(ord)
-            val wmMs = state.getCurrentWatermarkMs()
-            val cutoff = if (wmMs > 0L) wmMs * 1000L else Long.MinValue
-            val (evict, keep) = all.span(_._1 < cutoff)
-            val (lt, lc, finals) = foldAll(st.lastTs, st.lastCh, evict)
-            // provisional pass over the buffer (not committed)
-            val (_, _, provisionals) = foldAll(lt, lc, keep)
-            if (keep.isEmpty && removable(lt, wmMs)) state.remove()
-            else {
-              state.update(AttribState(lt, lc, keep, seq))
-              if (keep.nonEmpty)
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(keep.last._1, 1000L) + 1L)
-              else
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(lt + lookUs, 1000L) + 1L)
-            }
-            (finals.map(s =>
-                s.copy(upd_seq = seq, n_buffered = keep.size, is_final = true)) ++
-              provisionals.map(s =>
-                s.copy(upd_seq = seq, n_buffered = keep.size))).iterator
-          }
+    boundedFold(events, lateness,
+        new BoundedMachine[AttribEv, LastTouch, AttribState, AttribSnapshot] {
+      def accepts(eventType: String) =
+        touchSet.contains(eventType) || eventType == conversionType
+      def encode(e: Event) = {
+        val t = eventMicros(e.ts)
+        if (touchSet.contains(e.event_type)) (t, 0, e.event_type, 0.0, e.event_id)
+        else (t, 1, "", e.value, e.event_id)
       }
+      def micros(e: AttribEv) = e._1
+      val order = Ordering.by[AttribEv, (Long, Int, String)](e => (e._1, e._2, e._3))
+      def empty = LastTouch(Long.MinValue, null, 0L)
+      def load(s: AttribState) = (LastTouch(s.lastTs, s.lastCh, s.seq), unpackAttrib(s.tail))
+      def store(r: LastTouch, tail: Seq[AttribEv]) =
+        AttribState(r.ts, r.ch, packAttrib(tail), r.seq)
+      // each invocation commits exactly once, so the committed fold
+      // advances upd_seq; conversions emit their verdicts in order
+      def fold(uid: Long, r: LastTouch, evs: Seq[AttribEv], nBuffered: Int,
+               provisional: Boolean) = {
+        val seq = if (provisional) r.seq else r.seq + 1
+        var lastTs = r.ts
+        var lastCh = r.ch
+        val out = Vector.newBuilder[AttribSnapshot]
+        evs.foreach {
+          case (t, 0, ch, _, _) =>
+            if (t > lastTs || (t == lastTs && (lastCh == null || ch > lastCh))) {
+              lastTs = t
+              lastCh = ch
+            }
+          case (t, _, _, v, id) =>
+            val credited =
+              if (lastTs != Long.MinValue && lastTs >= t - lookUs) lastCh else null
+            out += AttribSnapshot(uid, id, t, v, credited, seq, nBuffered, !provisional)
+        }
+        (LastTouch(lastTs, lastCh, seq), out.result())
+      }
+      def removable(r: LastTouch, wmMs: Long) =
+        r.ts == Long.MinValue || (wmMs > 0L && wmMs * 1000L - r.ts > lookUs)
+      // the touch residue stays creditable until the lookback expires
+      def expiryUs(r: LastTouch) = Some(r.ts + lookUs)
+    })
   }
 
   /** Per-conversion verdict reduction over a [[lastTouchBounded]]
@@ -635,7 +645,10 @@ object EventStreams extends Serializable {
       .select(col("last.user_id").as("user_id"), col("last.ts").as("ts"),
         col("last.value").as("value"), col("last.channel").as("channel"))
 
-  case class RetentionState(firstUs: Long, pendingWeeks: Seq[Int], seq: Long)
+  /** Retention state: first-seen time, the distinct activity weeks
+    * (epoch days, packed 4 bytes each) whose cohort is not yet final,
+    * and the invocation count. */
+  case class RetentionState(firstUs: Long, pendingWeeks: Array[Byte], seq: Long)
   case class RetentionSnapshot(user_id: Long, week_day: Int,
                                cohort_day: Int, week_no: Int,
                                upd_seq: Long, is_final: Boolean)
@@ -663,7 +676,10 @@ object EventStreams extends Serializable {
     * (pre-finality events all sit within the lateness window of the
     * first). After finality the buffer flushes once (via
     * EventTimeTimeout if no event triggers it) and stays empty — the
-    * state row is one long from then on.
+    * state row is one long from then on. The buffer holds distinct
+    * weeks and finality follows first-seen time, not each event's
+    * own, so this machine keeps its own transitions rather than
+    * [[boundedFold]]'s.
     *
     * State ROWS are bounded by `horizonWeeks`: the report covers
     * week_no 0..horizonWeeks (the standard retention-curve cutoff),
@@ -691,62 +707,35 @@ object EventStreams extends Serializable {
       .flatMapGroupsWithState[RetentionState, RetentionSnapshot](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, batch: Iterator[Event], state: GroupState[RetentionState]) =>
-          def snap(cohortDay: Int, w: Int, seq: Long, fin: Boolean) =
-            RetentionSnapshot(uid, w, cohortDay, (w - cohortDay) / 7, seq, fin)
-          def horizonEndUs(cohortDay: Int): Long =
-            (cohortDay + 7L * (horizonWeeks + 1)) * DayUs
-          def inHorizon(cohortDay: Int)(w: Int): Boolean =
-            (w - cohortDay) / 7 <= horizonWeeks
-          val st = state.getOption.getOrElse(
-            RetentionState(Long.MaxValue, Vector.empty, 0L))
-          val seq = st.seq + 1
+          val (first0, pending, seq0) = state.getOption.fold(
+            (Long.MaxValue, IndexedSeq.empty[Int], 0L))(
+            s => (s.firstUs, unpack(s.pendingWeeks)(_.readInt()), s.seq))
+          val seq = seq0 + 1
           val wmMs = state.getCurrentWatermarkMs()
           val wmUs = if (wmMs > 0L) wmMs * 1000L else Long.MinValue
-          if (state.hasTimedOut) {
-            // watermark passed first-seen (flush finals) and/or the
-            // horizon end (remove)
-            val cohortDay = weekStartDay(st.firstUs)
-            val out = st.pendingWeeks.filter(inHorizon(cohortDay))
-              .map(w => snap(cohortDay, w, seq, fin = true))
-            if (wmUs >= horizonEndUs(cohortDay)) state.remove()
-            else {
-              state.update(RetentionState(st.firstUs, Vector.empty, seq))
-              state.setTimeoutTimestamp(
-                Math.floorDiv(horizonEndUs(cohortDay), 1000L) + 1L)
-            }
-            out.iterator
-          } else {
-            val ts = batch.map(e => eventMicros(e.ts)).toVector
-            if (ts.isEmpty) Iterator.empty
-            else {
-              val newFirst = math.min(st.firstUs, ts.min)
-              val cohortDay = weekStartDay(newFirst)
-              val weeks = ts.map(weekStartDay).distinct
-              if (wmUs >= newFirst) {
-                // cohort final: everything emits final, nothing buffers
-                val out = (st.pendingWeeks ++ weeks).distinct
-                  .filter(inHorizon(cohortDay))
-                  .map(w => snap(cohortDay, w, seq, fin = true))
-                if (wmUs >= horizonEndUs(cohortDay)) state.remove()
-                else {
-                  state.update(RetentionState(newFirst, Vector.empty, seq))
-                  state.setTimeoutTimestamp(
-                    Math.floorDiv(horizonEndUs(cohortDay), 1000L) + 1L)
-                }
-                out.iterator
-              } else {
-                // provisional: buffer, re-emit under the current
-                // cohort, and arm the flush at first-seen (legal:
-                // newFirst > wmUs here)
-                val allW = (st.pendingWeeks ++ weeks).distinct
-                state.update(RetentionState(newFirst, allW, seq))
-                state.setTimeoutTimestamp(
-                  Math.floorDiv(newFirst, 1000L) + 1L)
-                allW.filter(inHorizon(cohortDay))
-                  .map(w => snap(cohortDay, w, seq, fin = false)).iterator
-              }
-            }
+          // empty on timeout
+          val ts = batch.map(e => eventMicros(e.ts)).toVector
+          val first = ts.foldLeft(first0)(math.min)
+          val cohortDay = weekStartDay(first)
+          val weeks = (pending ++ ts.map(weekStartDay)).distinct
+          val horizonEndUs = (cohortDay + 7L * (horizonWeeks + 1)) * DayUs
+          // a timeout fires at first-seen (flush the finals) or at the
+          // horizon end (remove); otherwise the cohort is final once the
+          // watermark passes first-seen
+          val cohortFinal = state.hasTimedOut || wmUs >= first
+          if (!cohortFinal) {
+            // provisional: buffer, re-emit under the current cohort, and
+            // arm the flush at first-seen (legal: first > wmUs here)
+            state.update(RetentionState(first, pack(weeks)(_.writeInt(_)), seq))
+            armTimeout(state, first)
+          } else if (wmUs >= horizonEndUs) state.remove()
+          else {
+            state.update(RetentionState(first, Array.emptyByteArray, seq))
+            armTimeout(state, horizonEndUs)
           }
+          weeks.filter(w => (w - cohortDay) / 7 <= horizonWeeks).map(w =>
+            RetentionSnapshot(uid, w, cohortDay, (w - cohortDay) / 7, seq, cohortFinal))
+            .iterator
       }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,7 +75,9 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(compiles(run(2)) == 0L, s"first run compiled $first classes")
   }
 
-  test("a second bounded funnel replay, fresh checkpoint, compiles no generated class") {
+  /** Three time-ordered files of 300 events over 40 users, written
+    * once; each replay reads them one file per micro-batch. */
+  private lazy val eventsDir = {
     val dir = SparkTestSession.tempDir("codegen_events").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00").getTime
     val types = Seq("view", "view", "click", "purchase", "other")
@@ -89,23 +92,37 @@ class CodegenCacheSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       graft.gates.GateSupport.bumpMtime(dir, before)
     }
-    def replay(i: Int): Long = {
-      val stream = spark.readStream.schema(EventStreams.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir).as[EventStreams.Event]
-      val q = EventStreams.funnelLevelsBounded(stream, Seq("view", "click", "purchase"),
-          windowSeconds = Some(86400L), lateness = "30 minutes")
-        .toDF().writeStream.outputMode("update").format("memory")
-        .queryName(s"codegen_funnel_$i")
-        .option("checkpointLocation", SparkTestSession.tempDir(s"codegen_ckpt_$i").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try assert(q.awaitTermination(120000), "stream did not finish") finally q.stop()
-      q.exception.foreach(e => throw e)
-      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
-      spark.table(s"codegen_funnel_$i").count()
-    }
-    var rows = 0L
-    val first = compiles { rows = replay(0) }
-    assert(rows > 0)
-    assert(compiles(assert(replay(1) == rows)) == 0L, s"first replay compiled $first classes")
+    dir
   }
+
+  private val steps = Seq("view", "click", "purchase")
+  private val boundedMachines: Seq[(String, Dataset[EventStreams.Event] => DataFrame)] = Seq(
+    "funnel" -> (EventStreams.funnelLevelsBounded(_, steps,
+      windowSeconds = Some(86400L), lateness = "30 minutes").toDF()),
+    "step-times" -> (EventStreams.stepTimesBounded(_, steps,
+      windowSeconds = Some(86400L), lateness = "30 minutes").toDF()),
+    "attribution" -> (EventStreams.lastTouchBounded(_, Seq("click", "view"), "purchase",
+      lookbackSeconds = 86400L, lateness = "30 minutes").toDF()),
+    "retention" -> (EventStreams.retentionBounded(_, horizonWeeks = 4,
+      lateness = "30 minutes").toDF()))
+
+  for (((name, machine), m) <- boundedMachines.zipWithIndex)
+    test(s"a second bounded $name replay, fresh checkpoint, compiles no generated class") {
+      def replay(i: Int): Long = {
+        val stream = spark.readStream.schema(EventStreams.schema)
+          .option("maxFilesPerTrigger", "1").parquet(eventsDir).as[EventStreams.Event]
+        val q = machine(stream).writeStream.outputMode("update").format("memory")
+          .queryName(s"codegen_bounded_${m}_$i")
+          .option("checkpointLocation", SparkTestSession.tempDir(s"codegen_ckpt_${m}_$i").toString)
+          .trigger(Trigger.AvailableNow()).start()
+        try assert(q.awaitTermination(120000), "stream did not finish") finally q.stop()
+        q.exception.foreach(e => throw e)
+        assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+        spark.table(s"codegen_bounded_${m}_$i").count()
+      }
+      var rows = 0L
+      val first = compiles { rows = replay(0) }
+      assert(rows > 0)
+      assert(compiles(assert(replay(1) == rows)) == 0L, s"first replay compiled $first classes")
+    }
 }

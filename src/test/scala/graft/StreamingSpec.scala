@@ -685,13 +685,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"missing checksums: ${missing.sorted.mkString(", ")}")
   }
 
-  test("ST5: a bounded funnel checkpoint in the Seq state layout fails loudly on restart") {
-    // the funnel's state rows moved from Seqs to binary columns; a
-    // checkpoint whose state rows hold the earlier layout must stop the
-    // restarted query at Spark's state-schema check, not misread rows
-    import EventStreams._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val dir = SparkTestSession.tempDir("events_funnel_layout").toString
+  /** The restart error of a checkpoint whose first batch ran `seqLayout`
+    * (a stand-in keeping the state row in its earlier `Seq` layout) and
+    * whose second batch runs `current`, the operator as it is now. */
+  private def restartError[Out](name: String)(
+      seqLayout: org.apache.spark.sql.Dataset[EventStreams.Event] => org.apache.spark.sql.Dataset[Out],
+      current: org.apache.spark.sql.Dataset[EventStreams.Event] => org.apache.spark.sql.Dataset[Out])
+      : Option[Throwable] = {
+    val dir = SparkTestSession.tempDir(s"events_${name}_layout").toString
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:00:00").getTime
     def stage(id: Long, d: Int): Unit = {
       val before = graft.gates.GateSupport.listParquet(dir)
@@ -702,9 +703,9 @@ class StreamingSpec extends AnyFunSuite {
       graft.gates.GateSupport.bumpMtime(dir, before)
     }
     def stream = spark.readStream.schema(EventStreams.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir).as[Event]
-    val ckpt = SparkTestSession.tempDir("funnel_layout_ckpt").toString
-    def run(out: org.apache.spark.sql.Dataset[FunnelSnapshotB]) = {
+      .option("maxFilesPerTrigger", "1").parquet(dir).as[EventStreams.Event]
+    val ckpt = SparkTestSession.tempDir(s"${name}_layout_ckpt").toString
+    def run(out: org.apache.spark.sql.Dataset[Out]) = {
       val q = out.toDF().writeStream.outputMode("update").format("noop")
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -712,20 +713,63 @@ class StreamingSpec extends AnyFunSuite {
       finally q.stop()
     }
     stage(1L, 0)
-    val seqLayout = stream.withWatermark("ts", "30 minutes").groupByKey(_.user_id)
-      .flatMapGroupsWithState[StreamingSpec.SeqFunnelChain, FunnelSnapshotB](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[Event], state: GroupState[StreamingSpec.SeqFunnelChain]) =>
-          val n = batch.size
-          state.update(StreamingSpec.SeqFunnelChain(Seq(-1L, -1L, -1L), n, Vector.empty))
-          Iterator(FunnelSnapshotB(uid, n, 0, 0, -1L))
-      }
-    assert(run(seqLayout).isEmpty)
+    assert(run(seqLayout(stream.withWatermark("ts", "30 minutes"))).isEmpty)
     stage(2L, 1)
-    val err = run(funnelLevelsBounded(stream, Seq("view", "click", "purchase"),
-      windowSeconds = Some(7L * 86400), lateness = "30 minutes"))
+    run(current(stream))
+  }
+
+  // the bounded machines' state rows moved from Seqs to binary columns;
+  // a checkpoint whose state rows hold the earlier layout must stop the
+  // restarted query at Spark's state-schema check, not misread rows
+  private def assertSchemaRejected(err: Option[Throwable]): Unit =
     assert(err.exists(_.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")),
       err.toString)
+
+  test("ST5: a bounded funnel checkpoint in the Seq state layout fails loudly on restart") {
+    import EventStreams._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    assertSchemaRejected(restartError[FunnelSnapshotB]("funnel")(
+      _.groupByKey(_.user_id)
+        .flatMapGroupsWithState[StreamingSpec.SeqFunnelChain, FunnelSnapshotB](
+          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+          (uid: Long, batch: Iterator[Event], state: GroupState[StreamingSpec.SeqFunnelChain]) =>
+            val n = batch.size
+            state.update(StreamingSpec.SeqFunnelChain(Seq(-1L, -1L, -1L), n, Vector.empty))
+            Iterator(FunnelSnapshotB(uid, n, 0, 0, -1L))
+        },
+      funnelLevelsBounded(_, Seq("view", "click", "purchase"),
+        windowSeconds = Some(7L * 86400), lateness = "30 minutes")))
+  }
+
+  test("ST5: a bounded attribution checkpoint in the Seq state layout fails loudly on restart") {
+    import EventStreams._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    assertSchemaRejected(restartError[AttribSnapshot]("attrib")(
+      _.groupByKey(_.user_id)
+        .flatMapGroupsWithState[StreamingSpec.SeqAttribState, AttribSnapshot](
+          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+          (_: Long, batch: Iterator[Event], state: GroupState[StreamingSpec.SeqAttribState]) =>
+            val tail = batch.map(e => (e.ts.getTime * 1000L, 0, e.event_type, 0.0, e.event_id))
+            state.update(StreamingSpec.SeqAttribState(Long.MinValue, null, tail.toVector, 1L))
+            Iterator.empty
+        },
+      lastTouchBounded(_, Seq("click", "view"), "purchase",
+        lookbackSeconds = 7L * 86400, lateness = "30 minutes")))
+  }
+
+  test("ST5: a bounded retention checkpoint in the Seq state layout fails loudly on restart") {
+    import EventStreams._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    assertSchemaRejected(restartError[RetentionSnapshot]("retention")(
+      _.groupByKey(_.user_id)
+        .flatMapGroupsWithState[StreamingSpec.SeqRetentionState, RetentionSnapshot](
+          OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+          (_: Long, batch: Iterator[Event], state: GroupState[StreamingSpec.SeqRetentionState]) =>
+            val first = batch.map(_.ts.getTime * 1000L).min
+            state.update(StreamingSpec.SeqRetentionState(first, Vector(19783), 1L))
+            Iterator.empty
+        },
+      retentionBounded(_, horizonWeeks = 52, lateness = "30 minutes")))
   }
 
   test("ST5: bounded streaming attribution equals the batch as-of; state rows fall") {
@@ -982,6 +1026,9 @@ class StreamingSpec extends AnyFunSuite {
 }
 
 object StreamingSpec {
-  /** The bounded funnel's state row before it moved to binary columns. */
+  /** The bounded machines' state rows before they moved to binary columns. */
   case class SeqFunnelChain(acc: Seq[Long], nPref: Long, tail: Seq[(Long, Int)])
+  case class SeqAttribState(lastTs: Long, lastCh: String,
+                            tail: Seq[(Long, Int, String, Double, Long)], seq: Long)
+  case class SeqRetentionState(firstUs: Long, pendingWeeks: Seq[Int], seq: Long)
 }
